@@ -229,13 +229,23 @@ def featurize(
     )
 
 
+def _gd_sums_fit_int64(n_rows: int) -> bool:
+    """The driver GD venue sums per-row quantized gradients in int64. Each
+    term is bounded by NANO (features in [0, 1], |resid| < 1), so the sums
+    stay exact while rows × NANO < 2**62, the bound kmeans_train_portable
+    checks. The caller's cell budget does not imply it: a large enough
+    ``driver_cells`` admits more rows."""
+    return n_rows * NANO < 2**62
+
+
 def _driver_gd_matrix(head, d: int):
     """Validate the probed feature frame for the driver GD venue; returns
     (X, Y) float64 arrays or ``None`` when any precondition the
     bit-parity and int64-overflow analysis rests on fails (non-finite
-    features, features outside [0, 1], labels outside {0, 1}) — the
-    distributed venue then defines the semantics, exactly like the
-    malformed-row fallback of kmeans_train_portable."""
+    features, features outside [0, 1], labels outside {0, 1}, too many
+    rows for exact int64 sums) — the distributed venue then defines the
+    semantics, exactly like the malformed-row fallback of
+    kmeans_train_portable."""
     import numpy as np
 
     try:
@@ -245,8 +255,10 @@ def _driver_gd_matrix(head, d: int):
         return None
     if not (np.isfinite(X).all() and np.isfinite(Y).all()):
         return None
+    if not _gd_sums_fit_int64(len(X)):
+        return None
     # |per-row gradient| <= NANO needs x in [0,1] and |resid| < 1 (labels
-    # in {0,1}); then |sum| <= budget_rows * NANO < 2^62 — int64-safe
+    # in {0,1}); with the row bound above, |sum| < 2^62 — int64-safe
     if len(X) and not (
         (X >= 0.0).all() and (X <= 1.0).all() and np.isin(Y, (0.0, 1.0)).all()
     ):
@@ -272,8 +284,9 @@ def _driver_gd_loop(
       ``floor((resid * x_j) * 1e9 + 0.5)`` are the same exactly-rounded
       IEEE op sequence, elementwise;
     - gradient sums are int64 over exact integers (order-independent;
-      |sum| <= rows * NANO, under the caller's cell budget by
-      construction), and the weight update is the shared trunc_div.
+      |sum| <= rows * NANO < 2**62, checked by :func:`_gd_sums_fit_int64`
+      before this venue is taken), and the weight update is the shared
+      trunc_div.
 
     Pinned venue-vs-venue at d=5 and d=64 in tests/test_llmops_algos.py,
     against the pure-Python replays, and end-to-end by the eight

@@ -7,20 +7,38 @@ coalescing), a broadcast threshold sized so every reference dimension table
 (products 44k / customers 100k rows) broadcasts, and UTC session time so
 date semantics match the DuckDB oracle.
 
-On a real cluster the same factory applies — only ``master`` and the
-partition counts change (shuffle partitions ≈ 2-3× total executor cores; at
-100 TB input you'd also raise ``spark.sql.files.maxPartitionBytes`` and rely
-on AQE coalescing rather than hand-sizing).
+Shuffle partitions follow the cores. On a ``local[N]`` master with no
+explicit ``shuffle_partitions``, ``spark.sql.shuffle.partitions`` is 2 × N,
+so every exchange and state-store stage runs in about two task waves on
+any host. AQE coalesces oversized counts on batch exchanges, but
+Structured Streaming has no AQE: a stateful stream freezes the count into
+its checkpoint and runs that many state-store tasks every batch, and each
+task pays a fixed checkpoint-write cost whatever its row count. State-store
+cost therefore scales with task waves, not rows, at this engine's sizes.
+On any other master the deployment's own setting stands (on a cluster,
+2-3× total executor cores; at 100 TB input also raise
+``spark.sql.files.maxPartitionBytes`` and rely on AQE coalescing rather
+than hand-sizing).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
 DEFAULT_BROADCAST_THRESHOLD = 64 * 1024 * 1024  # 64 MiB: all reference dims fit
+
+
+def local_shuffle_partitions(master: str) -> int | None:
+    """2 × the task threads of a ``local``, ``local[N]``, ``local[*]`` or
+    ``local[N,F]`` master; ``None`` for any other master."""
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\d+)?\])?", master)
+    if m is None:
+        return None
+    threads = m.group(1) or "1"
+    return 2 * ((os.cpu_count() or 1) if threads == "*" else int(threads))
 
 
 def get_spark(
@@ -32,7 +50,8 @@ def get_spark(
     """Build (or fetch) a SparkSession configured for this engine.
 
     Honors ``SPARK_GRAFT_CPUS`` for local-mode parallelism so tests and
-    bench.py agree with the driver's environment.
+    bench.py agree with the driver's environment; shuffle partitions
+    default to :func:`local_shuffle_partitions` of the master.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -88,9 +107,7 @@ def get_spark(
             "PYSPARK_SUBMIT_ARGS", f"--driver-memory {mem} pyspark-shell"
         )
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
+        shuffle_partitions = local_shuffle_partitions(master)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -101,7 +118,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Deterministic date/time semantics (match DuckDB naive timestamps).
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow for the few sanctioned pandas_udf escape hatches.
@@ -119,6 +135,8 @@ def get_spark(
         # scale default, not a bench tweak.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -22,7 +22,7 @@ stateful ops scale with distinct keys per trigger, not history.
 
 from __future__ import annotations
 
-import os
+import shutil
 import tempfile
 from collections.abc import Iterator
 from typing import Any
@@ -30,6 +30,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
 from pyspark.sql.types import (
@@ -52,12 +53,12 @@ EVENTS_RAW_SCHEMA = StructType(
 )
 
 
-def _replay_dir(sf_dir: str, table: str = "events") -> str:
-    """Stage a one-file directory for the file stream source (it requires a
-    directory, not a file): symlink the table's parquet into a temp dir."""
-    d = tempfile.mkdtemp(prefix=f"stream-{table}-")
-    os.symlink(f"{sf_dir}/{table}.parquet", f"{d}/{table}.parquet")
-    return d
+def _replay_path(sf_dir: str, table: str = "events") -> str:
+    """File-source path that replays only the table's parquet: a one-name
+    glob. The source rejects a plain file path (its base path must be a
+    directory) but sets no base path for a glob, so the table streams in
+    place with nothing staged to clean up."""
+    return f"{sf_dir}/{{{table}}}.parquet"
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,11 +69,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     if dict(raw_batch.dtypes).get("ts") != "bigint":
-        raw = spark.readStream.schema(raw_batch.schema).parquet(_replay_dir(sf_dir))
+        raw = spark.readStream.schema(raw_batch.schema).parquet(_replay_path(sf_dir))
         # Watermarks demand TIMESTAMP (LTZ); a micros file resolves as NTZ.
         # Session TZ is pinned UTC, so the cast is value-preserving.
         return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    raw = spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(_replay_dir(sf_dir))
+    raw = spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(_replay_path(sf_dir))
     return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
 
 
@@ -273,9 +274,10 @@ def stream_to_table(
 
 def stream_to_memory(
     df: DataFrame, name: str, *, output_mode: str = "complete", timeout_sec: int = 120
-) -> None:
+) -> StreamingQuery:
     """Run a streaming query to completion over the replayed input
-    (availableNow trigger) into an in-memory sink table ``name``."""
+    (availableNow trigger) into an in-memory sink table ``name``; returns
+    the query."""
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -284,6 +286,7 @@ def stream_to_memory(
         .start()
     )
     q.awaitTermination(timeout_sec)
+    return q
 
 
 def enriched_events_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
@@ -345,13 +348,18 @@ def cdc_apply_stream(
         out = ranked.filter(F.col("_rn") == 1).drop("_rn").localCheckpoint(eager=True)
         out.write.mode("overwrite").saveAsTable(snapshot_table)
 
+    checkpoint = tempfile.mkdtemp(prefix="cdc-chk-")
     q = (
         changes.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cdc-chk-"))
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(timeout_sec)
+    # a fresh checkpoint per call, never resumed: drop it once the query
+    # is done (a query still running past the timeout keeps it)
+    if not q.isActive:
+        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 def cdc_snapshot(
@@ -374,7 +382,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scale this is the object-store drop folder a crawler writes to)."""
     batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return spark.readStream.schema(batch.schema).parquet(
-        _replay_dir(sf_dir, "documents")
+        _replay_path(sf_dir, "documents")
     )
 
 
@@ -518,7 +526,7 @@ def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     per file) — the arrival feed for :func:`ann_index_stream`."""
     schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
     return spark.readStream.schema(schema).parquet(
-        _replay_dir(sf_dir, "embeddings")
+        _replay_path(sf_dir, "embeddings")
     )
 
 

@@ -1399,6 +1399,33 @@ def test_logreg_trainer_driver_venue_identical_to_distributed(spark):
         assert w_driver == w_dist, f"venue divergence at features={features}"
 
 
+def test_logreg_driver_venue_needs_int64_safe_row_count(spark, monkeypatch):
+    """The driver GD venue sums gradients in int64, so it is taken only
+    while rows × NANO < 2**62; past that bound the trainer must fall back
+    to the distributed loop (decimal sums) and give its answer."""
+    from ecommerce_etl_pipeline_spark.llmops import classifier
+
+    limit = 2**62 // classifier.NANO
+    assert classifier._gd_sums_fit_int64(limit)
+    assert not classifier._gd_sums_fit_int64(limit + 1)
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{j}" for j in range(1 + 3 * i))) for i in range(10)],
+        "doc_id LONG, text STRING",
+    )
+    w_dist, f1 = classifier.train_linear_scorer(docs, iterations=3, driver_cells=0)
+
+    def driver_loop(*args, **kwargs):
+        raise AssertionError("driver venue taken past the int64 bound")
+
+    monkeypatch.setattr(classifier, "_gd_sums_fit_int64", lambda n_rows: False)
+    monkeypatch.setattr(classifier, "_driver_gd_loop", driver_loop)
+    w_fallback, f2 = classifier.train_linear_scorer(docs, iterations=3)
+    for c in f1.retained_caches + f2.retained_caches:
+        c.unpersist()
+    assert w_fallback == w_dist
+
+
 def test_hashed_featurize_stages_bucket_array_single_md5_site(spark):
     """The d=64 feature pass must md5 each token ONCE (ADVICE r8 #1):
     Spark's subexpression elimination skips LambdaVariable trees, so an

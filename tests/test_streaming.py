@@ -3,6 +3,8 @@ table must equal the equivalent batch answers."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 
 from ecommerce_etl_pipeline_spark.sources.io import load_table
@@ -44,6 +46,56 @@ def test_session_window_stream_runs(spark):
     assert len(rows) > 0
     # session totals must account for every event
     assert sum(r.events_in_session for r in rows) == load_table(spark, SF, "events").count()
+
+
+def test_stateful_streams_stable_across_shuffle_partitions(spark):
+    """Structured Streaming has no AQE: a stateful stream runs exactly
+    spark.sql.shuffle.partitions state-store tasks, frozen into its
+    checkpoint. The answers must not depend on that count. Each run gets
+    its own query name and no checkpointLocation, so it starts from a
+    fresh temporary checkpoint."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for make in (daily_sales_stream, session_window_stream):
+            answers = {}
+            for n in (1, 8, 32):
+                spark.conf.set("spark.sql.shuffle.partitions", str(n))
+                name = f"t_parts_{make.__name__}_{n}"
+                q = stream_to_memory(make(read_events_stream(spark, SF)), name)
+                (state,) = q.lastProgress["stateOperators"]
+                assert state["numShufflePartitions"] == n
+                answers[n] = sorted(tuple(r) for r in spark.table(name).collect())
+                spark.catalog.dropTempView(name)
+            assert answers[1], make.__name__
+            assert answers[1] == answers[8] == answers[32], make.__name__
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_streaming_sinks_leave_no_staging_dirs(spark, tmp_path, monkeypatch):
+    """Replaying a table as a stream and the memory, table and CDC sinks
+    leave nothing in the temp dir once their queries have terminated."""
+    import tempfile
+
+    from ecommerce_etl_pipeline_spark.streaming import cdc_apply_stream
+    from ecommerce_etl_pipeline_spark.streaming.streams import stream_to_table
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ev = read_events_stream(spark, SF)
+    stream_to_memory(ev, "t_nostage", output_mode="append")
+    spark.catalog.dropTempView("t_nostage")
+    spark.sql("DROP TABLE IF EXISTS t_nostage_tbl")
+    stream_to_table(read_events_stream(spark, SF).select("event_id"), "t_nostage_tbl")
+    spark.sql("DROP TABLE t_nostage_tbl")
+    spark.sql("DROP TABLE IF EXISTS t_nostage_cdc")
+    changes = read_events_stream(spark, SF).select(
+        F.col("event_id").alias("k"),
+        F.lit(1).cast("long").alias("_seq"),
+        F.lit("I").alias("_op"),
+    )
+    cdc_apply_stream(changes, "t_nostage_cdc", ["k"])
+    spark.sql("DROP TABLE t_nostage_cdc")
+    assert os.listdir(tmp_path) == []
 
 
 def test_stateful_running_counts(spark):
