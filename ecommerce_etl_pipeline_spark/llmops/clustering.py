@@ -187,10 +187,10 @@ def _assign_arrow_udf(centroids: list[list[float]], cids: list[int] | None = Non
     sorts NULL dist first — the row assigns to the LOWEST cid with a NULL
     dist. The kernel emits exactly that (cluster = lowest cid, dist NULL),
     pinned on explicit null/ragged rows in
-    test_assign_arrow_kernel_bit_exact_vs_jvm. (The literal-matrix JVM
-    fold differs on SHORTER-than-dim vectors — it folds the available
-    elements — but its callers feed uniform-width corpora by
-    construction.) The ``pow(x, 2.0) == x*x`` identity above is a
+    test_assign_arrow_kernel_bit_exact_vs_jvm. The literal-matrix JVM
+    fold guards such rows to the same lowest index (pinned in
+    test_literal_centroid_kernels_agree_on_null_and_ragged_rows). The
+    ``pow(x, 2.0) == x*x`` identity above is a
     JVM/libm assumption (fdlibm special-cases y==2; Math.pow is only
     guaranteed within 1 ulp), so the parity pin is empirical per
     host/JVM — ADVICE r14.
@@ -457,7 +457,15 @@ def _assign_literal_centroids(
             lambda d, i: F.struct(d.alias("_dist"), i.alias("_c")),
         )
     )["_c"]
-    return pts.withColumn("_d", dists).withColumn("_cluster", best).drop("_d")
+    # unrankable rows (null / size != dim) never enter the fold — a longer
+    # row would index past the matrix (an ANSI error) and a shorter one
+    # would rank on a prefix — and take index 0, as the arrow kernel does
+    ok = F.size("_pv") == dim
+    return (
+        pts.withColumn("_d", F.when(ok, dists))
+        .withColumn("_cluster", F.coalesce(best, F.lit(0)))
+        .drop("_d")
+    )
 
 
 def kmeans_train(

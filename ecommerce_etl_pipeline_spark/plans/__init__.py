@@ -38,126 +38,3 @@ for _optional in (
         )
     except ModuleNotFoundError:
         pass
-
-# ---------------------------------------------------------------------------
-# Driver-window curation. The correctness driver verifies the FIRST 50
-# registered queries (in dict insertion order). Rounds 1-4 proved the
-# full surface (every registered query has >=1 driver row); round 5
-# started the standing staleness rotation. Round 15 (this list; entering
-# cert histogram r14:50/r13:50/r12:48/r11:33-deferred):
-# per the standing doctrine the window LEADS with the 33 r11-latest
-# certs at age 4 — exactly the names the rotation tripwire
-# (tests/test_plans.py::test_window_rotation_keeps_cert_ages_bounded)
-# printed at r15 open, in its (sorted) order. Then the touched-code
-# re-certs for this optimization round:
-# - the 8 classifier-family queries whose trainer gained the r15 driver
-#   GD venue (llmops/classifier.py::train_linear_scorer — bit-identical
-#   by construction, but touched Spark fn => driver re-cert);
-# - the 4 oracle-backed carriers of the clustering kernels touched by
-#   the r15 null-parity/LongType/budget-floor fixes (ADVICE r14):
-#   dd_semantic_dedup, sim_ivf_topk, sim_ivf_recall (assign_to_seeds
-#   arrow kernel) and ml_kmeans_train (kmeans_train_portable probe).
-# The remaining 5 slots take the oldest parked certs (r12-latest,
-# age 3): a12_price_band_performance, a17_percentiles, a18_argmax,
-# a19_collect_sorted, a1_daily_sales.
-# Every parked query is backstopped per round by the type-strict local
-# parity pin: since r14 tests/test_oracle_parity.py runs the full
-# registry against DuckDB at sf0.001 under the driver-strength canon
-# (tests/oracle.py — bit-exact float hex, no int collapse, per-column
-# dtype-class assertion).
-# Honest steady-state arithmetic: 174 oracle-backed queries vs 50
-# slots/round, of which touched-code re-certs also claim slots (12 this
-# round) — so the staleness tail runs at age <= 4 whenever a round
-# spends slots on touched work; the deferral always parks the excess on
-# machine-gated queries, and the strict parity pin backstops every
-# parked query.
-# RULE (caught by the r4 self-review): any NEW query
-# registered in a future round MUST be added to this list (or queued
-# with a comment) or it silently gets no driver row.
-# Queued note (r11, amended r13): sim_pq_rerank and sim_ivfpq_rerank
-# are ROWS-ONLY (trained-quantizer index builds, no single-statement SQL
-# replay — the sk_hll precedent) and are pytest-pinned in
-# tests/test_similarity_recall.py; the seeds-only ADC leg is oracle-
-# backed as sim_pq_adc_topk (certified r13, re-certified r14). Rows-only
-# queries carry no oracle cert to age, so they take no window slot.
-# Names listed here but not (yet) registered are skipped harmlessly;
-# everything not listed keeps its original relative order after the
-# curated block.
-# tests/test_plans.py::test_driver_window_names_all_registered enforces
-# exactly 50 registered, duplicate-free names — no overflow entries.
-# ---------------------------------------------------------------------------
-_DRIVER_WINDOW = [
-    # -- the 33 r11-latest certs at age 4 (the rotation tripwire named
-    # exactly these at r15 open — they lead, in its order)
-    "a11_brand_price_stats",
-    "a13_type_value_counts",
-    "a15_event_time_range",
-    "a16_rollup_hierarchy",
-    "a3_discount_effectiveness",
-    "dd_exact_dedup",
-    "dd_jaccard_df_capped",
-    "dd_segment_dup_ratio",
-    "j10_range_band_join",
-    "j11_bloom_pruned_join",
-    "j2_customer_geo_broadcast",
-    "j4_pair_names_lookup",
-    "j6_semi_cascade",
-    "j8_customers_without_orders",
-    "n2_hof_array_aggregate",
-    "n3_build_explode_roundtrip",
-    "n6_variant_metadata",
-    "o1_global_topk",
-    "p6_null_defaults",
-    "sc_currency_roundtrip",
-    "sim_cosine_topk",
-    "sim_mmr_diversify",
-    "sm2_exact_n_sample",
-    "sm3_ri_cascade_sample",
-    "txt_quality_scores",
-    "txt_sequence_packing",
-    "u2_intersect_keys",
-    "u3_except_keys",
-    "u4_unpivot",
-    "w10_scd2_intervals",
-    "w5_cumulative_daily_sales",
-    "w6_event_gaps",
-    "w9_sliding_window",
-    # -- touched-code re-certs: the r15 driver GD venue
-    # (classifier.train_linear_scorer) feeds all eight; bit-identical by
-    # construction and locally re-verified, but touched Spark fn =>
-    # driver re-cert
-    "ml_logreg_train",
-    "ml_logreg_train_d64",
-    "ml_logreg_eval",
-    "ml_logreg_calibration",
-    "ml_logreg_holdout",
-    "ml_logreg_holdout_d64",
-    "dd_curation_classifier",
-    "dd_curation_classifier_ppjoin",
-    # -- touched-code re-certs: the r15 clustering-kernel fixes (arrow
-    # null-parity, LongType cluster field, kmeans probe budget floor)
-    "dd_semantic_dedup",
-    "sim_ivf_topk",
-    "sim_ivf_recall",
-    "ml_kmeans_train",
-    # -- the 5 oldest parked certs (r12-latest, age 3) fill the window
-    "a12_price_band_performance",
-    "a17_percentiles",
-    "a18_argmax",
-    "a19_collect_sorted",
-    "a1_daily_sales",
-]
-
-
-
-def _curate_window() -> None:
-    from ecommerce_etl_pipeline_spark.plans.registry import _REGISTRY
-
-    promoted = {n: _REGISTRY[n] for n in _DRIVER_WINDOW if n in _REGISTRY}
-    rest = {n: s for n, s in _REGISTRY.items() if n not in promoted}
-    _REGISTRY.clear()
-    _REGISTRY.update(promoted)
-    _REGISTRY.update(rest)
-
-
-_curate_window()

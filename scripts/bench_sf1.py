@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Standing second-decade gate (VERDICT r5 "Next round" #3): measure the
 headline + extended sets at sf0.1 AND sf1 in ONE session, emit
-BENCH_SF1_r{N}.json, and FAIL a query when BOTH its sf0.1->sf1 growth
-factor regresses more than 25% over the recorded baseline AND its
-absolute sf1 time sits more than 12.5% over the baseline sf1 seconds —
+BENCH_SF1.json (or the path given as the first argument), and FAIL a
+query when BOTH its sf0.1->sf1 growth factor regresses more than 25%
+over the recorded baseline AND its absolute sf1 time sits more than
+12.5% over the baseline sf1 seconds —
 the machine check that would have caught the SimHash 62x before a human
 read the timings. A baseline query MISSING from the run is itself a
-violation (silent coverage loss is the r4 driver-window bug class).
+violation (silent coverage loss).
 
 Why two-sided: the growth ratio's denominator is the sf0.1 time, so a
 round that merely speeds up the small scale inflates the ratio with no

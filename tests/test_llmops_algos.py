@@ -634,6 +634,32 @@ def test_assign_arrow_kernel_bit_exact_vs_jvm(spark, sf_dir):
         assert wj[bad_id] == (3, None)  # lowest cid, NULL dist
 
 
+def test_literal_centroid_kernels_agree_on_null_and_ragged_rows(spark):
+    """Both literal-matrix assignment kernels give a null or wrong-width
+    row the lowest centroid index, with ANSI off and on (a longer row must
+    never index past the centroid matrix); a well-formed row ranks
+    normally."""
+    from ecommerce_etl_pipeline_spark.llmops.clustering import (
+        _assign_literal_centroids,
+    )
+
+    pts = spark.createDataFrame(
+        [(1, [9.0, 9.0]), (2, [9.0]), (3, None), (4, [9.0, 9.0, 9.0])],
+        "_pid LONG, _pv ARRAY<DOUBLE>",
+    )
+    centroids = [[0.0, 0.0], [10.0, 10.0], [1.0, 1.0]]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("false", "true"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            for kernel in ("jvm", "arrow"):
+                assigned = _assign_literal_centroids(pts, centroids, kernel=kernel)
+                got = {r._pid: r._cluster for r in assigned.collect()}
+                assert got == {1: 1, 2: 0, 3: 0, 4: 0}, (kernel, ansi)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
 def test_kmeans_portable_trajectory_identical_across_kernels(spark, sf_dir):
     """r14 optimization pin: kmeans_train_portable produces the IDENTICAL
     centroid matrix (exact float equality — integer-nano updates leave no

@@ -323,63 +323,3 @@ def test_folded_lsh_signatures_not_inlined(spark):
         f"{n_folds} aggregate() folds in the multi-table LSH plan — "
         "the signature fold is being duplicated per bucket term"
     )
-
-
-def test_driver_window_names_all_registered():
-    """A typo in _DRIVER_WINDOW silently fails to promote (unknown names
-    are skipped by design) — so every listed name must exist, the window
-    must fill all 50 driver slots, and have no duplicates."""
-    from ecommerce_etl_pipeline_spark.plans import _DRIVER_WINDOW
-
-    missing = [n for n in _DRIVER_WINDOW if n not in _REGISTRY]
-    assert missing == [], f"window names not registered: {missing}"
-    assert len(_DRIVER_WINDOW) == len(set(_DRIVER_WINDOW)) == 50
-    # and promotion actually happened: the first 50 registry entries are
-    # exactly the window, in order
-    assert list(_REGISTRY)[:50] == _DRIVER_WINDOW
-
-
-def test_window_rotation_keeps_cert_ages_bounded():
-    """The staleness-rotation doctrine, machine-enforced (round 11 — the
-    round whose self-review caught a hand-bookkeeping error in exactly
-    this arithmetic): every oracle-backed query whose latest driver cert
-    is 4+ rounds old relative to the round being built, and every
-    oracle-backed query with NO driver cert yet, must hold a slot in the
-    current _DRIVER_WINDOW. At each round open this test fails until the
-    window is rotated per the standing procedure — that ordering (rotate
-    BEFORE engine work) is the doctrine, so the failure message names the
-    queries to promote."""
-    import glob
-    import json
-    import os
-    import re
-
-    from ecommerce_etl_pipeline_spark.plans import _DRIVER_WINDOW
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, int] = {}
-    rounds = [0]
-    for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        n = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        rounds.append(n)
-        with open(f) as fh:
-            for q, v in json.load(fh).items():
-                ok = v.get("hash_match") or (
-                    v.get("rows_match") and v.get("err") is None
-                )
-                if ok:
-                    latest[q] = max(latest.get(q, 0), n)
-    building = max(rounds) + 1  # CORRECTNESS_r{N} lands AFTER round N
-    window = set(_DRIVER_WINDOW[:50])
-    oracle_backed = [q for q, s in _REGISTRY.items() if s.oracle]
-    stale = sorted(
-        q
-        for q in oracle_backed
-        if q not in window
-        and (q not in latest or building - latest[q] >= 4)
-    )
-    assert stale == [], (
-        f"rotate the driver window for round {building}: these "
-        f"oracle-backed queries are age-4+ (or never certified) and not "
-        f"windowed: {stale}"
-    )
