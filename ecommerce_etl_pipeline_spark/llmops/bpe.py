@@ -22,11 +22,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ecommerce_etl_pipeline_spark.llmops import text as T
+from ecommerce_etl_pipeline_spark.operators import venue
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 #: end-of-word marker appended to every word's symbol sequence (the
 #: classic construction: lets merges distinguish word-final subwords).
 EOW = "</w>"
+
+#: Driver-venue budget of :func:`bpe_train`, in word types.
+DRIVER_VOCAB_ROWS = 200_000
 
 
 def word_counts(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
@@ -102,30 +106,21 @@ def bpe_train(
     text_col: str = "text",
     num_merges: int = 20,
     min_pair_count: int = 2,
-    driver_vocab_rows: int = 200_000,
     word_counts_df: DataFrame | None = None,
 ) -> list[tuple[str, str, int]]:
     """Learn up to ``num_merges`` BPE merges from the corpus. Returns the
     ordered merge list [(left, right, pair_count), ...] — the tokenizer
     model. Stops early when no pair reaches ``min_pair_count``.
 
-    Strategy is STATISTICS-DRIVEN, like a join, and probed with ONE
-    action: ``limit(budget + 1).collect()`` on the word-TYPE table —
-
-    - if at most ``driver_vocab_rows`` rows come back, they ARE the whole
-      vocabulary: run the merge loop in memory (:func:`_driver_train`).
-      This is what every production tokenizer trainer does (count at
-      corpus scale, merge on one node) and removes ``num_merges``
-      sequential Spark jobs (~10x wall-clock on the test corpus, whose
-      vocabulary is tiny). The corpus pays exactly its one word-count
-      shuffle — the probe is not a separate ``count()`` job, which would
-      re-execute that shuffle;
-    - otherwise the distributed loop runs — each round one
-      vocabulary-sized pair aggregate (weighted by word count, map-side
-      combinable) + one driver-collected argmax row, then a narrow
-      per-word-type fold applying the merge, localCheckpoint()ed every
-      few rounds so lineage (and plan depth) stays bounded at any merge
-      count.
+    Driver venue: up to ``DRIVER_VOCAB_ROWS`` word types, which are then
+    the whole vocabulary (:func:`_driver_train`). This is what every
+    production tokenizer trainer does (count at corpus scale, merge on one
+    node); the corpus pays exactly its one word-count shuffle. Otherwise
+    the distributed loop runs — each round one vocabulary-sized pair
+    aggregate (weighted by word count, map-side combinable) + one
+    driver-collected argmax row, then a narrow per-word-type fold applying
+    the merge, localCheckpoint()ed every few rounds so lineage (and plan
+    depth) stays bounded at any merge count.
 
     ``word_counts_df`` lets a caller that also needs the word-type table
     (txt_bpe_token_counts trains AND applies) pass a precomputed —
@@ -151,10 +146,12 @@ def bpe_train(
         if word_counts_df is not None
         else word_counts(docs, text_col=text_col)
     )
-    head = wc.limit(driver_vocab_rows + 1).collect()
-    if len(head) <= driver_vocab_rows:
+    head = venue.driver_rows(wc, DRIVER_VOCAB_ROWS, "bpe_train")
+    if head is not None:
         return _driver_train(
-            {r["w"]: r["cnt"] for r in head}, num_merges, min_pair_count
+            dict(zip(head["w"].tolist(), head["cnt"].tolist())),
+            num_merges,
+            min_pair_count,
         )
     vocab = wc.select(_initial_symbols(F.col("w")).alias("syms"), "cnt")
     merges: list[tuple[str, str, int]] = []

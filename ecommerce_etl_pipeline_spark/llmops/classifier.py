@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ecommerce_etl_pipeline_spark.llmops import text
+from ecommerce_etl_pipeline_spark.operators import venue
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 #: nano quantization scale for gradient sums / weights
@@ -54,19 +55,6 @@ NANO = 1_000_000_000
 #: (wide-agg planning would not survive production bucket counts). See
 #: the venue comment in train_linear_scorer.
 _WIDE_AGG_MAX_D = 16
-
-#: Driver-venue budget for the GD trainer, in MATRIX CELLS ((d+1) x rows):
-#: 16M cells = 128 MB of float64 on the driver — the same bounded-local-
-#: fast-path idea as clustering.KMEANS_DRIVER_CELLS / pagerank_portable's
-#: DRIVER_EDGE_ROWS. Under budget the integer-exact GD loop runs in numpy
-#: (bit-identical: integer nano-gradient sums are order-independent and
-#: the per-row float64 math is the same IEEE op sequence); over it the
-#: distributed loop runs unchanged — a venue pick, never a semantics
-#: change. <= 0 disables the probe outright (no k-floor leak: the
-#: distributed venue is then taken for ANY corpus, the escape hatch the
-#: venue-parity tests use).
-CLS_DRIVER_CELLS = 16_000_000
-
 
 def trunc_div(a: int, b: int) -> int:
     """Integer division truncating toward zero — the semantics of
@@ -229,15 +217,6 @@ def featurize(
     )
 
 
-def _gd_sums_fit_int64(n_rows: int) -> bool:
-    """The driver GD venue sums per-row quantized gradients in int64. Each
-    term is bounded by NANO (features in [0, 1], |resid| < 1), so the sums
-    stay exact while rows × NANO < 2**62, the bound kmeans_train_portable
-    checks. The caller's cell budget does not imply it: a large enough
-    ``driver_cells`` admits more rows."""
-    return n_rows * NANO < 2**62
-
-
 def _driver_gd_matrix(head, d: int):
     """Validate the probed feature frame for the driver GD venue; returns
     (X, Y) float64 arrays or ``None`` when any precondition the
@@ -255,10 +234,10 @@ def _driver_gd_matrix(head, d: int):
         return None
     if not (np.isfinite(X).all() and np.isfinite(Y).all()):
         return None
-    if not _gd_sums_fit_int64(len(X)):
-        return None
     # |per-row gradient| <= NANO needs x in [0,1] and |resid| < 1 (labels
-    # in {0,1}); with the row bound above, |sum| < 2^62 — int64-safe
+    # in {0,1}); with the row bound, |sum| < 2^62 — int64-safe
+    if not venue.fits_int64_sum(len(X), NANO):
+        return None
     if len(X) and not (
         (X >= 0.0).all() and (X <= 1.0).all() and np.isin(Y, (0.0, 1.0)).all()
     ):
@@ -284,9 +263,9 @@ def _driver_gd_loop(
       ``floor((resid * x_j) * 1e9 + 0.5)`` are the same exactly-rounded
       IEEE op sequence, elementwise;
     - gradient sums are int64 over exact integers (order-independent;
-      |sum| <= rows * NANO < 2**62, checked by :func:`_gd_sums_fit_int64`
-      before this venue is taken), and the weight update is the shared
-      trunc_div.
+      |sum| <= rows * NANO < 2**62, checked by
+      :func:`venue.fits_int64_sum` before this venue is taken), and the
+      weight update is the shared trunc_div.
 
     Pinned venue-vs-venue at d=5 and d=64 in tests/test_llmops_algos.py,
     against the pure-Python replays, and end-to-end by the eight
@@ -330,7 +309,6 @@ def train_linear_scorer(
     lr_den: int = 1,
     cache: bool = True,
     features: str = "quality",
-    driver_cells: int = CLS_DRIVER_CELLS,
 ) -> tuple[list[int], DataFrame]:
     """Gradient-descent training of the linear quality scorer; returns
     (weights in integer nanos, the cached feature frame for reuse —
@@ -349,42 +327,27 @@ def train_linear_scorer(
     """
     feats = featurize(docs, text_col, features=features)
     d = len(feats.columns) - 1  # x0..x{d-1} plus the label column y
-    # VENUE is statistics-driven since r15 (the kmeans_train_portable /
-    # pagerank_portable discipline, verbatim): ONE bounded probe action —
-    # ``limit(budget + 1).toPandas()`` where budget = driver_cells/(d+1)
-    # rows (<= 128 MB of float64) — and if the feature frame comes back
-    # within budget and well-formed, it IS the training set: the GD loop
-    # runs as float64/int64 numpy on the driver (:func:`_driver_gd_loop`),
-    # removing ``iterations`` sequential Spark jobs, each of which paid a
-    # per-round plan/compile/schedule constant (~0.3 s measured at sf0.1,
-    # guide §7.3's plan-build class) on top of the aggregate itself.
-    # Over budget — the 100 TB regime — the distributed loop below runs
-    # unchanged (localCheckpoint lineage cut + one map-side-combined
-    # aggregate per round). Bit-identical by construction; pinned
-    # venue-vs-venue and against the pure-Python replays in
-    # tests/test_llmops_algos.py, and end-to-end by the classifier-family
-    # DuckDB oracles.
-    if driver_cells > 0:
-        budget_rows = driver_cells // (d + 1)
-        head = feats.limit(budget_rows + 1).toPandas()
-        if len(head) <= budget_rows:
-            m = _driver_gd_matrix(head, d)
-            if m is not None:
-                w = _driver_gd_loop(
-                    m[0], m[1], iterations=iterations, lr_num=lr_num, lr_den=lr_den
-                )
-                if cache:
-                    # plain cache() (not localCheckpoint): no GD rounds
-                    # re-analyze the lineage in this venue, so the
-                    # checkpoint's re-analysis win is moot and cache keeps
-                    # fault tolerance + a working unpersist() for the
-                    # downstream consumers (evaluate_scorer/calibration —
-                    # lazily materialized only if actually scanned)
-                    feats = feats.cache()
-                feats.retained_caches = [feats] if cache else []
-                return w, feats
+    # Driver venue: up to venue.DRIVER_CELLS // (d + 1) rows whose features
+    # are finite and in [0, 1] with {0, 1} labels (_driver_gd_matrix)
+    head = venue.driver_rows(
+        feats, venue.DRIVER_CELLS // (d + 1), "train_linear_scorer"
+    )
+    m = _driver_gd_matrix(head, d) if head is not None else None
+    if m is not None:
+        w = _driver_gd_loop(
+            m[0], m[1], iterations=iterations, lr_num=lr_num, lr_den=lr_den
+        )
+        if cache:
+            # plain cache() (not localCheckpoint): no GD rounds re-analyze
+            # the lineage in this venue, so the checkpoint's re-analysis
+            # win is moot and cache keeps fault tolerance + a working
+            # unpersist() for the downstream consumers (evaluate_scorer/
+            # calibration — lazily materialized only if actually scanned)
+            feats = feats.cache()
+        feats.retained_caches = [feats] if cache else []
+        return w, feats
     if cache:
-        # r14: localCheckpoint instead of cache() — same single
+        # localCheckpoint instead of cache() — same single
         # materialization and storage class (MEMORY_AND_DISK), but the GD
         # rounds then plan against a LogicalRDD leaf instead of
         # re-analyzing the full featurize lineage (59 filter-HOF trees at

@@ -14,28 +14,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ecommerce_etl_pipeline_spark.operators import venue
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 
-#: Below this many (undirected) candidate edges the component resolution
-#: runs as driver-side union-find over one collect — the same thresholded
-#: local-fast-path idea as Spark's broadcast join. 2M edges ≈ 32 MB on the
-#: driver; candidate graphs are duplicate-density-sized, so most corpora
-#: land far under this even at 100 TB. Above it: distributed label
-#: propagation.
+#: Driver-venue budget of :func:`connected_components`, in undirected
+#: edges (twice the directed probe rows): 2M edges is about 32 MB on the
+#: driver. Candidate graphs are duplicate-density-sized, so most corpora
+#: land far under it even at 100 TB.
 SMALL_GRAPH_EDGES = 2_000_000
-
-#: Driver-venue budget for the portable k-means trainer, in MATRIX CELLS
-#: (rows x dim): 16M cells = 128 MB of float64 on the driver — the same
-#: bounded-local-fast-path idea as SMALL_GRAPH_EDGES / pagerank_portable's
-#: DRIVER_EDGE_ROWS. Under budget the integer-exact loop runs in numpy
-#: (bit-identical, order-independent sums); over it the distributed loop
-#: runs unchanged.
-KMEANS_DRIVER_CELLS = 16_000_000
 
 
 def _union_find_components(edge_rows) -> list[tuple]:
+    """Driver venue of :func:`connected_components`; NULL endpoints as
+    label propagation's equi-joins treat them."""
     parent: dict = {}
+    saw_null = False
 
     def find(x):
         root = x
@@ -46,14 +40,31 @@ def _union_find_components(edge_rows) -> list[tuple]:
         return root
 
     for a, b in edge_rows:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
+        if a is None or b is None:
+            saw_null = True
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             # union by min so the representative is the min id
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    return [(n, find(n)) for n in parent]
+    rows = [(n, find(n)) for n in parent]
+    return rows + [(None, None)] if saw_null else rows
+
+
+def _probed_ids(col, integral: bool) -> list | None:
+    """Python values of one probed id column, NULL as None. pandas widens a
+    nullable integer column to float64, exact only below 2**53: a wider id
+    returns None (take the distributed venue)."""
+    vals = [None if v != v else v for v in col.tolist()]  # NaN is a NULL
+    if not (integral and col.dtype.kind == "f"):
+        return vals
+    if any(v is not None and abs(v) >= 2**53 for v in vals):
+        return None
+    return [None if v is None else int(v) for v in vals]
 
 
 def connected_components(
@@ -62,29 +73,25 @@ def connected_components(
     src: str = "doc1",
     dst: str = "doc2",
     max_iterations: int = 20,
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into duplicate CLUSTERS: connected
     components. Returns (node, component) where component = min doc_id of
     the cluster; the component representative is the canonical document.
+    A NULL endpoint joins no component and appears once as (NULL, NULL).
 
-    Two physical strategies behind one semantic (chosen at runtime from the
-    materialized edge count, like AQE picks join strategies):
+    Driver venue: up to ``SMALL_GRAPH_EDGES // 2`` directed pair rows, any
+    id type, run as union-find with path compression (O(E α(E)) locally
+    beats O(diameter) rounds of job-launch overhead by ~10x).
 
-    - small graph (≤ ``small_graph_edges``): one collect + driver
-      union-find with path compression, result re-parallelized. Candidate
-      graphs are duplicate-density-sized — almost always this path — and
-      O(E α(E)) locally beats O(diameter) distributed rounds of job-launch
-      overhead by ~10x.
-    - large graph: iterative min-label propagation. Each node repeatedly
-      adopts the minimum label among itself and its neighbors (hash-join +
-      groupBy per round, O(diameter) rounds — near-dup graphs have tiny
-      diameters). Edges and each round's labels are cached so round N+1
-      never replays round N's lineage (at cluster scale swap cache() for
-      checkpoint every few rounds); convergence is detected from a MONOTONE
-      invariant — labels only ever decrease, so sum(component) is
-      stationary exactly at the fixpoint — one cheap aggregate per round
-      instead of a changed-rows self-join.
+    Distributed venue: iterative min-label propagation. Each node
+    repeatedly adopts the minimum label among itself and its neighbors
+    (hash-join + groupBy per round, O(diameter) rounds — near-dup graphs
+    have tiny diameters). Edges and each round's labels are cached so
+    round N+1 never replays round N's lineage (at cluster scale swap
+    cache() for checkpoint every few rounds); convergence is detected from
+    a MONOTONE invariant — labels only ever decrease, so sum(component) is
+    stationary exactly at the fixpoint — one cheap aggregate per round
+    instead of a changed-rows self-join.
 
     CACHE CONTRACT: the large-graph branch returns a CACHED frame (already
     materialized by the convergence aggregate — unpersisting it before the
@@ -92,28 +99,25 @@ def connected_components(
     returned DataFrame as ``df.retained_caches``; unpersist when done. The
     small-graph branch retains nothing (empty list).
     """
-    spark = pairs.sparkSession
-    # Strategy probe and small-graph collect in ONE execution: take(N+1)
-    # runs the candidate-generation lineage once and hands back every edge
-    # when the graph is small (the common case — candidate graphs are
-    # duplicate-density-sized). Only an over-limit graph pays for a second,
-    # cached materialization on the distributed path. This replaces the
-    # previous cache()+count()+collect() sequence, which materialized the
-    # pair lineage (for an LSH input: the band self-join + verify join, the
-    # most expensive thing in the whole pipeline) one extra time.
-    directed = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    head = directed.take(small_graph_edges // 2 + 1)
+    from pyspark.sql.types import IntegralType
 
-    if 2 * len(head) <= small_graph_edges:
-        # Small-graph fast path needs no symmetrize/distinct shuffle at all:
-        # union-find consumes undirected edges as-is (duplicates are no-ops).
-        rows = _union_find_components([(r.a, r.b) for r in head])
-        schema = pairs.select(
-            F.col(src).alias("node"), F.col(src).alias("component")
-        ).schema
-        out = spark.createDataFrame(rows, schema)
-        out.retained_caches = []
-        return out
+    spark = pairs.sparkSession
+    directed = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    head = venue.driver_rows(directed, SMALL_GRAPH_EDGES // 2, "connected_components")
+    if head is not None:
+        a, b = (
+            _probed_ids(head[c], isinstance(directed.schema[c].dataType, IntegralType))
+            for c in ("a", "b")
+        )
+        if a is not None and b is not None:
+            # union-find consumes undirected edges as-is (duplicates are
+            # no-ops), so no symmetrize/distinct shuffle is needed
+            schema = pairs.select(
+                F.col(src).alias("node"), F.col(src).alias("component")
+            ).schema
+            out = spark.createDataFrame(_union_find_components(zip(a, b)), schema)
+            out.retained_caches = []
+            return out
 
     directed = directed.cache()
 
@@ -574,7 +578,6 @@ def kmeans_train_portable(
     iterations: int = 5,
     nano: int = 10**9,
     kernel: str = "arrow",
-    driver_cells: int = KMEANS_DRIVER_CELLS,
 ) -> list[list[float]]:
     """Lloyd's k-means whose every cross-engine-sensitive step is made
     engine-portable — the oracle-checkable twin of :func:`kmeans_train`
@@ -599,38 +602,19 @@ def kmeans_train_portable(
     invisible to any assignment that isn't already a coin flip. Returns
     the final centroid matrix (k x dim floats).
 
-    VENUE is statistics-driven since r14 (the pagerank_portable
-    discipline, verbatim): ONE probe action — ``limit(budget + 1)
-    .toPandas()`` where budget = ``driver_cells // dim`` rows — and if
-    the corpus comes back within budget and well-formed (every vector
-    the seed width, no nulls/NaNs), it IS the training set: the loop
-    runs as float64/int64 numpy on the driver
-    (:func:`_driver_kmeans_loop_portable`), removing ``iterations``
-    sequential Spark jobs (each of which re-scans the corpus, re-runs
-    the assignment pass and shuffles a k*dim aggregate — measured 0.5-1 s
-    per iteration of pure per-round constant at sf0.1's 2,000 vectors).
-    Integer nano-sums are ORDER-INDEPENDENT and the float64 assignment
-    arithmetic is the same IEEE op sequence, so both venues are
-    bit-identical — pinned in tests/test_llmops_algos.py, and the DuckDB
-    oracle (ml_kmeans_train) replays either. Over budget — the 100 TB
-    regime — the distributed loop runs with the ``kernel`` of choice
-    (default: the vectorized arrow assignment); that is a venue pick,
-    never a semantics change.
+    Driver venue: up to ``venue.DRIVER_CELLS // dim`` rows whose vectors
+    all have the seed width, no nulls or NaNs, and int64-exact nano sums
+    (:func:`_driver_kmeans_loop_portable`); otherwise the distributed loop
+    runs with the ``kernel`` of choice.
     """
     pts = points.select(F.col(id_col).alias("_pid"), F.col(vec_col).alias("_pv"))
     first = pts.orderBy("_pid").limit(k).collect()
     centroids = [[float(x) for x in r["_pv"]] for r in first]
     dim = len(centroids[0])
-    # no k floor (r15, ADVICE r14): driver_cells <= 0 must disable the
-    # driver venue for ANY corpus (the escape hatch the venue-parity tests
-    # use), so the probe is skipped outright rather than floored at k rows
-    budget_rows = driver_cells // max(dim, 1)
-    head = (
-        pts.select("_pv").limit(budget_rows + 1).toPandas()
-        if driver_cells > 0
-        else None
+    head = venue.driver_rows(
+        pts.select("_pv"), venue.DRIVER_CELLS // max(dim, 1), "kmeans_train_portable"
     )
-    if head is not None and len(head) <= budget_rows:
+    if head is not None:
         import numpy as np
 
         vals = head["_pv"].to_numpy()
@@ -642,12 +626,10 @@ def kmeans_train_portable(
             X = np.stack(vals).astype(np.float64) if ok else None
         except (TypeError, ValueError):
             X = None  # malformed rows: the distributed venue defines them
-        if X is not None:
-            # int64-sum overflow guard (the distributed venue's bigint sum
-            # would raise under ANSI; the driver venue must not wrap
-            # silently): worst-case |sum| < (max|q| + 1) * rows
+        if X is not None and np.isfinite(X).all():
+            # every quantized term is at most max|x| * nano + 1 in magnitude
             qmax = float(np.abs(X).max(initial=0.0)) * nano + 1.0
-            if np.isfinite(X).all() and qmax * max(len(X), 1) < float(2**62):
+            if venue.fits_int64_sum(len(X), qmax):
                 return _driver_kmeans_loop_portable(
                     X, centroids, iterations=iterations, nano=nano
                 )

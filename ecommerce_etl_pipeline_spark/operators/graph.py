@@ -36,6 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ecommerce_etl_pipeline_spark.operators import venue
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 
@@ -224,10 +225,9 @@ def pagerank(
 
 
 #: Driver-venue budget for :func:`pagerank_portable`, in RAW probed rows
-#: (dedup happens driver-side — see the VENUE note there): 4M rows collect
-#: as ~64 MB of Arrow (two int64 columns) with a ~3x transient numpy peak —
-#: safe in a 1 GB driver, the smallest this engine targets. Over budget,
-#: the distributed loop runs (same semantics).
+#: (the probe runs no distinct shuffle; the driver loop dedups): 4M rows
+#: collect as ~64 MB of Arrow (two int64 columns) with a ~3x transient
+#: numpy peak — safe in a 1 GB driver, the smallest this engine targets.
 DRIVER_EDGE_ROWS = 4_000_000
 
 
@@ -270,7 +270,7 @@ def _driver_rank_loop_portable(
         key = pd.unique(si * n0 + di)
         si, di = key // n0, key % n0
     else:
-        # a caller-raised budget can push n past the packing bound
+        # a raised DRIVER_EDGE_ROWS can push n past the packing bound
         # (~3e9 nodes); fall back to a 2-column hash dedupe
         kept = pd.DataFrame({"s": si, "d": di}).drop_duplicates()
         si, di = kept["s"].to_numpy(), kept["d"].to_numpy()
@@ -326,7 +326,6 @@ def pagerank_portable(
     dst_col: str = "dst",
     iterations: int = 6,
     scale: int = 10**12,
-    driver_edge_rows: int = DRIVER_EDGE_ROWS,
     symmetric: bool = False,
 ) -> DataFrame:
     """PageRank in exact INTEGER arithmetic — the oracle-checkable twin of
@@ -364,25 +363,9 @@ def pagerank_portable(
     one rank-edge join, one map-side-combinable integer aggregate, one
     bounded scalar, lineage cut per round.
 
-    VENUE is statistics-driven (the bpe_train discipline): ONE probe
-    action — ``limit(driver_edge_rows + 1).toPandas()`` on the RAW aliased
-    edge list, no distinct shuffle in the probe — and if the rows come
-    back within budget they ARE the graph: dedup is an O(rows) driver-side
-    hash over packed index pairs (the loop is order-independent so the
-    kept-row order is irrelevant) and the loop runs as int64 numpy on the
-    driver (:func:`_driver_rank_loop_portable`), removing ``iterations``
-    sequential Spark jobs plus the distinct exchange (~2.5x wall-clock at
-    sf0.1, where the co-purchase graph is 2.4M edges). Integer arithmetic
-    is order-independent, so both venues are bit-identical — pinned
-    against each other and the pure-Python reference in
-    tests/test_graph.py, and the DuckDB oracle replays either. Over
-    budget, the distributed loop runs and dedups relationally — a
-    heavily-duplicated list whose DISTINCT form would have fit the driver
-    budget takes the distributed venue too; that is a venue pick, never a
-    semantics change. The FP variant (:func:`pagerank`) stays
-    distributed-only: float summation order differs between numpy and
-    Spark partial aggregates, so a driver venue would NOT be bit-identical
-    there.
+    Driver venue: up to ``DRIVER_EDGE_ROWS`` raw (not deduplicated) edge
+    rows, half that when ``symmetric``, with integral, null-free ids
+    (:func:`_driver_rank_loop_portable`).
     """
     e_raw = ensure_parallelism(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -399,17 +382,16 @@ def pagerank_portable(
         .schema["node"]
         .dataType.simpleString()
     )
-    budget = driver_edge_rows // 2 if symmetric else driver_edge_rows
     head = None
     if node_type in ("tinyint", "smallint", "int", "bigint"):
-        head = e_raw.limit(budget + 1).toPandas()
+        budget = DRIVER_EDGE_ROWS // 2 if symmetric else DRIVER_EDGE_ROWS
+        head = venue.driver_rows(e_raw, budget, "pagerank_portable")
     if head is not None and len(head) == 0:
         # empty edge list: both loop venues would divide by n = 0; the
         # rank frame over zero nodes is well-defined — return it directly
         return _empty_ranks(e_raw, F.lit(0).cast("bigint"))
     if (
         head is not None
-        and len(head) <= budget
         and not head["src"].isna().any()
         and not head["dst"].isna().any()
     ):

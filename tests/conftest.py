@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -7,6 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ecommerce_etl_pipeline_spark.operators import venue  # noqa: E402
 from ecommerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -24,3 +26,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def distributed_venue(monkeypatch):
+    """Context manager that forces every iterative operator onto its
+    distributed venue (the over-budget regime): inside it the driver-venue
+    probe declines every input without running an action."""
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as m:
+            m.setattr(venue, "driver_rows", lambda df, max_rows, op: None)
+            yield
+
+    return forced

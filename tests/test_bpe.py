@@ -53,26 +53,28 @@ def _ref_train(wc: dict[str, int], num_merges: int, min_pair_count: int = 2):
     return merges
 
 
-def test_bpe_train_matches_reference_on_real_corpus(spark):
+def test_bpe_train_matches_reference_on_real_corpus(spark, distributed_venue):
     """Covers BOTH strategy paths: the driver fast path (vocab under
     the budget — the default on this corpus) and the distributed merge
-    loop (forced via driver_vocab_rows=0) must produce the identical
+    loop (forced via distributed_venue) must produce the identical
     merge list, which must equal the pure-Python reference."""
     docs = load_table(spark, SF_SMOKE, "documents")
     wc = {r["w"]: r["cnt"] for r in word_counts(docs).collect()}
     got_driver = bpe_train(docs, num_merges=15)
-    got_dist = bpe_train(docs, num_merges=15, driver_vocab_rows=0)
+    with distributed_venue():
+        got_dist = bpe_train(docs, num_merges=15)
     want = _ref_train(wc, 15)
     assert got_driver == want, f"\ngot:  {got_driver}\nwant: {want}"
     assert got_dist == want
     assert len(want) == 15  # real corpus has plenty of repeated pairs
 
 
-def test_bpe_overlapping_runs_and_early_stop(spark):
+def test_bpe_overlapping_runs_and_early_stop(spark, distributed_venue):
     # "aaaa" x3: first merge is (a,a); greedy non-overlap gives [aa,aa,</w>]
     docs = spark.createDataFrame([(1, "aaaa aaaa aaaa")], "doc_id LONG, text STRING")
     # force the DISTRIBUTED loop so its greedy-merge edge cases stay covered
-    merges = bpe_train(docs, num_merges=10, driver_vocab_rows=0)
+    with distributed_venue():
+        merges = bpe_train(docs, num_merges=10)
     ref = _ref_train({"aaaa": 3}, 10)
     assert merges == ref
     assert bpe_train(docs, num_merges=10) == ref  # driver path agrees
@@ -83,7 +85,8 @@ def test_bpe_overlapping_runs_and_early_stop(spark):
     # a corpus with no repeated pair stops immediately
     unique = spark.createDataFrame([(1, "xy")], "doc_id LONG, text STRING")
     assert bpe_train(unique, num_merges=5) == []
-    assert bpe_train(unique, num_merges=5, driver_vocab_rows=0) == []
+    with distributed_venue():
+        assert bpe_train(unique, num_merges=5) == []
 
 
 def test_bpe_apply_matches_driver_encoder(spark):
@@ -104,7 +107,7 @@ def test_bpe_apply_matches_driver_encoder(spark):
         assert "".join(syms) == w + EOW  # lossless segmentation
 
 
-def test_bpe_paths_agree_on_empty_word_types(spark):
+def test_bpe_paths_agree_on_empty_word_types(spark, distributed_venue):
     """Doubled spaces produce the '' word type; both strategy paths (and
     bpe_encode) must treat it as [EOW] alone — a phantom '' symbol in the
     distributed path once made the trained merges depend on which path
@@ -116,4 +119,5 @@ def test_bpe_paths_agree_on_empty_word_types(spark):
     assert "" in wc  # the fixture really exercises the empty type
     want = _ref_train(wc, 5)
     assert bpe_train(docs, num_merges=5) == want
-    assert bpe_train(docs, num_merges=5, driver_vocab_rows=0) == want
+    with distributed_venue():
+        assert bpe_train(docs, num_merges=5) == want

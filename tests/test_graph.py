@@ -75,10 +75,10 @@ def _ref_pagerank_portable(edges, iterations=6, scale=10**12):
     return rank
 
 
-def test_pagerank_portable_exact_integer_parity(spark):
+def test_pagerank_portable_exact_integer_parity(spark, distributed_venue):
     """Both venues — the driver numpy loop (default for a graph this
-    small) and the distributed DataFrame loop (forced with a zero edge
-    budget) — must match the pure-Python reference BIT-EXACTLY: integer
+    small) and the distributed DataFrame loop (forced with
+    distributed_venue) — must match the pure-Python reference BIT-EXACTLY: integer
     arithmetic is order-independent, so the venue pick can never change a
     rank."""
     from ecommerce_etl_pipeline_spark.operators.graph import pagerank_portable
@@ -93,7 +93,8 @@ def test_pagerank_portable_exact_integer_parity(spark):
     got = {r["node"]: r["rank"] for r in res.collect()}
     assert got == want  # bit-exact, every node
 
-    res_d = pagerank_portable(df, iterations=6, driver_edge_rows=0)
+    with distributed_venue():
+        res_d = pagerank_portable(df, iterations=6)
     got_d = {r["node"]: r["rank"] for r in res_d.collect()}
     for _c in res_d.retained_caches:
         _c.unpersist(blocking=True)
@@ -115,7 +116,7 @@ def test_pagerank_portable_tracks_fp_variant(spark):
         assert abs(r - 0.25) < 1e-9, (v, r)
 
 
-def test_pagerank_portable_symmetric_all_venues_identical(spark):
+def test_pagerank_portable_symmetric_all_venues_identical(spark, distributed_venue):
     """symmetric=True over canonical (src < dst) undirected edges must be
     bit-identical to the directed form over forward+reversed, in BOTH
     venues (driver mirror via int64 concat; distributed mirror via
@@ -131,9 +132,8 @@ def test_pagerank_portable_symmetric_all_venues_identical(spark):
     assert res.retained_caches == []
     assert {r["node"]: r["rank"] for r in res.collect()} == want
 
-    res_d = pagerank_portable(
-        fwd, iterations=6, symmetric=True, driver_edge_rows=0
-    )  # distributed venue
+    with distributed_venue():
+        res_d = pagerank_portable(fwd, iterations=6, symmetric=True)
     got_d = {r["node"]: r["rank"] for r in res_d.collect()}
     for _c in res_d.retained_caches:
         _c.unpersist(blocking=True)
@@ -146,7 +146,7 @@ def test_pagerank_portable_symmetric_all_venues_identical(spark):
     assert {r["node"]: r["rank"] for r in res_dir.collect()} == want
 
 
-def test_pagerank_portable_symmetric_rejects_noncanonical(spark):
+def test_pagerank_portable_symmetric_rejects_noncanonical(spark, distributed_venue):
     """Reversed duplicates or self-loops under symmetric=True would
     double-count contributions after mirroring — the driver venue must
     refuse rather than silently corrupt ranks."""
@@ -162,10 +162,10 @@ def test_pagerank_portable_symmetric_rejects_noncanonical(spark):
         pagerank_portable(loops, symmetric=True)
     # the distributed venue (over-budget path) must refuse the same inputs
     # it would otherwise silently double-count post-mirror
-    with pytest.raises(ValueError, match="canonical"):
-        pagerank_portable(bad, symmetric=True, driver_edge_rows=0)
-    with pytest.raises(ValueError, match="canonical"):
-        pagerank_portable(loops, symmetric=True, driver_edge_rows=0)
+    with distributed_venue(), pytest.raises(ValueError, match="canonical"):
+        pagerank_portable(bad, symmetric=True)
+    with distributed_venue(), pytest.raises(ValueError, match="canonical"):
+        pagerank_portable(loops, symmetric=True)
 
 
 def test_driver_loop_bincount_scatter_is_bit_exact():
@@ -218,7 +218,7 @@ def test_pagerank_portable_dedupes_raw_input_in_driver_venue(spark):
     ).collect()
     assert key(clean_d) == key(dirty_d) == key(clean)
 
-def test_pagerank_portable_symmetric_rejects_null_endpoints_both_venues(spark):
+def test_pagerank_portable_symmetric_rejects_null_endpoints_both_venues(spark, distributed_venue):
     """A NULL endpoint is non-canonical (src < dst is not TRUE) — both
     venues must refuse it identically; the distributed guard must be
     NULL-aware (a plain src >= dst filter lets NULLs through)."""
@@ -229,21 +229,23 @@ def test_pagerank_portable_symmetric_rejects_null_endpoints_both_venues(spark):
     nulled = spark.createDataFrame([(1, 2), (2, 3), (1, None)], "src LONG, dst LONG")
     with pytest.raises(ValueError, match="canonical"):
         pagerank_portable(nulled, symmetric=True)  # driver venue
-    with pytest.raises(ValueError, match="canonical"):
-        pagerank_portable(nulled, symmetric=True, driver_edge_rows=0)  # distributed
+    with distributed_venue(), pytest.raises(ValueError, match="canonical"):
+        pagerank_portable(nulled, symmetric=True)
 
 
-def test_pagerank_empty_and_single_node_graphs(spark):
+def test_pagerank_empty_and_single_node_graphs(spark, distributed_venue):
     """n = 0 must return an empty (node, rank) frame in every venue (was a
     ZeroDivisionError in the distributed paths); a single self-edge node
     keeps the whole rank mass."""
     from ecommerce_etl_pipeline_spark.operators.graph import pagerank_portable
 
     empty = spark.createDataFrame([], "src LONG, dst LONG")
+    with distributed_venue():
+        empty_dist = pagerank_portable(empty)
     for out in (
         pagerank(empty),
         pagerank_portable(empty),
-        pagerank_portable(empty, driver_edge_rows=0),  # distributed venue
+        empty_dist,
         pagerank_portable(
             spark.createDataFrame([], "src STRING, dst STRING")
         ),  # non-integral ids skip the driver venue entirely
@@ -257,7 +259,7 @@ def test_pagerank_empty_and_single_node_graphs(spark):
     assert rows[0]["rank"] >= 10**12 - 10  # all mass, minus truncation
 
 
-def test_pagerank_portable_nonlong_and_null_ids_match_distributed(spark):
+def test_pagerank_portable_nonlong_and_null_ids_match_distributed(spark, distributed_venue):
     """Driver venue must preserve the input id type, and NULL endpoints in
     directed mode must take the distributed venue (NULL = dangling node id)
     rather than crash on NaN indices — venues compared where both run."""
@@ -266,7 +268,8 @@ def test_pagerank_portable_nonlong_and_null_ids_match_distributed(spark):
     edges = [(1, 2), (2, 3), (3, 1), (1, 3)]
     ints = spark.createDataFrame(edges, "src INT, dst INT")
     drv = pagerank_portable(ints, iterations=4)
-    dist = pagerank_portable(ints, iterations=4, driver_edge_rows=0)
+    with distributed_venue():
+        dist = pagerank_portable(ints, iterations=4)
     assert [(f.name, f.dataType) for f in drv.schema] == [
         (f.name, f.dataType) for f in dist.schema
     ]
@@ -284,5 +287,6 @@ def test_pagerank_portable_nonlong_and_null_ids_match_distributed(spark):
         [(1, 2), (2, 3), (None, 3), (2, None)], "src LONG, dst LONG"
     )
     via_probe = pagerank_portable(nulled, iterations=3)
-    via_dist = pagerank_portable(nulled, iterations=3, driver_edge_rows=0)
+    with distributed_venue():
+        via_dist = pagerank_portable(nulled, iterations=3)
     assert key(via_probe) == key(via_dist)

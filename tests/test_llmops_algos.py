@@ -11,21 +11,27 @@ from ecommerce_etl_pipeline_spark.llmops import curation, similarity
 from ecommerce_etl_pipeline_spark.llmops.clustering import connected_components, ivf_topk
 from ecommerce_etl_pipeline_spark.sources.io import load_table
 
-# threshold high -> driver union-find fast path; 0 -> distributed label
-# propagation. Same semantics, both must pass everything.
-BOTH_PATHS = pytest.mark.parametrize("small_edges", [2_000_000, 0], ids=["local", "distributed"])
+@pytest.fixture(params=["local", "distributed"])
+def cc_path(request, distributed_venue):
+    """Driver union-find ("local") or distributed label propagation. Same
+    semantics, both must pass everything."""
+    if request.param == "local":
+        yield
+    else:
+        with distributed_venue():
+            yield
+
+
+BOTH_PATHS = pytest.mark.usefixtures("cc_path")
 
 
 @BOTH_PATHS
-def test_connected_components_handcrafted(spark, small_edges):
+def test_connected_components_handcrafted(spark):
     # components: {1,2,3,4} (chain), {10,11}, pair-only {20,21}
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20)], ["doc1", "doc2"]
     )
-    got = {
-        (r.node, r.component)
-        for r in connected_components(edges, small_graph_edges=small_edges).collect()
-    }
+    got = {(r.node, r.component) for r in connected_components(edges).collect()}
     assert got == {
         (1, 1), (2, 1), (3, 1), (4, 1),
         (10, 10), (11, 10),
@@ -34,11 +40,34 @@ def test_connected_components_handcrafted(spark, small_edges):
 
 
 @BOTH_PATHS
-def test_connected_components_converges_on_cycle(spark, small_edges):
+def test_connected_components_converges_on_cycle(spark):
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], ["doc1", "doc2"])
-    rows = connected_components(edges, small_graph_edges=small_edges).collect()
+    rows = connected_components(edges).collect()
     assert {r.component for r in rows} == {1}
     assert {r.node for r in rows} == {1, 2, 3}
+
+
+@BOTH_PATHS
+def test_connected_components_null_endpoints(spark):
+    """A NULL endpoint joins no component and yields one (NULL, NULL) row,
+    in the input id type, on both venues. Ids past 2**53 beside a NULL stay
+    exact (pandas widens a nullable bigint column to float64)."""
+    edges = spark.createDataFrame(
+        [(1, 2), (None, 3), (3, 4)], "doc1 LONG, doc2 LONG"
+    )
+    out = connected_components(edges)
+    assert [f.dataType.simpleString() for f in out.schema] == ["bigint", "bigint"]
+    rows = [(r.node, r.component) for r in out.collect()]
+    assert sorted(rows, key=str) == sorted(
+        [(1, 1), (2, 1), (3, 3), (4, 3), (None, None)], key=str
+    )
+
+    big = 2**60 + 1
+    wide = spark.createDataFrame(
+        [(big, big + 2), (None, big + 4)], "doc1 LONG, doc2 LONG"
+    )
+    rows = {(r.node, r.component) for r in connected_components(wide).collect()}
+    assert rows == {(big, big), (big + 2, big), (big + 4, big + 4), (None, None)}
 
 
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
@@ -660,7 +689,9 @@ def test_literal_centroid_kernels_agree_on_null_and_ragged_rows(spark):
         spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
-def test_kmeans_portable_trajectory_identical_across_kernels(spark, sf_dir):
+def test_kmeans_portable_trajectory_identical_across_kernels(
+    spark, sf_dir, distributed_venue
+):
     """r14 optimization pin: kmeans_train_portable produces the IDENTICAL
     centroid matrix (exact float equality — integer-nano updates leave no
     FP slack) whether each iteration assigns via the interpreted literal-
@@ -672,14 +703,11 @@ def test_kmeans_portable_trajectory_identical_across_kernels(spark, sf_dir):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # driver_cells=0 forces the DISTRIBUTED venue (the 100 TB regime);
+    # distributed_venue forces the DISTRIBUTED venue (the 100 TB regime);
     # the default takes the driver numpy venue at fixture size
-    jvm = kmeans_train_portable(
-        emb, k=16, iterations=5, kernel="jvm", driver_cells=0
-    )
-    arrow = kmeans_train_portable(
-        emb, k=16, iterations=5, kernel="arrow", driver_cells=0
-    )
+    with distributed_venue():
+        jvm = kmeans_train_portable(emb, k=16, iterations=5, kernel="jvm")
+        arrow = kmeans_train_portable(emb, k=16, iterations=5, kernel="arrow")
     driver = kmeans_train_portable(emb, k=16, iterations=5)
     assert jvm == arrow
     assert jvm == driver
@@ -1393,13 +1421,12 @@ def test_logreg_trainer_hashed_d64_matches_pure_python_replay(spark):
     assert w == ref
 
 
-def test_logreg_trainer_driver_venue_identical_to_distributed(spark):
+def test_logreg_trainer_driver_venue_identical_to_distributed(spark, distributed_venue):
     """r15: the driver GD venue (numpy loop over one bounded toPandas
     probe) must be BIT-identical to the distributed venue at BOTH feature
     widths (wide-agg d=5 and array-venue d=64) — the kmeans/pagerank
-    venue-parity discipline applied to the trainer. driver_cells=0
-    disables the probe outright (no k-floor leak), forcing the
-    distributed loop on the same corpus."""
+    venue-parity discipline applied to the trainer. distributed_venue
+    forces the distributed loop on the same corpus."""
     from ecommerce_etl_pipeline_spark.llmops import classifier
 
     texts = [
@@ -1417,39 +1444,68 @@ def test_logreg_trainer_driver_venue_identical_to_distributed(spark):
         w_driver, f1 = classifier.train_linear_scorer(
             docs, iterations=5, features=features
         )
-        w_dist, f2 = classifier.train_linear_scorer(
-            docs, iterations=5, features=features, driver_cells=0
-        )
+        with distributed_venue():
+            w_dist, f2 = classifier.train_linear_scorer(
+                docs, iterations=5, features=features
+            )
         for c in f1.retained_caches + f2.retained_caches:
             c.unpersist()
         assert w_driver == w_dist, f"venue divergence at features={features}"
 
 
-def test_logreg_driver_venue_needs_int64_safe_row_count(spark, monkeypatch):
+def test_logreg_driver_venue_needs_int64_safe_row_count(
+    spark, monkeypatch, distributed_venue
+):
     """The driver GD venue sums gradients in int64, so it is taken only
     while rows × NANO < 2**62; past that bound the trainer must fall back
     to the distributed loop (decimal sums) and give its answer."""
     from ecommerce_etl_pipeline_spark.llmops import classifier
+    from ecommerce_etl_pipeline_spark.operators import venue
 
     limit = 2**62 // classifier.NANO
-    assert classifier._gd_sums_fit_int64(limit)
-    assert not classifier._gd_sums_fit_int64(limit + 1)
+    assert venue.fits_int64_sum(limit, classifier.NANO)
+    assert not venue.fits_int64_sum(limit + 1, classifier.NANO)
 
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{j}" for j in range(1 + 3 * i))) for i in range(10)],
         "doc_id LONG, text STRING",
     )
-    w_dist, f1 = classifier.train_linear_scorer(docs, iterations=3, driver_cells=0)
+    with distributed_venue():
+        w_dist, f1 = classifier.train_linear_scorer(docs, iterations=3)
 
     def driver_loop(*args, **kwargs):
         raise AssertionError("driver venue taken past the int64 bound")
 
-    monkeypatch.setattr(classifier, "_gd_sums_fit_int64", lambda n_rows: False)
+    monkeypatch.setattr(venue, "fits_int64_sum", lambda rows, max_abs_term: False)
     monkeypatch.setattr(classifier, "_driver_gd_loop", driver_loop)
     w_fallback, f2 = classifier.train_linear_scorer(docs, iterations=3)
     for c in f1.retained_caches + f2.retained_caches:
         c.unpersist()
     assert w_fallback == w_dist
+
+
+def test_kmeans_driver_venue_needs_int64_safe_sums(
+    spark, monkeypatch, distributed_venue
+):
+    """The driver k-means venue sums nano-quantized coordinates in int64;
+    when venue.fits_int64_sum refuses, the trainer must skip the driver
+    loop and give the distributed centroids."""
+    from ecommerce_etl_pipeline_spark.llmops import clustering
+    from ecommerce_etl_pipeline_spark.operators import venue
+
+    pts = spark.createDataFrame(
+        [(i, [float(i % 5), float(i * 7 % 3) / 2.0]) for i in range(12)],
+        "vec_id INT, embedding ARRAY<DOUBLE>",
+    )
+    with distributed_venue():
+        want = clustering.kmeans_train_portable(pts, k=3, iterations=3)
+
+    def driver_loop(*args, **kwargs):
+        raise AssertionError("driver venue taken past the int64 bound")
+
+    monkeypatch.setattr(venue, "fits_int64_sum", lambda rows, max_abs_term: False)
+    monkeypatch.setattr(clustering, "_driver_kmeans_loop_portable", driver_loop)
+    assert clustering.kmeans_train_portable(pts, k=3, iterations=3) == want
 
 
 def test_hashed_featurize_stages_bucket_array_single_md5_site(spark):

@@ -86,7 +86,7 @@ def test_pricing_pipeline(spark):
     assert out["fact_competitor_stats"].count() > 0
 
 
-def test_curate_cache_contract_releases_everything(spark):
+def test_curate_cache_contract_releases_everything(spark, distributed_venue):
     """CACHE CONTRACT (curation.py / clustering.py): every frame a curate()
     call retains is listed in result.retained_caches, and unpersisting them
     adds ZERO persistent RDDs beyond the suite's baseline — the storage-tab
@@ -126,7 +126,8 @@ def test_curate_cache_contract_releases_everything(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "doc1 LONG, doc2 LONG"
     )
-    comp = connected_components(pairs, small_graph_edges=0)
+    with distributed_venue():
+        comp = connected_components(pairs)
     got = {(r.node, r.component) for r in comp.collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     assert comp.retained_caches == [comp]
