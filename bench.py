@@ -174,9 +174,9 @@ def main() -> None:
             t0 = time.perf_counter()
             queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             times[name] = round(time.perf_counter() - t0, 3)
-            # reps 1-2 isolate queries (a retained cache — see curate's
-            # CACHE CONTRACT — must not donate warm blocks to the queries
-            # timed after it). Rep 0 does NOT clear between queries: the
+            # reps 1-2 isolate queries (a cache an operator persisted —
+            # operators/caches.py — must not donate warm blocks to the
+            # queries timed after it). Rep 0 does NOT clear between queries: the
             # round-1/2 protocol didn't either, and `value` must stay
             # comparable to those records.
             if rep > 0:

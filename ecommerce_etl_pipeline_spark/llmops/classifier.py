@@ -9,8 +9,7 @@ Design for 100 TB:
   combinable aggregate to a SINGLE row of d gradient sums — the driver
   holds d integers (the kmeans-centroid class of bounded statistic), so
   nothing driver-side grows with the corpus;
-- the feature frame is cached across iterations (optional — without the
-  cache each round re-scans, same semantics);
+- the feature frame is materialized once and reused by every iteration;
 - scoring/eval is one narrow pass with the weights baked in as literals.
 
 Bit-portability (the pagerank/kmeans doctrine, no transcendentals):
@@ -43,7 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ecommerce_etl_pipeline_spark.llmops import text
-from ecommerce_etl_pipeline_spark.operators import venue
+from ecommerce_etl_pipeline_spark.operators import caches, venue
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 #: nano quantization scale for gradient sums / weights
@@ -307,16 +306,14 @@ def train_linear_scorer(
     iterations: int = 12,
     lr_num: int = 16,
     lr_den: int = 1,
-    cache: bool = True,
     features: str = "quality",
 ) -> tuple[list[int], DataFrame]:
     """Gradient-descent training of the linear quality scorer; returns
-    (weights in integer nanos, the cached feature frame for reuse —
-    listed caches on ``feats.retained_caches``). The loop is d-agnostic
-    (d is read off the feature frame), so ``features="hashed"`` trains
-    the d=64 hashed-unigram geometry with the identical one-aggregate-
-    per-round shape — only the aggregate ROW widens (d gradient sums),
-    never the shuffle row count.
+    (weights in integer nanos, the materialized feature frame for reuse).
+    The loop is d-agnostic (d is read off the feature frame), so
+    ``features="hashed"`` trains the d=64 hashed-unigram geometry with
+    the identical one-aggregate-per-round shape — only the aggregate ROW
+    widens (d gradient sums), never the shuffle row count.
 
     Per iteration: ONE aggregate over the corpus producing d quantized
     gradient sums (map-side combined; the exchange carries one d-long row
@@ -337,29 +334,22 @@ def train_linear_scorer(
         w = _driver_gd_loop(
             m[0], m[1], iterations=iterations, lr_num=lr_num, lr_den=lr_den
         )
-        if cache:
-            # plain cache() (not localCheckpoint): no GD rounds re-analyze
-            # the lineage in this venue, so the checkpoint's re-analysis
-            # win is moot and cache keeps fault tolerance + a working
-            # unpersist() for the downstream consumers (evaluate_scorer/
-            # calibration — lazily materialized only if actually scanned)
-            feats = feats.cache()
-        feats.retained_caches = [feats] if cache else []
-        return w, feats
-    if cache:
-        # localCheckpoint instead of cache() — same single
-        # materialization and storage class (MEMORY_AND_DISK), but the GD
-        # rounds then plan against a LogicalRDD leaf instead of
-        # re-analyzing the full featurize lineage (59 filter-HOF trees at
-        # d=64) once per round — measured ~2.2x on the 12-round loop at
-        # sf0.1 (the bpe_train/pagerank lineage-cut doctrine applied to
-        # the trainer). Trade-off, as there: the materialized blocks are
-        # not fault-tolerant (executor loss fails the job instead of
-        # recomputing) and DataFrame.unpersist() on the handle is a no-op
-        # — blocks free when the frame is GC'd; retained_caches keeps the
-        # handle so callers' release loops stay correct either way.
-        feats = feats.localCheckpoint(eager=True)
-    feats.retained_caches = [feats] if cache else []
+        # plain cache (not localCheckpoint): no GD rounds re-analyze the
+        # lineage in this venue, so the checkpoint's re-analysis win is
+        # moot and the cache keeps fault tolerance for the downstream
+        # consumers (evaluate_scorer/calibration — lazily materialized
+        # only if actually scanned)
+        return w, caches.persist(feats)
+    # localCheckpoint instead of a cache — same single materialization
+    # and storage class (MEMORY_AND_DISK), but the GD rounds then plan
+    # against a LogicalRDD leaf instead of re-analyzing the full featurize
+    # lineage (59 filter-HOF trees at d=64) once per round — measured
+    # ~2.2x on the 12-round loop at sf0.1 (the bpe_train/pagerank
+    # lineage-cut doctrine applied to the trainer). Trade-off, as there:
+    # the materialized blocks are not fault-tolerant (executor loss fails
+    # the job instead of recomputing) and DataFrame.unpersist() on the
+    # handle is a no-op — blocks free when the frame is GC'd.
+    feats = feats.localCheckpoint(eager=True)
     n_rows = feats.count()
     w = [0] * d
     if n_rows == 0:

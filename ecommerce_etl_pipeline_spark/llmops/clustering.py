@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ecommerce_etl_pipeline_spark.operators import venue
+from ecommerce_etl_pipeline_spark.operators import caches, venue
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 
@@ -91,13 +91,8 @@ def connected_components(
     cache() for checkpoint every few rounds); convergence is detected from
     a MONOTONE invariant — labels only ever decrease, so sum(component) is
     stationary exactly at the fixpoint — one cheap aggregate per round
-    instead of a changed-rows self-join.
-
-    CACHE CONTRACT: the large-graph branch returns a CACHED frame (already
-    materialized by the convergence aggregate — unpersisting it before the
-    caller reads would replay the whole iteration). It is listed on the
-    returned DataFrame as ``df.retained_caches``; unpersist when done. The
-    small-graph branch retains nothing (empty list).
+    instead of a changed-rows self-join. The returned labels stay cached
+    (materialized by the convergence aggregate) for the caller's scope.
     """
     from pyspark.sql.types import IntegralType
 
@@ -115,25 +110,20 @@ def connected_components(
             schema = pairs.select(
                 F.col(src).alias("node"), F.col(src).alias("component")
             ).schema
-            out = spark.createDataFrame(_union_find_components(zip(a, b)), schema)
-            out.retained_caches = []
-            return out
+            return spark.createDataFrame(_union_find_components(zip(a, b)), schema)
 
-    directed = directed.cache()
+    directed = caches.persist(directed)
 
-    edges = (
-        directed.union(directed.select(F.col("b"), F.col("a")))
-        .distinct()
-        .cache()
+    edges = caches.persist(
+        directed.union(directed.select(F.col("b"), F.col("a"))).distinct()
     )
     edges.count()
     directed.unpersist()
 
-    labels = (
+    labels = caches.persist(
         edges.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .cache()
     )
     # decimal(38,0) running sum: overflow-proof however many nodes
     total = labels.agg(
@@ -145,15 +135,13 @@ def connected_components(
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
+        new_labels = caches.persist(
+            labels.join(neighbor_min, "node", "left").select(
                 "node",
                 F.least(
                     "component", F.coalesce("nbr_component", F.col("component"))
                 ).alias("component"),
             )
-            .cache()
         )
         new_total = new_labels.agg(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
@@ -164,7 +152,6 @@ def connected_components(
             break
         total = new_total
     edges.unpersist()
-    labels.retained_caches = [labels]
     return labels
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ecommerce_etl_pipeline_spark.llmops import dedup, text
 from ecommerce_etl_pipeline_spark.llmops.clustering import connected_components
+from ecommerce_etl_pipeline_spark.operators import caches
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 
@@ -97,7 +98,6 @@ def curate(
     portable_minhash: bool = False,
     use_ppjoin: bool = False,
     exact_hashed: bool = False,
-    cache_exact: bool = True,
     classifier_weights: list[int] | None = None,
     classifier_threshold: float = 0.5,
 ) -> DataFrame:
@@ -141,16 +141,6 @@ def curate(
     (all three faces pinned at a calibration-derived threshold in
     tests/test_streaming.py). No rounding hazard: the fold-form score is
     bit-portable by construction, so the comparison is engine-invariant.
-
-    CACHE CONTRACT: with ``cache_exact=True`` the deduped intermediate is
-    cached (it feeds both candidate generation and the final anti-join —
-    measured ~2 s faster at sf0.1 than recomputing the narrow lineage) and
-    stays resident after the result materializes. Every frame this call
-    cached is exposed on the returned DataFrame as ``df.retained_caches``;
-    unpersist them (or ``spark.catalog.clearCache()``) when done —
-    tests/test_pipelines.py asserts the release leaves zero persistent
-    RDDs. ``cache_exact=False`` trades one extra execution of the narrow
-    filter+groupBy lineage for zero retained storage.
     """
     if use_ppjoin and use_minhash:
         # use_minhash defaults True; a caller opting into the exact PPJoin
@@ -188,16 +178,15 @@ def curate(
     # Hash-aggregate min_by on the md5, not a window: partial (map-side)
     # aggregation collapses duplicates BEFORE the shuffle — at 100 TB the
     # exchange carries one row per distinct text per input partition — and
-    # there is no per-partition sort. Optionally cached: feeds both the
-    # candidate-pair generation (materialized during component resolution)
-    # and the final anti-join (see CACHE CONTRACT above).
-    exact = (
+    # there is no per-partition sort. Cached: feeds both the candidate-pair
+    # generation (materialized during component resolution) and the final
+    # anti-join — measured ~2 s faster at sf0.1 than recomputing the
+    # narrow lineage.
+    exact = caches.persist(
         filtered.groupBy(F.md5(t).alias("_h"))
         .agg(F.min_by(F.struct(id_col, text_col), F.col(id_col)).alias("_doc"))
         .select("_doc.*")
     )
-    if cache_exact:
-        exact = exact.cache()
 
     # 4: near-dup — candidate pairs -> clusters -> keep each cluster's
     # representative (min id). Non-clustered docs pass through untouched.
@@ -209,29 +198,20 @@ def curate(
             exact, id_col, text_col, portable=portable_minhash
         )
         pairs = cand.filter(F.col("jaccard") >= jaccard_threshold)
-        pair_caches = getattr(cand, "retained_caches", [])
     elif use_ppjoin:
         pairs = dedup.ppjoin_pairs(
             exact, id_col, text_col,
             threshold=jaccard_threshold, hashed=exact_hashed,
         )
-        pair_caches = getattr(pairs, "retained_caches", [])
     else:
         pairs = dedup.jaccard_similarity_join(
             exact, id_col, text_col,
             threshold=jaccard_threshold, hashed=exact_hashed,
         )
-        pair_caches = getattr(pairs, "retained_caches", [])
     components = connected_components(pairs)
     drop = components.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
-    out = exact.join(drop, id_col, "left_anti").select(
+    return exact.join(drop, id_col, "left_anti").select(
         id_col, text_col, text.token_count(t).alias("n_tokens")
     )
-    out.retained_caches = (
-        ([exact] if cache_exact else [])
-        + pair_caches
-        + getattr(components, "retained_caches", [])
-    )
-    return out

@@ -18,6 +18,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ecommerce_etl_pipeline_spark.operators import caches
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 MERSENNE_31 = 2147483647  # 2^31 - 1, prime
@@ -198,7 +199,7 @@ def minhash_candidate_pairs(
     # arrays once measured ~15% faster end-to-end at sf0.1 — so the cache
     # is conditional on the hash cost, like a join strategy is on size.
     if portable:
-        hashes_df = hashes_df.persist()
+        hashes_df = caches.persist(hashes_df)
 
     # Signature venue is STATISTICS-DRIVEN (SIG_AGG_MIN_PLAN_BYTES):
     # small corpora keep the per-row HOF fold (no exchange, low fixed
@@ -256,7 +257,7 @@ def minhash_candidate_pairs(
 
     # banded is read by both join sides; caching stops the signature
     # aggregate (and its posting explode) from running twice.
-    banded = banded.cache()
+    banded = caches.persist(banded)
     # corpus-sized self-join: unhinted — banded is CACHED, so the optimizer
     # sees its exact materialized size and broadcasts only while the band
     # table genuinely fits, flipping to a shuffle join as the corpus grows
@@ -288,12 +289,7 @@ def minhash_candidate_pairs(
     verified = cand.join(h1, "doc1").join(h2, "doc2")
     inter = F.size(F.array_intersect("h1", "h2")).cast("double")
     union = (F.size("h1") + F.size("h2") - inter).cast("double")
-    out = verified.select("doc1", "doc2", (inter / union).alias("jaccard"))
-    # CACHE CONTRACT (see curation.curate): the banded rows (and in
-    # portable mode the shingle-hash arrays) stay resident after the
-    # result materializes; listed for the caller to release.
-    out.retained_caches = [banded] + ([hashes_df] if portable else [])
-    return out
+    return verified.select("doc1", "doc2", (inter / union).alias("jaccard"))
 
 
 def winnow_overlap_pairs(
@@ -339,12 +335,13 @@ def winnow_overlap_pairs(
     # materialization barrier Catalyst inlines the whole winnow HOF expression
     # into each — and the free-variable re-evaluation makes that O(n²·k) per
     # document (observed: 500 docs hang >9 min uncached vs 4 s cached).
-    fps = kg.select(
-        "doc_id", text_mod.winnow_fingerprints(F.col("kg"), w).alias("fps")
-    ).cache()
-    inv = fps.select(
-        "doc_id", F.size("fps").alias("n_fps"), F.explode("fps").alias("fp")
-    ).cache()  # feeds the doc-frequency pass and both self-join sides
+    fps = caches.persist(
+        kg.select("doc_id", text_mod.winnow_fingerprints(F.col("kg"), w).alias("fps"))
+    )
+    # feeds the doc-frequency pass and both self-join sides
+    inv = caches.persist(
+        fps.select("doc_id", F.size("fps").alias("n_fps"), F.explode("fps").alias("fp"))
+    )
     rare = inv.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= max_df
     )
@@ -369,16 +366,12 @@ def winnow_overlap_pairs(
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )
-    out = pairs.select(
+    return pairs.select(
         "doc1",
         "doc2",
         "shared_fps",
         (F.col("shared_fps") / F.least("n1", "n2")).alias("overlap"),
     )
-    # CACHE CONTRACT (see curation.curate): both load-bearing caches are
-    # listed for the caller to release after materializing.
-    out.retained_caches = [fps, inv]
-    return out
 
 
 def cross_split_contamination(
@@ -540,12 +533,10 @@ def bloom_decontaminate(
     train = ensure_parallelism(train)
     # cached: this eval-sized frame feeds THREE consumers (the sizing
     # count, the bitmap build, the exact-verify broadcast) — without the
-    # cache each one re-runs the eval explode+distinct shuffle. Exposed
-    # via retained_caches (the curate() contract) so callers can release.
-    ev_grams = (
+    # cache each one re-runs the eval explode+distinct shuffle.
+    ev_grams = caches.persist(
         explode_nonnull(eval_docs, shingle_strings(F.col(text_col), shingle_k), "g")
         .distinct()
-        .cache()
     )
     # bounded build-side count (eval-corpus-scale aggregate, same class as
     # the j11 bloom sizing count) — sizes the bitmap to the real key count
@@ -561,13 +552,11 @@ def bloom_decontaminate(
         "g",
         F.col(id_col).alias("train_id"),
     ).filter(might_contain(words, num_bits, F.col("g")))
-    out = (
+    return (
         train_grams.join(F.broadcast(ev_grams), "g", "semi")
         .groupBy("train_id")
         .agg(F.count(F.lit(1)).alias("n_hit_ngrams"))
     )
-    out.retained_caches = [ev_grams]
-    return out
 
 
 def source_overlap_matrix(
@@ -769,7 +758,7 @@ def simhash_near_pairs(
     # sides share one fold pass instead of recomputing it per side (the
     # minhash banded-rows doctrine; cached size stats also keep the join
     # strategy choice honest, see minhash_candidate_pairs)
-    sh = sh.cache()
+    sh = caches.persist(sh)
     # block layout: 64 bits over (max_hamming + 3) blocks, wider blocks
     # first; each 3-block combo packs (combo_id, b_i, b_j, b_k) into one
     # bigint with 16-bit fields (block width <= 16 since blocks >= 4;
@@ -809,12 +798,9 @@ def simhash_near_pairs(
         .dropDuplicates(["doc1", "doc2"])
     )
     hamming = F.expr("bit_count(sh1 ^ sh2)")
-    out = cand.select("doc1", "doc2", hamming.alias("hamming")).filter(
+    return cand.select("doc1", "doc2", hamming.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
     )
-    # CACHE CONTRACT (see curation.curate): listed for the caller to release
-    out.retained_caches = [sh]
-    return out
 
 
 def jaccard_similarity_join(
@@ -886,7 +872,6 @@ def jaccard_similarity_join(
     # explode_nonnull: a plain explode would re-run the whole shingle pass
     # as an inferred pushed-down filter — measured 2.2x on this join
     inv = explode_nonnull(sets, F.col("hashes"), "h", "doc_id", "set_size")
-    capped_cache = []
     if max_df is not None:
         # lower-bound accounting (see docstring): cap the INDEX, keep the
         # FULL set_size already carried on each row. The df aggregate and
@@ -894,9 +879,8 @@ def jaccard_similarity_join(
         # self-join below, no extra shuffle key enters the plan. ``inv``
         # is cached because it feeds BOTH the df aggregate and the capped
         # join back — uncached, the tokenize+shingle+explode lineage would
-        # execute twice (released via retained_caches, curate() contract).
-        inv = inv.cache()
-        capped_cache = [inv]
+        # execute twice.
+        inv = caches.persist(inv)
         dfc = inv.groupBy("h").agg(F.count(F.lit(1)).alias("_df"))
         inv = inv.join(dfc.filter(F.col("_df") <= max_df).select("h"), "h")
     # JOIN STRATEGY (all dedup self-joins): UNHINTED, on purpose. Both
@@ -936,11 +920,9 @@ def jaccard_similarity_join(
         .agg(F.count(F.lit(1)).alias("c"))
     )
     jac = F.col("c") / (F.col("n1") + F.col("n2") - F.col("c"))
-    out = inter.select("doc1", "doc2", jac.alias("jaccard")).filter(
+    return inter.select("doc1", "doc2", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
-    out.retained_caches = capped_cache
-    return out
 
 
 def ppjoin_candidates(
@@ -962,7 +944,7 @@ def ppjoin_candidates(
     Returns ``(cand, ordered)``: distinct (doc1, doc2) candidate pairs
     surviving the prefix + length + positional filters, and the CACHED
     per-doc (df asc, shingle asc)-ordered shingle arrays the verification
-    stage reuses (caller owns the release).
+    stage reuses (released by the caller's cache scope).
     """
     docs = ensure_parallelism(docs)
     t = float(threshold)
@@ -977,13 +959,12 @@ def ppjoin_candidates(
     # (df asc, shingle asc) canonical order, materialized once per doc;
     # sort_array canonicalizes collect_list's arbitrary arrival order, so
     # the operator is partitioning-deterministic
-    ordered = (
+    ordered = caches.persist(
         inv.join(dfc, "h")
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list(F.struct("df", "h"))).alias("arr"))
         .withColumn("n", F.size("arr"))
         .withColumn("arr", F.transform("arr", lambda x: x["h"]))
-        .cache()
     )
     plen = (
         F.col("n")
@@ -1053,8 +1034,7 @@ def ppjoin_pairs(
     Scale shape: df aggregate (map-side combinable) + df join, both keyed
     on the shingle — the same key as the prefix self-join; one shuffle on
     doc_id builds the (df, shingle)-sorted arrays, cached because the
-    prefix explode and both verification sides consume them (listed on
-    ``retained_caches``, the curate() release contract). Fan-out =
+    prefix explode and both verification sides consume them. Fan-out =
     sum over shingles of prefix-df^2, where prefix-df counts only docs
     holding the shingle among their rarest ~(1-t) fraction. Measured on
     the Zipf fixture vs the plain index join: see SCALING.md round-6.
@@ -1070,10 +1050,7 @@ def ppjoin_pairs(
         docs, id_col, text_col,
         threshold=threshold, shingle_k=shingle_k, hashed=hashed,
     )
-    out = ppjoin_verify(cand, ordered, threshold=threshold)
-    # CACHE CONTRACT (see curation.curate): listed for the caller to release
-    out.retained_caches = [ordered]
-    return out
+    return ppjoin_verify(cand, ordered, threshold=threshold)
 
 
 def ppjoin_verify(
@@ -1240,15 +1217,13 @@ def semantic_dedup(
     # CACHED: the seed assignment is the corpus-dominant per-row pass, and
     # this frame feeds THREE consumers (both pair-join sides and the final
     # keep/drop join) — uncached, each re-folds every vector against all
-    # n_seeds centroids. Rows are thin (id, cluster, vec, nrm); released
-    # via retained_caches. kernel="arrow" (r14) runs the vectorized
-    # bit-identical assignment kernel instead of the interpreted HOF fold.
-    assigned = (
+    # n_seeds centroids. Rows are thin (id, cluster, vec, nrm).
+    # kernel="arrow" (r14) runs the vectorized bit-identical assignment
+    # kernel instead of the interpreted HOF fold.
+    assigned = caches.persist(
         assign_to_seeds(
             vectors, seeds, id_col=id_col, vec_col=vec_col, kernel=kernel
-        )
-        .select("id", "cluster", "vec", norm(F.col("vec")).alias("nrm"))
-        .cache()
+        ).select("id", "cluster", "vec", norm(F.col("vec")).alias("nrm"))
     )
     # within-cluster candidate pairs: the self-join key IS the cluster —
     # unhinted per the JOIN STRATEGY doctrine (both sides corpus-sized)
@@ -1271,10 +1246,8 @@ def semantic_dedup(
         F.col("node").alias("id"), F.lit(False).alias("kept")
     )
     out = assigned.select("id", "cluster").join(dropped, "id", "left")
-    result = out.select(
+    return out.select(
         F.col("id").alias(id_col),
         "cluster",
         F.coalesce(F.col("kept"), F.lit(True)).alias("kept"),
     )
-    result.retained_caches = [assigned] + getattr(comps, "retained_caches", [])
-    return result

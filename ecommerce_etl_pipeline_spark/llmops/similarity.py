@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ecommerce_etl_pipeline_spark.operators import caches
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 
@@ -884,14 +885,12 @@ def mmr_diversify_unrolled(
     orderBy/limit/unionByName/left_anti lineage over the previous steps,
     so Catalyst re-plans an exponentially-wider tree every step: ~9s of
     planning constant for a 20-row pool (SCALING.md round-10 close). Not
-    registered; the bounded-state venue is the production plan. Caller
-    owns the retained caches (``.retained_caches`` on the result)."""
+    registered; the bounded-state venue is the production plan."""
     om = 1 - lam
-    pool = (
+    pool = caches.persist(
         brute_force_topk(corpus, queries, id_col=id_col, vec_col=vec_col,
                          k=pool_n)
         .select(F.col("neighbor_id").alias("vec_id"), F.col("cosine").alias("rel"))
-        .cache()
     )
     pvec = corpus.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
@@ -899,7 +898,7 @@ def mmr_diversify_unrolled(
     # non-equi self-join over the POOL-BOUNDED frame (<= pool_n rows);
     # broadcast one side explicitly so it plans BroadcastNestedLoopJoin,
     # never CartesianProduct (the test_plans gate)
-    sims = (
+    sims = caches.persist(
         pvec.alias("a")
         .join(F.broadcast(pvec.alias("b")), F.col("a.vec_id") != F.col("b.vec_id"))
         .select(
@@ -907,7 +906,6 @@ def mmr_diversify_unrolled(
             F.col("b.vec_id").alias("b_id"),
             cosine(F.col("a.embedding"), F.col("b.embedding")).alias("sim"),
         )
-        .cache()
     )
     selected = None
     remaining = pool
@@ -942,10 +940,8 @@ def mmr_diversify_unrolled(
         )
         selected = pick if selected is None else selected.unionByName(pick)
         remaining = remaining.join(pick.select("vec_id"), "vec_id", "left_anti")
-    out = selected.select(F.col("step").cast("int").alias("step"),
-                          "vec_id", "rel", "mmr")
-    out.retained_caches = [pool, sims]
-    return out
+    return selected.select(F.col("step").cast("int").alias("step"),
+                           "vec_id", "rel", "mmr")
 
 
 # ---------------------------------------------------------------------------

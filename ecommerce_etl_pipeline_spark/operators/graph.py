@@ -36,7 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ecommerce_etl_pipeline_spark.operators import venue
+from ecommerce_etl_pipeline_spark.operators import caches, venue
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 
@@ -44,14 +44,12 @@ def _empty_ranks(e_raw: DataFrame, zero_rank: Column) -> DataFrame:
     """Zero-row (node, rank) frame with the union-coerced endpoint type —
     what any rank loop over an empty edge list must return (the loops
     themselves divide by n and cannot run at n = 0)."""
-    out = (
+    return (
         e_raw.select(F.col(e_raw.columns[0]).alias("node"))
         .union(e_raw.select(F.col(e_raw.columns[1]).alias("node")))
         .limit(0)
         .select("node", zero_rank.alias("rank"))
     )
-    out.retained_caches = []
-    return out
 
 
 def _prep_graph(
@@ -86,25 +84,21 @@ def _prep_graph(
         # symmetric mirror: a distinct forward list unioned with its
         # orientation-disjoint reverse) skip a full-edge-list re-shuffle
         e = e.distinct()
-    e = e.persist()
+    e = caches.persist(e)
     e.count()  # materialize: honest stats + one-time edge-build cost
-    nodes = (
+    nodes = caches.persist(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
+    out_deg = caches.persist(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     n = nodes.count()
     has_dangling = (
         nodes.join(out_deg, nodes.node == out_deg.src, "left_anti").count() > 0
     )
     nparts = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e_deg = (
-        e.join(out_deg, "src")
-        .repartition(nparts, "src")
-        .sortWithinPartitions("src")
-        .persist()
+    e_deg = caches.persist(
+        e.join(out_deg, "src").repartition(nparts, "src").sortWithinPartitions("src")
     )
     e_deg.count()
     e.unpersist()  # superseded by e_deg for the whole loop
@@ -179,7 +173,6 @@ def _run_rank_loop(
             prev._jdf.queryExecution().toRdd().unpersist(False)
         except Exception:
             pass
-    ranks.retained_caches = [e, nodes, out_deg]
     return ranks
 
 
@@ -315,7 +308,6 @@ def _driver_rank_loop_portable(
         # preserve the input id type (the distributed venue inherits it
         # from the edge frame; the venues must agree on schema)
         out = out.select(F.col("node").cast(node_type), "rank")
-    out.retained_caches = []
     return out
 
 
@@ -421,7 +413,7 @@ def pagerank_portable(
         # doubles as the cache materialization and the union's two branches
         # below read the cache instead of re-executing the edge pipeline
         # twice (what the pre-validation code paid anyway).
-        e0 = e_raw.distinct().persist()
+        e0 = caches.persist(e_raw.distinct())
         if not e0.filter(
             ~F.coalesce(F.col("src") < F.col("dst"), F.lit(False))
         ).isEmpty():

@@ -557,11 +557,8 @@ def g1_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # free — this halves the edge distinct shuffle and the venue-probe
     # transfer, the two dominant non-loop terms
     ranks = pagerank_portable(pairs, iterations=6, symmetric=True)
-    out = (
+    return (
         ranks.select("node", F.col("rank").alias("rank_pico"))
         .orderBy(F.desc("rank_pico"), "node")
         .limit(20)
     )
-    # propagate the cache contract to the query result
-    out.retained_caches = getattr(ranks, "retained_caches", [])
-    return out

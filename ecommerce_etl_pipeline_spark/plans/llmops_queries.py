@@ -23,8 +23,9 @@ from ecommerce_etl_pipeline_spark.llmops import (
     splits,
     text,
 )
+from ecommerce_etl_pipeline_spark.operators import caches
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
-from ecommerce_etl_pipeline_spark.plans.registry import carry_caches, register
+from ecommerce_etl_pipeline_spark.plans.registry import register
 from ecommerce_etl_pipeline_spark.sources.io import load_table
 
 
@@ -444,7 +445,7 @@ def dd_winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pairs.select(
         "doc1", "doc2", "shared_fps", portable_round(F.col("overlap"), 4).alias("overlap")
     )
-    return carry_caches(out, pairs)
+    return out
 
 
 @register(
@@ -840,25 +841,15 @@ def txt_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # persist the word-TYPE table so the venue probe and (over-budget) the
     # merge loop share ONE materialization of the corpus scan+tokenize
-    # (r4 ADVICE: an unpersisted frame re-pays the scan via shuffle-file
-    # reuse only). Released via retained_caches, NOT an eager unpersist:
-    # Spark's CacheManager keys entries by canonicalized plan, so this wc
-    # and txt_bpe_token_counts' wc SHARE one cache entry — an eager
-    # unpersist here yanked it from under that query when both ran
-    # concurrently in a threaded sweep (observed transient failure).
-    # CAVEAT, not fully closed: entries are not reference-counted, so a
-    # CONCURRENT sweep that releases each query's retained_caches as it
-    # finishes can still yank the shared entry from the other in-flight
-    # BPE query — the result is a recompute from lineage, not a wrong
-    # answer, but sweeps should release sequentially or at the end.
-    wc = bpe.word_counts(docs).persist()
+    # reuse only). Not unpersisted here: this wc and txt_bpe_token_counts'
+    # wc share one cache entry (see operators/caches.py), so the caller's
+    # scope releases it.
+    wc = caches.persist(bpe.word_counts(docs))
     merges = bpe.bpe_train(docs, num_merges=20, word_counts_df=wc)
-    out = spark.createDataFrame(
+    return spark.createDataFrame(
         [(i + 1, a, b, a + b, n) for i, (a, b, n) in enumerate(merges)],
         "rank INT, left STRING, right STRING, merged STRING, pair_count BIGINT",
     )
-    out.retained_caches = [wc]
-    return out
 
 
 @register(
@@ -883,7 +874,7 @@ def txt_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "narrow explode + word join + per-document aggregate yields exact "
     "BPE token counts per document. Scale shape: the corpus is TOKENIZED "
     "ONCE (a persisted word-type table shared by the training probe, the "
-    "merge application and the final join — retained_caches contract); "
+    "merge application and the final join); "
     "the expensive fold runs on the Zipf-small vocabulary; the corpus "
     "pass is explode + join + map-side-combinable sum, and the join's "
     "vocabulary side is unhinted (stats pick broadcast while it fits). "
@@ -899,9 +890,8 @@ def txt_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the persisted word-TYPE table feeds bpe_train (via word_counts_df —
     # its strategy probe reads the cache, not the corpus), bpe_apply (the
     # merges meet only this Zipf-small frame), and the per-document sum
-    # below. CACHE CONTRACT (the curate pattern): released via
-    # retained_caches by the caller.
-    wc = bpe.word_counts(docs).persist()
+    # below.
+    wc = caches.persist(bpe.word_counts(docs))
     merges = bpe.bpe_train(docs, num_merges=20, word_counts_df=wc)
     seg = bpe.bpe_apply(wc.select("w"), merges).select(
         "w", F.size("syms").alias("seg_len")
@@ -909,12 +899,10 @@ def txt_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
     )
-    out = words.join(seg, "w").groupBy("doc_id").agg(
+    return words.join(seg, "w").groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum("seg_len").cast("bigint").alias("bpe_tokens"),
     )
-    out.retained_caches = [wc]
-    return out
 
 
 # ---- rows-only checks (hash-seeded candidate generation; not relational) ----
@@ -1002,7 +990,7 @@ def _minhash_pairs_sql(
 def dd_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     cand = dedup.minhash_candidate_pairs(docs, portable=True)
-    return carry_caches(cand.filter(F.col("jaccard") >= 0.5), cand)
+    return cand.filter(F.col("jaccard") >= 0.5)
 
 
 @register(
@@ -1138,7 +1126,7 @@ def dd_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pairs.select(
         "doc1", "doc2", portable_round(F.col("jaccard"), 6).alias("jaccard")
     )
-    return carry_caches(out, pairs)
+    return out
 
 
 @register(
@@ -1164,7 +1152,7 @@ def dd_jaccard_df_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pairs.select(
         "doc1", "doc2", portable_round(F.col("jaccard"), 6).alias("jaccard")
     )
-    return carry_caches(out, pairs)
+    return out
 
 
 @register(
@@ -1364,7 +1352,7 @@ def dd_jaccard_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("cluster_size"),
         F.array_join(members, ",").alias("members"),
     )
-    return carry_caches(out, comps)
+    return out
 
 
 @register(
@@ -2463,7 +2451,7 @@ def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("cluster_size"),
         F.array_join(members, ",").alias("members"),
     )
-    return carry_caches(out, cand, comps)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2956,7 +2944,7 @@ def dd_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     curated = curation.curate(docs, use_minhash=False)
     out = curated.select("doc_id", F.col("n_tokens").cast("int").alias("n_tokens"))
-    return carry_caches(out, curated)
+    return out
 
 
 @register(
@@ -2992,7 +2980,7 @@ def dd_curation_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     curated = curation.curate(docs, use_minhash=False, use_ppjoin=True)
     out = curated.select("doc_id", F.col("n_tokens").cast("int").alias("n_tokens"))
-    return carry_caches(out, curated)
+    return out
 
 
 @register(
@@ -3029,7 +3017,7 @@ def dd_curation_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     curated = curation.curate(docs, use_minhash=True, portable_minhash=True)
     out = curated.select("doc_id", F.col("n_tokens").cast("int").alias("n_tokens"))
-    return carry_caches(out, curated)
+    return out
 
 
 @register(
@@ -3251,8 +3239,7 @@ _PPL_TERCILES = (repr(1 / 3), repr(2 / 3))
 def txt_perplexity_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_etl_pipeline_spark.functions import binning
 
-    lp = _unigram_logprob_frame(spark, sf_dir).cache()
-    lp.retained_caches = [lp]
+    lp = caches.persist(_unigram_logprob_frame(spark, sf_dir))
     probs = [float(p) for p in _PPL_TERCILES]
     e1, e2 = binning.round_edges(binning.quantile_edges(lp, "avg_logprob", probs))
     out = (
@@ -3266,7 +3253,7 @@ def txt_perplexity_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("ppl_bucket"),
         )
     )
-    return carry_caches(out, lp)
+    return out
 
 
 @register(
@@ -4115,13 +4102,13 @@ _CLS_WITH, _CLS_WFINAL = _logreg_sql()
 )
 def ml_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    w, feats = classifier.train_linear_scorer(
+    w, _feats = classifier.train_linear_scorer(
         docs, iterations=_CLS_ITER, lr_num=_CLS_LR_NUM, lr_den=_CLS_LR_DEN
     )
     out = spark.createDataFrame(
         [(j, int(w[j])) for j in range(len(w))], "feature INT, weight_nano LONG"
     )
-    return carry_caches(out, feats)
+    return out
 
 
 _CLS_D64 = classifier.HASHED_D
@@ -4151,7 +4138,7 @@ _CLS64_WITH, _CLS64_WFINAL = _logreg_sql(
 )
 def ml_logreg_train_d64(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    w, feats = classifier.train_linear_scorer(
+    w, _feats = classifier.train_linear_scorer(
         docs,
         iterations=_CLS_ITER,
         lr_num=_CLS_LR_NUM,
@@ -4161,7 +4148,7 @@ def ml_logreg_train_d64(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = spark.createDataFrame(
         [(j, int(w[j])) for j in range(len(w))], "feature INT, weight_nano LONG"
     )
-    return carry_caches(out, feats)
+    return out
 
 
 @register(
@@ -4210,7 +4197,7 @@ def ml_logreg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("accuracy"),
     )
-    return carry_caches(out, feats)
+    return out
 
 
 @register(
@@ -4267,7 +4254,7 @@ def ml_logreg_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mean_score"),
         )
     )
-    return carry_caches(out, feats)
+    return out
 
 
 # deterministic 80/20 train/holdout split for the classifier: the
@@ -4359,7 +4346,7 @@ def _holdout_report(
             ),
         ).alias("accuracy"),
     )
-    return carry_caches(out, feats)
+    return out
 
 
 _CLS64H_WITH, _CLS64H_WFINAL = _logreg_sql(
@@ -4533,7 +4520,7 @@ def dd_curation_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     h = splits.hash_uint32(F.col("doc_id"), _CLS_SPLIT_SALT)
     train = docs.filter(h < F.lit(_CLS_SPLIT_THRESHOLD))
-    w, feats = classifier.train_linear_scorer(
+    w, _feats = classifier.train_linear_scorer(
         train,
         iterations=_CLS_ITER,
         lr_num=_CLS_LR_NUM,
@@ -4542,7 +4529,7 @@ def dd_curation_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     curated = curation.curate(docs, use_minhash=False, classifier_weights=w)
     out = curated.select("doc_id", F.col("n_tokens").cast("int").alias("n_tokens"))
-    return carry_caches(out, curated, feats)
+    return out
 
 
 @register(
@@ -4571,7 +4558,7 @@ def dd_curation_classifier_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_table(spark, sf_dir, "documents")
     h = splits.hash_uint32(F.col("doc_id"), _CLS_SPLIT_SALT)
     train = docs.filter(h < F.lit(_CLS_SPLIT_THRESHOLD))
-    w, feats = classifier.train_linear_scorer(
+    w, _feats = classifier.train_linear_scorer(
         train,
         iterations=_CLS_ITER,
         lr_num=_CLS_LR_NUM,
@@ -4582,7 +4569,7 @@ def dd_curation_classifier_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame
         docs, use_minhash=False, use_ppjoin=True, classifier_weights=w
     )
     out = curated.select("doc_id", F.col("n_tokens").cast("int").alias("n_tokens"))
-    return carry_caches(out, curated, feats)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -4654,4 +4641,4 @@ def dd_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = splits.assign_splits(keyed, "cluster_id", _SPLIT_WEIGHTS).select(
         "doc_id", "cluster_id", "split"
     )
-    return carry_caches(out, cand, comps)
+    return out

@@ -35,6 +35,7 @@ from ecommerce_etl_pipeline_spark.functions.exact_agg import (
     portable_round,
     sql_round,
 )
+from ecommerce_etl_pipeline_spark.operators import caches
 from ecommerce_etl_pipeline_spark.pipelines.reference import sales_pipeline
 from ecommerce_etl_pipeline_spark.plans.registry import register
 from ecommerce_etl_pipeline_spark.sources.io import load_table
@@ -707,9 +708,8 @@ def pl_product_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # holds the original broadcast exchange, the top branch its Reused
     # twin, so the agg exchanges no longer canonicalize equal) and pays
     # a second part scan PLUS a duplicated Expand+shuffle. The cache is
-    # part-grain (dimension-sized, bounded by |part|), released by
-    # consumers via the retained_caches contract.
-    base = base.persist()
+    # part-grain (dimension-sized, bounded by |part|).
+    base = caches.persist(base)
 
     fan_in = base.withColumns(
         {
@@ -795,11 +795,7 @@ def pl_product_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p_type").cast("string").alias("label2"),
         )
     )
-    out = fanned.unionByName(top).unionByName(_product_pairs(li))
-    # release handle for sequential consumers (bench/cost_report); the
-    # concurrent sweep retains deliberately (check_correctness docstring)
-    out.retained_caches = [base]
-    return out
+    return fanned.unionByName(top).unionByName(_product_pairs(li))
 
 
 def product_warehouse_union(spark: SparkSession, sf_dir: str) -> DataFrame:

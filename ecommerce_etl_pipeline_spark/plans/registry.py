@@ -47,20 +47,6 @@ def register(name: str, oracle: str | None = None, doc: str = "") -> Callable[[Q
     return deco
 
 
-def carry_caches(out: DataFrame, *sources: DataFrame) -> DataFrame:
-    """Reattach the CACHE CONTRACT through DataFrame transformations:
-    ``retained_caches`` is a plain Python attribute, so any ``.filter()``
-    / ``.select()`` after an operator that persists intermediates returns
-    a new frame WITHOUT the release handles — the caches would survive
-    with no way for a caller to unpersist them (a real leak observed in
-    a shared 152-query session). Collect every source's list onto the
-    final frame."""
-    out.retained_caches = [
-        c for src in sources for c in getattr(src, "retained_caches", [])
-    ]
-    return out
-
-
 def all_queries() -> dict[str, QueryFn]:
     return {name: spec.fn for name, spec in _REGISTRY.items()}
 

@@ -5,13 +5,10 @@ oracle. Queries run on a small thread pool (Spark job submission is
 thread-safe; each worker opens its own DuckDB connection), cutting the
 sweep from ~7 min to ~2-3 min without changing any result.
 
-Retained caches are deliberately NOT released per-query here: CacheManager
-entries are keyed by canonicalized plan and are not reference-counted, so
-a concurrent release can yank an entry shared with another in-flight query
-(the two BPE queries share their word-count cache) and force a mid-query
-recompute. At the sweep's small SF the accumulated caches are a few MB;
-the session's end releases everything. Sequential consumers (bench,
-cost_report) DO honor retained_caches per query.
+The sweep runs outside any ``caches.scope()``, so no query's caches are
+released while another may still share them (operators/caches.py; the two
+BPE queries share their word-count cache). At the sweep's small SF the
+accumulated caches are a few MB; the session's end releases everything.
 Usage: python scripts/check_correctness.py [sf_dir] [n_threads]
 """
 

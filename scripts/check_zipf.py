@@ -55,6 +55,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from ecommerce_etl_pipeline_spark.llmops import dedup  # noqa: E402
+from ecommerce_etl_pipeline_spark.operators import caches  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -137,12 +138,10 @@ def main() -> int:
             continue  # missing-fixture failure already recorded above
         docs = spark.read.parquet(path)
         total = docs.count()
-        out = curation.curate(
-            docs, lang="unknown", use_minhash=False, use_ppjoin=True
-        )
-        kept = out.count()
-        for c in out.retained_caches:
-            c.unpersist()
+        with caches.scope():
+            kept = curation.curate(
+                docs, lang="unknown", use_minhash=False, use_ppjoin=True
+            ).count()
         curate_measured[name] = (total, kept)
         if (total, kept) != (exp_total, exp_kept):
             fails.append(
@@ -178,13 +177,11 @@ def main() -> int:
             if not os.path.exists(path):
                 continue
             docs = spark.read.parquet(path)
-            out = curation.curate(
-                docs, lang="unknown", use_minhash=False, use_ppjoin=True,
-                classifier_weights=w,
-            )
-            kept = out.count()
-            for c in out.retained_caches:
-                c.unpersist()
+            with caches.scope():
+                kept = curation.curate(
+                    docs, lang="unknown", use_minhash=False, use_ppjoin=True,
+                    classifier_weights=w,
+                ).count()
             cls_measured[name] = kept
             if exp_kept is not None and kept != exp_kept:
                 fails.append(
@@ -195,20 +192,16 @@ def main() -> int:
                   f"(pinned {exp_kept})", flush=True)
         # small-decade equality: composed ppjoin venue == exact-jaccard
         # venue under the SAME trained gate (identical by construction)
-        pp = curation.curate(
-            docs01, lang="unknown", use_minhash=False, use_ppjoin=True,
-            classifier_weights=w,
-        )
-        ex = curation.curate(
-            docs01, lang="unknown", use_minhash=False, use_ppjoin=False,
-            classifier_weights=w,
-        )
-        pp_ids = pp.select("doc_id")
-        ex_ids = ex.select("doc_id")
-        diff = pp_ids.exceptAll(ex_ids).count() + ex_ids.exceptAll(pp_ids).count()
-        for frame in (pp, ex):
-            for c in frame.retained_caches:
-                c.unpersist()
+        with caches.scope():
+            pp_ids = curation.curate(
+                docs01, lang="unknown", use_minhash=False, use_ppjoin=True,
+                classifier_weights=w,
+            ).select("doc_id")
+            ex_ids = curation.curate(
+                docs01, lang="unknown", use_minhash=False, use_ppjoin=False,
+                classifier_weights=w,
+            ).select("doc_id")
+            diff = pp_ids.exceptAll(ex_ids).count() + ex_ids.exceptAll(pp_ids).count()
         if diff != 0:
             fails.append(
                 f"zipf0.1: classifier-gated ppjoin vs exact-jaccard kept "

@@ -19,6 +19,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ecommerce_etl_pipeline_spark.operators import caches  # noqa: E402
 from ecommerce_etl_pipeline_spark.operators.introspect import stage_cost_report  # noqa: E402
 from ecommerce_etl_pipeline_spark.plans import all_queries  # noqa: E402
 from ecommerce_etl_pipeline_spark.session import get_spark  # noqa: E402
@@ -61,11 +62,9 @@ def main() -> None:
         def run(name=name):
             out = queries[name](spark, sf_dir)
             out.write.format("noop").mode("overwrite").save()
-            for c in getattr(out, "retained_caches", []):
-                c.unpersist()
 
-        m = stage_cost_report(spark, run)
-        spark.catalog.clearCache()
+        with caches.scope():
+            m = stage_cost_report(spark, run)
         rows.append((name, m))
         print(name, m)
 

@@ -47,13 +47,14 @@ def main() -> int:
     import ecommerce_etl_pipeline_spark.plans  # noqa: F401
     from ecommerce_etl_pipeline_spark.plans.registry import _REGISTRY
 
-    df = _REGISTRY["pl_product_warehouse"].fn(spark, sf)
-    cols = df.columns
-    rows = sorted(
-        tuple(canon_cell(r[c]) for c in cols) for r in df.collect()
-    )
-    for c in getattr(df, "retained_caches", []):
-        c.unpersist()
+    from ecommerce_etl_pipeline_spark.operators import caches
+
+    with caches.scope():
+        df = _REGISTRY["pl_product_warehouse"].fn(spark, sf)
+        cols = df.columns
+        rows = sorted(
+            tuple(canon_cell(r[c]) for c in cols) for r in df.collect()
+        )
     body = ",".join(cols) + "\n" + "\n".join(",".join(r) for r in rows) + "\n"
     raw = body.encode()
     sha = hashlib.sha256(raw).hexdigest()

@@ -179,7 +179,7 @@ def main() -> None:
         "minhash_portable": lambda d: dedup.minhash_candidate_pairs(
             d, portable=True
         ),
-        "curation_minhash": lambda d: curation.curate(d, cache_exact=True),
+        "curation_minhash": lambda d: curation.curate(d),
         # round-3 additions: window-shuffle (span) and narrow-explode (chunk)
         # shapes — expected ~linear growth
         "span_excision": lambda d: dedup.duplicate_span_stats(d),

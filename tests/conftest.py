@@ -8,7 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ecommerce_etl_pipeline_spark.operators import venue  # noqa: E402
+from ecommerce_etl_pipeline_spark.operators import caches, venue  # noqa: E402
 from ecommerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -21,6 +21,14 @@ def spark():
     s = get_spark(app_name="ecommerce-etl-pipeline-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _cache_scope():
+    """Each test runs inside a cache scope, so whatever the engine persists
+    during a test is released when the test ends."""
+    with caches.scope():
+        yield
 
 
 @pytest.fixture(scope="session")

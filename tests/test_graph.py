@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ecommerce_etl_pipeline_spark.operators import caches
 from ecommerce_etl_pipeline_spark.operators.graph import pagerank
 
 
@@ -33,8 +34,6 @@ def test_pagerank_matches_reference_with_dangling(spark):
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
     res = pagerank(df)
     got = {r["node"]: r["rank"] for r in res.collect()}
-    for _c in res.retained_caches:  # honor the cache contract
-        _c.unpersist(blocking=True)
     want = _ref_pagerank(edges)
     assert set(got) == set(want)
     for v in want:
@@ -47,8 +46,6 @@ def test_pagerank_uniform_on_symmetric_clique(spark):
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
     res = pagerank(df, iterations=5)
     got = [r["rank"] for r in res.collect()]
-    for _c in res.retained_caches:
-        _c.unpersist(blocking=True)
     assert len(got) == 4
     for r in got:
         assert abs(r - 0.25) < 1e-12
@@ -88,16 +85,18 @@ def test_pagerank_portable_exact_integer_parity(spark, distributed_venue):
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
     want = _ref_pagerank_portable(edges)
 
-    res = pagerank_portable(df, iterations=6)  # driver venue (fits budget)
-    assert res.retained_caches == []
-    got = {r["node"]: r["rank"] for r in res.collect()}
+    # the distributed venue persists its graph frames and the driver venue
+    # persists none, so each scope's list shows which venue ran
+    with caches.scope() as owned:
+        res = pagerank_portable(df, iterations=6)  # driver venue (fits budget)
+        got = {r["node"]: r["rank"] for r in res.collect()}
+    assert owned == []
     assert got == want  # bit-exact, every node
 
-    with distributed_venue():
+    with distributed_venue(), caches.scope() as owned_d:
         res_d = pagerank_portable(df, iterations=6)
-    got_d = {r["node"]: r["rank"] for r in res_d.collect()}
-    for _c in res_d.retained_caches:
-        _c.unpersist(blocking=True)
+        got_d = {r["node"]: r["rank"] for r in res_d.collect()}
+    assert owned_d != []
     assert got_d == want  # distributed venue: identical
 
 
@@ -110,8 +109,6 @@ def test_pagerank_portable_tracks_fp_variant(spark):
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
     res = pagerank_portable(df, iterations=5)
     got = {r["node"]: r["rank"] / 1e12 for r in res.collect()}
-    for _c in res.retained_caches:
-        _c.unpersist(blocking=True)
     for v, r in got.items():
         assert abs(r - 0.25) < 1e-9, (v, r)
 
@@ -128,15 +125,16 @@ def test_pagerank_portable_symmetric_all_venues_identical(spark, distributed_ven
     want = _ref_pagerank_portable(directed)
 
     fwd = spark.createDataFrame(und, "src LONG, dst LONG")
-    res = pagerank_portable(fwd, iterations=6, symmetric=True)  # driver venue
-    assert res.retained_caches == []
-    assert {r["node"]: r["rank"] for r in res.collect()} == want
+    with caches.scope() as owned:
+        res = pagerank_portable(fwd, iterations=6, symmetric=True)  # driver venue
+        got = {r["node"]: r["rank"] for r in res.collect()}
+    assert owned == []
+    assert got == want
 
-    with distributed_venue():
+    with distributed_venue(), caches.scope() as owned_d:
         res_d = pagerank_portable(fwd, iterations=6, symmetric=True)
-    got_d = {r["node"]: r["rank"] for r in res_d.collect()}
-    for _c in res_d.retained_caches:
-        _c.unpersist(blocking=True)
+        got_d = {r["node"]: r["rank"] for r in res_d.collect()}
+    assert owned_d != []
     assert got_d == want
 
     # and the plain directed call agrees too

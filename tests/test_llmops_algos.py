@@ -932,8 +932,6 @@ def test_bloom_decontaminate_plants_and_clean(spark):
     res = bloom_decontaminate(train, ev)
     got = {r["train_id"]: r["n_hit_ngrams"] for r in res.collect()}
     assert got == {1: 1}
-    for df in res.retained_caches:  # honor the cache contract
-        df.unpersist(blocking=True)
 
     # fully clean train corpus -> empty result (and the empty-eval path
     # must not divide by zero when sizing the bitmap)
@@ -942,8 +940,6 @@ def test_bloom_decontaminate_plants_and_clean(spark):
         spark.createDataFrame([], "doc_id LONG, text STRING"),
     )
     assert clean.count() == 0
-    for df in clean.retained_caches:
-        df.unpersist(blocking=True)
 
 
 def test_importance_logweights_tilts_toward_target(spark):
@@ -1220,8 +1216,6 @@ def test_ppjoin_matches_plain_jaccard_join(spark, sf_dir):
         }
         pp = dedup.ppjoin_pairs(docs, threshold=0.5, hashed=hashed)
         got = {(r.doc1, r.doc2, round(r.jaccard, 9)) for r in pp.collect()}
-        for c in pp.retained_caches:
-            c.unpersist()
         assert got == plain, f"hashed={hashed}"
         assert plain, "fixture corpus should contain true jaccard pairs"
 
@@ -1249,8 +1243,6 @@ def test_ppjoin_exact_on_skewed_boilerplate_corpus(spark):
         }
         pp = dedup.ppjoin_pairs(docs, threshold=thr, hashed=False)
         got = {(r.doc1, r.doc2, round(r.jaccard, 9)) for r in pp.collect()}
-        for c in pp.retained_caches:
-            c.unpersist()
         assert got == plain, f"threshold={thr}"
         assert plain, "skewed corpus should contain true pairs"
 
@@ -1273,8 +1265,6 @@ def test_jaccard_max_df_lower_bound_accounting(spark):
     }
     capped_df = dedup.jaccard_similarity_join(docs, hashed=False, max_df=5)
     capped = {(r.doc1, r.doc2): r.jaccard for r in capped_df.collect()}
-    for c in capped_df.retained_caches:  # max_df branch caches the index
-        c.unpersist()
     # the rare-support pair survives with its exact score
     assert capped[(100, 101)] == uncapped[(100, 101)]
     # hot-clone pairs (support df = 10 > 5) are missed, not mis-scored
@@ -1292,9 +1282,6 @@ def test_curate_ppjoin_variant_identical_to_plain_exact(spark, sf_dir):
     pp = curation.curate(docs, use_minhash=False, use_ppjoin=True)
     a = {(r.doc_id, r.text, r.n_tokens) for r in plain.collect()}
     b = {(r.doc_id, r.text, r.n_tokens) for r in pp.collect()}
-    for df in (plain, pp):
-        for c in df.retained_caches:
-            c.unpersist()
     assert a == b and a
 
 
@@ -1322,9 +1309,7 @@ def test_logreg_trainer_matches_pure_python_replay(spark):
     ]
     docs = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                  "doc_id LONG, text STRING")
-    w, feats = classifier.train_linear_scorer(docs, iterations=5)
-    for c in feats.retained_caches:
-        c.unpersist()
+    w, _ = classifier.train_linear_scorer(docs, iterations=5)
 
     # pure-python twin over the same feature definitions
     EN = ["the", "a", "and", "of", "to", "in", "is"]
@@ -1375,11 +1360,9 @@ def test_logreg_trainer_hashed_d64_matches_pure_python_replay(spark):
          "el la de que y en los " * 7]
     docs = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                  "doc_id LONG, text STRING")
-    w, feats = classifier.train_linear_scorer(
+    w, _ = classifier.train_linear_scorer(
         docs, iterations=3, features="hashed"
     )
-    for c in feats.retained_caches:
-        c.unpersist()
     assert len(w) == classifier.HASHED_D
 
     nb = classifier.HASHED_D - 5
@@ -1441,15 +1424,13 @@ def test_logreg_trainer_driver_venue_identical_to_distributed(spark, distributed
         [(i, t) for i, t in enumerate(texts)], "doc_id LONG, text STRING"
     )
     for features in ("quality", "hashed"):
-        w_driver, f1 = classifier.train_linear_scorer(
+        w_driver, _ = classifier.train_linear_scorer(
             docs, iterations=5, features=features
         )
         with distributed_venue():
-            w_dist, f2 = classifier.train_linear_scorer(
+            w_dist, _ = classifier.train_linear_scorer(
                 docs, iterations=5, features=features
             )
-        for c in f1.retained_caches + f2.retained_caches:
-            c.unpersist()
         assert w_driver == w_dist, f"venue divergence at features={features}"
 
 
@@ -1471,16 +1452,14 @@ def test_logreg_driver_venue_needs_int64_safe_row_count(
         "doc_id LONG, text STRING",
     )
     with distributed_venue():
-        w_dist, f1 = classifier.train_linear_scorer(docs, iterations=3)
+        w_dist, _ = classifier.train_linear_scorer(docs, iterations=3)
 
     def driver_loop(*args, **kwargs):
         raise AssertionError("driver venue taken past the int64 bound")
 
     monkeypatch.setattr(venue, "fits_int64_sum", lambda rows, max_abs_term: False)
     monkeypatch.setattr(classifier, "_driver_gd_loop", driver_loop)
-    w_fallback, f2 = classifier.train_linear_scorer(docs, iterations=3)
-    for c in f1.retained_caches + f2.retained_caches:
-        c.unpersist()
+    w_fallback, _ = classifier.train_linear_scorer(docs, iterations=3)
     assert w_fallback == w_dist
 
 
@@ -1598,8 +1577,6 @@ def test_logreg_trainer_empty_and_null_text_corpus(spark):
     # empty eval set: coalesced 0-count matrix, not NULL sums
     conf0 = classifier.evaluate_scorer(feats, w).collect()[0]
     assert tuple(conf0) == (0, 0, 0, 0)
-    for c in feats.retained_caches:
-        c.unpersist()
     assert w == [0] * 5
 
     nulled = spark.createDataFrame(
@@ -1608,8 +1585,6 @@ def test_logreg_trainer_empty_and_null_text_corpus(spark):
     )
     w2, feats2 = classifier.train_linear_scorer(nulled, iterations=3)
     conf = classifier.evaluate_scorer(feats2, w2).collect()[0]
-    for c in feats2.retained_caches:
-        c.unpersist()
     assert conf["tp"] + conf["fp"] + conf["fn"] + conf["tn"] == 2
 
 
@@ -1724,8 +1699,6 @@ def test_perplexity_prune_matches_pure_python_replay(spark, sf_dir):
 
     out = txt_perplexity_prune(spark, sf_dir)
     got = {r["doc_id"]: r["ppl_bucket"] for r in out.collect()}
-    for c in out.retained_caches:
-        c.unpersist()
     assert got == expect
     # the prune really removes the low-likelihood tail: every kept score
     # strictly clears the rounded first-tercile edge, none survive below
@@ -1749,8 +1722,6 @@ def test_logreg_calibration_structure(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     out = ml_logreg_calibration(spark, str(sf_dir))
     rows = out.collect()
-    for c in out.retained_caches:
-        c.unpersist()
     assert sum(r["n"] for r in rows) == docs.count()
     for r in rows:
         assert 0 <= r["bin"] <= 9
@@ -1775,8 +1746,6 @@ def test_mmr_bounded_state_matches_unrolled_venue(spark, sf_dir):
         (r["step"], r["vec_id"], r["rel"], r["mmr"])
         for r in unrolled_df.orderBy("step").collect()
     ]
-    for c in getattr(unrolled_df, "retained_caches", []):
-        c.unpersist()
     assert len(bounded) == 5
     assert bounded == unrolled
     # greedy invariants: step 1 is the pure-relevance argmax; picks are

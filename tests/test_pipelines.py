@@ -87,17 +87,18 @@ def test_pricing_pipeline(spark):
 
 
 def test_curate_cache_contract_releases_everything(spark, distributed_venue):
-    """CACHE CONTRACT (curation.py / clustering.py): every frame a curate()
-    call retains is listed in result.retained_caches, and unpersisting them
-    adds ZERO persistent RDDs beyond the suite's baseline — the storage-tab
-    hygiene a 50-query shared session depends on. The assertion is
-    DELTA-based because earlier tests legitimately pin bounded
-    localCheckpoint blocks (bpe_train / pagerank lineage cuts) that
-    clearCache() cannot and should not remove."""
-    from pyspark.sql import functions as F
-
+    """One cache owner (operators/caches.py): the frames curate(),
+    connected components and winnow_overlap_pairs persist join the
+    caller's scope, the ones their results read stay cached until it
+    exits, and the exit adds ZERO persistent RDDs beyond the baseline —
+    the storage-tab hygiene a 50-query shared session depends on. The
+    assertion is DELTA-based because earlier tests legitimately pin
+    bounded localCheckpoint blocks (bpe_train / pagerank lineage cuts)
+    that no scope owns."""
     from ecommerce_etl_pipeline_spark.llmops import curation
     from ecommerce_etl_pipeline_spark.llmops.clustering import connected_components
+    from ecommerce_etl_pipeline_spark.llmops.dedup import winnow_overlap_pairs
+    from ecommerce_etl_pipeline_spark.operators import caches
 
     spark.catalog.clearCache()
     sc = spark.sparkContext
@@ -105,58 +106,49 @@ def test_curate_cache_contract_releases_everything(spark, distributed_venue):
     def _pinned() -> set:
         return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
 
-    _baseline = _pinned()
+    def in_scope(run):
+        """``run()`` inside a scope: its result and the frames still cached
+        when the scope exits, after checking the exit releases them all."""
+        baseline = _pinned()
+        with caches.scope() as owned:
+            out = run()
+            kept = [f for f in owned if f.is_cached]
+        assert _pinned() - baseline == set()
+        return out, kept
 
+    # each curate path keeps the exact-dedup intermediate, plus the PPJoin
+    # ordered shingle arrays or the MinHash banded rows
     docs = load_table(spark, SF, "documents")
-    curated = curation.curate(docs, use_minhash=False)
-    assert curated.count() > 0
-    assert len(curated.retained_caches) == 1  # the exact-dedup intermediate
-    for df in curated.retained_caches:
-        df.unpersist(blocking=True)
-    assert _pinned() - _baseline == set()
+    for kwargs, cand_cache in (
+        ({"use_minhash": False}, []),
+        ({"use_minhash": False, "use_ppjoin": True}, [["doc_id", "arr", "n"]]),
+        ({"use_minhash": True}, [["doc_id", "band", "band_hash"]]),
+    ):
+        n, kept = in_scope(lambda: curation.curate(docs, **kwargs).count())
+        assert n > 0
+        assert [f.columns for f in kept] == [["doc_id", "text"]] + cand_cache, kwargs
 
-    # cache_exact=False retains nothing even before release
-    curated2 = curation.curate(docs, use_minhash=False, cache_exact=False)
-    assert curated2.count() > 0
-    assert curated2.retained_caches == []
-    assert _pinned() - _baseline == set()
-
-    # distributed CC branch (forced): returns a cached frame, listed on the
-    # contract, and releasable to a clean storage tab
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "doc1 LONG, doc2 LONG"
     )
-    with distributed_venue():
+
+    def components():
         comp = connected_components(pairs)
-    got = {(r.node, r.component) for r in comp.collect()}
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    assert comp.retained_caches == [comp]
-    comp.unpersist(blocking=True)
-    assert _pinned() - _baseline == set()
+        got = {(r.node, r.component) for r in comp.collect()}
+        assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+        return comp
 
-    # small-graph branch retains nothing
-    comp_small = connected_components(pairs)
-    assert comp_small.retained_caches == []
-    assert comp_small.count() == 5
-    assert _pinned() - _baseline == set()
+    # distributed CC (forced) keeps exactly the labels it returns
+    with distributed_venue():
+        comp, kept = in_scope(components)
+    assert len(kept) == 1 and kept[0] is comp
+    # the small-graph driver venue keeps nothing
+    _, kept = in_scope(components)
+    assert kept == []
 
-    # minhash path: the banded-rows cache is listed too (alongside exact)
-    curated3 = curation.curate(docs, use_minhash=True)
-    assert curated3.count() > 0
-    assert len(curated3.retained_caches) == 2
-    for df in curated3.retained_caches:
-        df.unpersist(blocking=True)
-    assert _pinned() - _baseline == set()
-
-    # winnow_overlap_pairs lists its two load-bearing caches
-    from ecommerce_etl_pipeline_spark.llmops.dedup import winnow_overlap_pairs
-
-    wp = winnow_overlap_pairs(docs.limit(50))
-    wp.count()
-    assert len(wp.retained_caches) == 2
-    for df in wp.retained_caches:
-        df.unpersist(blocking=True)
-    assert _pinned() - _baseline == set()
+    # winnow_overlap_pairs keeps its two load-bearing caches
+    _, kept = in_scope(lambda: winnow_overlap_pairs(docs.limit(50)).count())
+    assert [f.columns for f in kept] == [["doc_id", "fps"], ["doc_id", "n_fps", "fp"]]
 
 
 def test_fused_lang_gate_matches_predicted_lang_all_langs(spark):
@@ -214,14 +206,10 @@ def test_curate_classifier_gate_matches_standalone_scorer(spark):
     from ecommerce_etl_pipeline_spark.llmops import classifier, curation
 
     docs = load_table(spark, SF, "documents")
-    w, feats = classifier.train_linear_scorer(docs, iterations=3, features="hashed")
-    for c in feats.retained_caches:
-        c.unpersist(blocking=True)
+    w, _ = classifier.train_linear_scorer(docs, iterations=3, features="hashed")
 
     gated = curation.curate(docs, use_minhash=False, classifier_weights=w)
     got = {r["doc_id"] for r in gated.collect()}
-    for c in gated.retained_caches:
-        c.unpersist(blocking=True)
 
     pre = (
         classifier.score_with_weights(docs, w, features="hashed")
@@ -230,8 +218,6 @@ def test_curate_classifier_gate_matches_standalone_scorer(spark):
     )
     replay = curation.curate(pre, use_minhash=False, max_punct_ratio=float("inf"))
     want = {r["doc_id"] for r in replay.collect()}
-    for c in replay.retained_caches:
-        c.unpersist(blocking=True)
 
     assert got, "classifier gate kept zero documents — degenerate fixture"
     assert got == want
@@ -327,8 +313,6 @@ def test_product_warehouse_fused_matches_union_form(spark):
     fused_rows = canon(fused_df)
     assert len(union_rows) > 0
     assert union_rows == fused_rows
-    for c in getattr(fused_df, "retained_caches", []):
-        c.unpersist()
     # Plan gates (ADVICE r12 #3 hardened these from a first-SMJ substring
     # peek to strategy-independent structural counts; ADVICE r13 #5 moved
     # them off the executed-plan STRING — substring counts break when a
@@ -350,8 +334,6 @@ def test_product_warehouse_fused_matches_union_form(spark):
             yield from _walk(ch.apply(i))
 
     nodes = list(_walk(probe._jdf.queryExecution().optimizedPlan()))
-    for c in getattr(probe, "retained_caches", []):
-        c.unpersist()
     names = [n.nodeName() for n in nodes]
     assert names.count("InMemoryRelation") == 2, names
     assert names.count("Expand") == 1, names

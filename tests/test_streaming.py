@@ -277,11 +277,9 @@ def test_classifier_gate_stream_matches_batch_scorer(spark):
     )
 
     batch_docs = load_table(spark, SF, "documents")
-    w, feats = classifier.train_linear_scorer(
+    w, _ = classifier.train_linear_scorer(
         batch_docs, iterations=3, features="hashed"
     )
-    for c in feats.retained_caches:
-        c.unpersist(blocking=True)
 
     docs = read_documents_stream(spark, SF)
     stream_to_memory(
@@ -324,11 +322,9 @@ def test_calibration_derived_threshold_three_faces(spark):
     )
 
     docs = load_table(spark, SF, "documents")
-    w, feats = classifier.train_linear_scorer(
+    w, _ = classifier.train_linear_scorer(
         docs, iterations=3, features="hashed"
     )
-    for c in feats.retained_caches:
-        c.unpersist(blocking=True)
 
     scored = classifier.score_with_weights(docs, w, features="hashed")
     bins = (
@@ -376,15 +372,11 @@ def test_calibration_derived_threshold_three_faces(spark):
         classifier_threshold=thr,
     )
     got = {r["doc_id"] for r in gated.collect()}
-    for c in gated.retained_caches:
-        c.unpersist(blocking=True)
     pre = scored.filter(F.col("score") >= F.lit(thr)).select("doc_id", "text")
     replay = curation.curate(
         pre, use_minhash=False, max_punct_ratio=float("inf")
     )
     want_curate = {r["doc_id"] for r in replay.collect()}
-    for c in replay.retained_caches:
-        c.unpersist(blocking=True)
     assert got == want_curate
 
 
@@ -427,8 +419,6 @@ def test_decontam_gate_stream_no_false_negatives_and_batch_parity(spark):
     train = docs.filter(F.col("source") != "src0")
     exact_res = bloom_decontaminate(train, ev)
     exact = {r.train_id for r in exact_res.collect()}
-    for _df in exact_res.retained_caches:  # honor the cache contract
-        _df.unpersist(blocking=True)
     # exact contaminated train docs are a subset of the stream's flags
     # (the stream also flags eval docs themselves + bounded FPs)
     assert exact, "fixture should contain cross-source n-gram overlap"

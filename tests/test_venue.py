@@ -17,7 +17,7 @@ def _cc(spark, n):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc1 LONG, doc2 LONG"
     )
-    return clustering.connected_components(pairs).retained_caches
+    clustering.connected_components(pairs)
 
 
 def _kmeans(spark, n):
@@ -26,7 +26,6 @@ def _kmeans(spark, n):
         "vec_id INT, embedding ARRAY<DOUBLE>",
     )
     clustering.kmeans_train_portable(pts, k=2, iterations=1)
-    return []
 
 
 def _gd(spark, n):
@@ -34,7 +33,7 @@ def _gd(spark, n):
         [(i, " ".join(f"w{j}" for j in range(1 + 2 * i))) for i in range(n)],
         "doc_id LONG, text STRING",
     )
-    return classifier.train_linear_scorer(docs, iterations=1)[1].retained_caches
+    classifier.train_linear_scorer(docs, iterations=1)
 
 
 def _pagerank(symmetric):
@@ -42,8 +41,7 @@ def _pagerank(symmetric):
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(n)], "src LONG, dst LONG"
         )
-        out = graph.pagerank_portable(edges, iterations=1, symmetric=symmetric)
-        return out.retained_caches
+        graph.pagerank_portable(edges, iterations=1, symmetric=symmetric)
 
     return run
 
@@ -53,7 +51,6 @@ def _bpe(spark, n):
         [(1, " ".join(f"ab{j}" for j in range(n)))], "doc_id LONG, text STRING"
     )
     bpe.bpe_train(docs, num_merges=1)
-    return []
 
 
 class Case(NamedTuple):
@@ -104,8 +101,7 @@ def test_budget_edge_picks_venue(spark, monkeypatch, case):
     for n, on_driver in ((case.rows, True), (case.rows + 1, False)):
         loops.clear()
         probes.clear()
-        for c in case.run(spark, n):
-            c.unpersist()
+        case.run(spark, n)
         assert probes == [1], (n, probes)
         assert bool(loops) == on_driver, (n, loops)
 
