@@ -107,7 +107,7 @@ EXTENDED = [
     "dd_cluster_safe_split",  # round 12: leakage-safe splitting (near-dup
     # clusters hash as a unit; singletons = dd_hash_split exactly)
     "sim_pq_adc_topk",  # round 13: oracle-backed PQ ADC leg (seeds-only
-    # codebooks, jvm fold kernel — the driver-hash face of the PQ suite;
+    # codebooks, the PQ encode kernel — the driver-hash face of the PQ suite;
     # the pl_pw_face_* diagnostics are slices of the already-timed
     # product DAG and are banded in bench_sf1, not re-timed here)
 ]

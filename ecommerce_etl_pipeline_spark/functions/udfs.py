@@ -3,9 +3,11 @@
 The engine's policy: the reference's row-wise ``df.apply`` patterns are
 replaced by native expressions everywhere (N2, SC*); pandas UDFs exist only
 for logic genuinely outside Spark's expression language, and they are
-Arrow-batched (vectorized columns in/out), never row-at-a-time. None of the
-oracle-checked queries use them (enforced by
-tests/test_plans.py::test_no_python_udfs_in_oracle_queries).
+Arrow-batched (vectorized columns in/out), never row-at-a-time. The two
+examples below are used by no oracle-checked query. The engine's only
+Arrow kernels are the PQ encode and nearest-centroid assignment kernels in
+``llmops/``; tests/test_plans.py::test_no_python_udfs_or_cartesian_in_oracle_queries
+admits no other Python evaluation in an oracle-checked plan.
 """
 
 from __future__ import annotations
@@ -29,63 +31,3 @@ def weighted_avg(price: pd.Series, qty: pd.Series) -> float:
     sum/sum rewrite). Usable in groupBy().agg() and over windows."""
     q = qty.sum()
     return float((price * qty).sum() / q) if q else 0.0
-
-
-@F.pandas_udf(DoubleType())
-def cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
-    """SCALAR pandas UDF cosine over two array<float> columns — the Arrow
-    alternative to llmops/similarity.py::cosine (JVM HOF fold), numpy-
-    vectorized within each batch.
-
-    Measured (2M 64-dim pairs, sf0.1): 6x FASTER than the HOF fold
-    per-core (HOF array lambdas evaluate interpreted, outside codegen;
-    numpy is SIMD) — but at 16-way parallelism the JVM path wins ~2x
-    (2.8s vs 5.3s): Arrow IPC + Python-worker overhead doesn't scale with
-    cores the way codegen does. Use for core-starved/batch-heavy rerank
-    stages. Since r14 the kernel is also FOLD-EXACT (sequential
-    accumulation, see inline comment), so both kernels are oracle-exact;
-    the pick between them is purely the parallelism/overhead trade. See
-    SCALING.md "Python boundary"."""
-    import numpy as np
-
-    # NULL or width-mismatched pairs emit NULL (the JVM zip_with fold
-    # returns NULL there too) instead of crashing np.stack on ragged input.
-    # Zero-norm vectors still produce NaN (0/0), matching the JVM division.
-    # Rows are stacked PER WIDTH: a batch mixing embedding dims (each pair
-    # internally consistent) is valid input and np.stack requires uniform
-    # shape, so each width group vectorizes independently.
-    n = len(a)
-    widths = np.full(n, -1, dtype=np.int64)
-    for i, (x, y) in enumerate(zip(a, b)):
-        if x is not None and y is not None and len(x) == len(y):
-            widths[i] = len(x)
-    ok = widths >= 0
-    out = np.full(n, np.nan)
-    for w in np.unique(widths[ok]):
-        sel = widths == w
-        # float64 up-cast mirrors the JVM path's per-element double cast —
-        # float32 accumulation would drift ~1e-7 from the exact kernel
-        av = np.stack(a[sel].to_numpy()).astype(np.float64)
-        bv = np.stack(b[sel].to_numpy()).astype(np.float64)
-
-        # SEQUENTIAL accumulation (r14): fold each reduction left-to-
-        # right from 0.0 with elementwise vector adds — the same IEEE op
-        # sequence as the JVM zip_with/aggregate fold and DuckDB's
-        # list_sum — instead of numpy's pairwise ``.sum(axis=1)``, whose
-        # 8-way multi-accumulator reduction (8 <= n <= 128) drifts in
-        # the last ulp. Starting from an explicit zeros() matches the
-        # fold's 0.0 init bit-wise even for -0.0 products. This makes
-        # the Arrow cosine bit-identical to the JVM kernel by
-        # construction, so sim_cosine_topk_arrow carries the same
-        # DuckDB oracle as its JVM twin (pinned in
-        # tests/test_similarity_recall.py).
-        def _seqsum(mat: "np.ndarray") -> "np.ndarray":
-            acc = np.zeros(mat.shape[0])
-            for t in range(mat.shape[1]):
-                acc += mat[:, t]
-            return acc
-
-        num = _seqsum(av * bv)
-        den = np.sqrt(_seqsum(av * av)) * np.sqrt(_seqsum(bv * bv))
-        out[sel] = num / den
-    return pd.Series(pd.arrays.FloatingArray(out, mask=~ok))

@@ -6,7 +6,8 @@ similarity search (brute-force + LSH-bucketed ANN), text analysis
 plumbing — all as lazy DataFrame programs designed for the 100 TB case:
 candidate generation via bucketing (never all-pairs), JVM-side higher-order
 functions in the hot path, pandas UDFs only at the sanctioned multimodal
-decode boundary.
+decode boundary and in the two Arrow vector kernels (nearest-centroid
+assignment, PQ encode).
 """
 
 from ecommerce_etl_pipeline_spark.llmops import (  # noqa: F401

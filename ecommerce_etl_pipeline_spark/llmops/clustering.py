@@ -156,35 +156,20 @@ def connected_components(
 
 
 def _assign_arrow_udf(centroids: list[list[float]], cids: list[int] | None = None):
-    """Arrow-batched nearest-centroid kernel — the vectorized twin of the
-    interpreted JVM assignment folds (:func:`assign_to_seeds` /
-    :func:`_assign_literal_centroids`), built the way the PQ encode kernel
-    was (similarity._pq_codes_arrow_udf, guide §4.2: batches to numpy
-    instead of interpreted per-row HOF eval).
+    """The nearest-centroid kernel: a SCALAR Arrow-batched pandas UDF
+    mapping a vector column to its (cluster, dist) struct against a fixed
+    centroid matrix (ids ``cids``, default ``0..k-1``, in ascending order).
 
-    Bit-parity is by construction, same doctrine as the r14 PQ kernel:
-    squared terms accumulate SEQUENTIALLY over the dim axis (``acc +=
-    d*d`` per element index — the same IEEE op sequence as the JVM fold's
-    left-to-right ``acc + (x-c)**2``; squares are never ``-0.0`` so the
-    zero-init is bit-neutral, and ``pow(x, 2.0)`` is the exactly-rounded
-    square, i.e. ``x*x``), and ties go to the first (lowest-index = lowest
-    cid once sorted) argmin exactly like ``array_min`` over (dist, cid)
-    structs. Pinned empirically per-row (cluster AND bit-level dist) and
-    on whole training trajectories in tests/test_llmops_algos.py.
+    Invariants, which the DuckDB oracles (list_sum, ORDER BY dist, cid)
+    and the pure-Python references in tests/test_llmops_algos.py replay
+    bit for bit:
 
-    Null or wrong-width vectors reproduce the JVM fold's ranking (r15,
-    ADVICE r14): the fold's zip_with pads width mismatches with NULLs, so
-    every distance is NULL and ``array_min`` over (dist, cid) structs
-    sorts NULL dist first — the row assigns to the LOWEST cid with a NULL
-    dist. The kernel emits exactly that (cluster = lowest cid, dist NULL),
-    pinned on explicit null/ragged rows in
-    test_assign_arrow_kernel_bit_exact_vs_jvm. The literal-matrix JVM
-    fold guards such rows to the same lowest index (pinned in
-    test_literal_centroid_kernels_agree_on_null_and_ragged_rows). The
-    ``pow(x, 2.0) == x*x`` identity above is a
-    JVM/libm assumption (fdlibm special-cases y==2; Math.pow is only
-    guaranteed within 1 ulp), so the parity pin is empirical per
-    host/JVM — ADVICE r14.
+    - each squared distance accumulates sequentially over the dim axis
+      (``d = x - c; acc += d * d`` per element index, from 0.0), never
+      pairwise;
+    - ties go to the first argmin, the lowest cid;
+    - a NULL or wrong-width vector assigns to the lowest cid with a NULL
+      dist.
     """
     import numpy as np
     from pyspark.sql.types import (
@@ -198,21 +183,20 @@ def _assign_arrow_udf(centroids: list[list[float]], cids: list[int] | None = Non
     k, dim = C.shape
     ids = list(range(k)) if cids is None else [int(c) for c in cids]
 
+    # the function name is the UDF name query plans show
     @F.pandas_udf(
         StructType(
             [
-                # LongType (r15, ADVICE r14): a bigint cid must not overflow
-                # inside the batch; callers cast back to their cid type
+                # long: a bigint cid must not overflow inside the batch;
+                # callers cast back to their cid type
                 StructField("cluster", LongType()),
                 StructField("dist", DoubleType()),
             ]
         )
     )
-    def _assign(vec: pd.Series) -> pd.DataFrame:
+    def nearest_centroid_kernel(vec: pd.Series) -> pd.DataFrame:
         vals = vec.to_numpy()
         ok = np.array([v is not None and len(v) == dim for v in vals], dtype=bool)
-        # unrankable rows (null / wrong width): the JVM fold ranks them
-        # (NULL dist sorts first) as (lowest cid, NULL dist) — reproduce it
         cl = np.full(len(vals), ids[0] if k else None, dtype=object)
         dist = np.full(len(vals), None, dtype=object)
         if ok.any():
@@ -228,7 +212,7 @@ def _assign_arrow_udf(centroids: list[list[float]], cids: list[int] | None = Non
                 dist[i] = float(dv)
         return pd.DataFrame({"cluster": cl, "dist": dist})
 
-    return _assign
+    return nearest_centroid_kernel
 
 
 def assign_to_seeds(
@@ -239,95 +223,39 @@ def assign_to_seeds(
     vec_col: str = "embedding",
     seed_id_col: str = "cid",
     seed_vec_col: str = "cvec",
-    kernel: str = "jvm",
 ) -> DataFrame:
     """Nearest-seed assignment (squared Euclidean, ties to lowest seed id):
-    returns (id, cluster, dist, vec). Seeds collapse to ONE broadcast row
-    holding a cid-sorted seed array; each point computes its argmin in a
-    per-row fold over that array. ZERO shuffles and no |points| x k row
-    fan-out — the previous form joined every point against every seed and
-    re-grouped |points| keys (a corpus-wide exchange carrying vectors)
-    just to take the min back out. Distances are the same sequential
-    zip_with fold, and argmin = array_min over (dist, cid) structs =
-    lexicographic min — bit-identical assignment incl. tie-to-lowest-cid,
-    so the DuckDB oracles replay unchanged. Shared by :func:`kmeans_step`
-    (which aggregates it) and
-    :func:`ecommerce_etl_pipeline_spark.llmops.dedup.semantic_dedup`
-    (which uses clusters as dedup candidate buckets).
-
-    ``kernel="arrow"`` (r14 optimization) swaps the interpreted per-row
-    HOF fold for the vectorized numpy batch kernel
-    (:func:`_assign_arrow_udf`) — bit-identical (cluster AND dist) by the
-    same sequential-accumulation construction as the PQ encode kernel,
-    pinned on the full fixture. The fold is the corpus-dominant per-row
-    term of every consumer (measured 2.8 s for ONE pass over 2,000
-    vectors at sf0.1 — ~1.4 ms/row of interpreted Catalyst eval), so this
-    is guide §4.2 applied to the assignment pass. ``"jvm"`` (default)
-    stays the Python-free reference venue for oracle parity surfaces and
-    streaming."""
+    returns (id, cluster, dist, vec). The seeds are hyperparameter-sized,
+    so they are collected once at build time (the same bounded class as a
+    join statistic) into the nearest-centroid kernel
+    (:func:`_assign_arrow_udf`); each point is then one narrow pass, with
+    zero shuffles and no |points| x k fan-out. Empty seeds give an empty
+    result. Shared by :func:`kmeans_step` (which aggregates it),
+    :func:`ivf_topk_portable`, ``similarity.ivfpq_topk``,
+    ``streams.ann_index_stream`` and ``dedup.semantic_dedup`` (which uses
+    clusters as dedup candidate buckets)."""
     p = points.select(F.col(id_col).alias("_pid"), F.col(vec_col).alias("_pv"))
     s = seeds.select(
         F.col(seed_id_col).alias("_cid"), F.col(seed_vec_col).alias("_cv")
     )
-    if kernel == "arrow":
-        # seeds are hyperparameter-sized by the operator's contract, so the
-        # build-time collect is the same bounded class as a join statistic;
-        # sort (cid, cvec) to mirror the JVM venue's array_sort order
-        cid_type = s.schema["_cid"].dataType.simpleString()
-        rows = sorted(
-            ((r["_cid"], [float(x) for x in r["_cv"]]) for r in s.collect()),
-            key=lambda rc: (rc[0], rc[1]),
-        )
-        if not rows:
-            # empty seeds => empty result, matching the JVM venue's filter
-            return p.filter(F.lit(False)).select(
-                F.col("_pid").alias("id"),
-                F.lit(None).cast(cid_type).alias("cluster"),
-                F.lit(None).cast("double").alias("dist"),
-                F.col("_pv").alias("vec"),
-            )
-        udf = _assign_arrow_udf(
-            [cv for _, cv in rows], cids=[c for c, _ in rows]
-        )
-        return p.withColumn("_a", udf(F.col("_pv"))).select(
+    cid_type = s.schema["_cid"].dataType.simpleString()
+    rows = sorted(
+        ((r["_cid"], [float(x) for x in r["_cv"]]) for r in s.collect()),
+        key=lambda rc: (rc[0], rc[1]),
+    )
+    if not rows:
+        return p.filter(F.lit(False)).select(
             F.col("_pid").alias("id"),
-            F.col("_a.cluster").cast(cid_type).alias("cluster"),
-            F.col("_a.dist").alias("dist"),
+            F.lit(None).cast(cid_type).alias("cluster"),
+            F.lit(None).cast("double").alias("dist"),
             F.col("_pv").alias("vec"),
         )
-    # k is hyperparameter-sized: the whole seed set rides as one array in
-    # one row (struct sorts by leading field, so the array is cid-ordered)
-    seed_row = s.agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("_cid"), F.col("_cv")))
-        ).alias("_seeds")
-    )
-    dist_to = lambda cv: F.aggregate(  # noqa: E731
-        F.zip_with(
-            F.col("_pv"), cv, lambda a, b: (a.cast("double") - b.cast("double")) ** 2
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("_seeds"),
-            lambda sd: F.struct(
-                dist_to(sd["_cv"]).alias("dist"), sd["_cid"].alias("cluster")
-            ),
-        )
-    )
-    return (
-        # empty seeds => empty result, matching the old inner join
-        p.crossJoin(F.broadcast(seed_row))
-        .filter(F.size("_seeds") > 0)
-        .withColumn("_best", best)
-        .select(
-            F.col("_pid").alias("id"),
-            F.col("_best.cluster").alias("cluster"),
-            F.col("_best.dist").alias("dist"),
-            F.col("_pv").alias("vec"),
-        )
+    udf = _assign_arrow_udf([cv for _, cv in rows], cids=[c for c, _ in rows])
+    return p.withColumn("_a", udf(F.col("_pv"))).select(
+        F.col("_pid").alias("id"),
+        F.col("_a.cluster").cast(cid_type).alias("cluster"),
+        F.col("_a.dist").alias("dist"),
+        F.col("_pv").alias("vec"),
     )
 
 
@@ -385,80 +313,6 @@ def kmeans_step(
     )
 
 
-def _assign_literal_centroids(
-    pts: DataFrame, centroids: list[list[float]], *, kernel: str = "jvm"
-) -> DataFrame:
-    """Nearest-centroid assignment against a LITERAL centroid matrix:
-    distances to ALL centroids in ONE aggregate pass (the single-fold rule
-    from SCALING.md: one array traversal carrying a k-wide accumulator
-    instead of k interpreted folds), against the column-major literal
-    matrix; accumulator j updates in element order, so each distance is
-    bit-identical to a separate fold. Neutral at demo k=4 (per-iteration
-    job overhead dominates locally); at production cell counts (k in the
-    hundreds) it removes k-1 array re-traversals per row. Argmin =
-    array_min over (dist, index) structs = lexicographic min — same
-    tie-to-lowest-index as assign_to_seeds. ``pts`` must carry ``_pid`` /
-    ``_pv``; returns it with ``_cluster`` added. Shared by the FP and
-    portable trainers (centroid literals are reprs of Python floats, which
-    round-trip exactly, so the fold sees the same doubles DuckDB derives).
-    """
-    if kernel == "arrow":
-        # r14: the numpy batch kernel (see _assign_arrow_udf) replaces the
-        # interpreted k-wide accumulator fold AND the per-iteration cost of
-        # parsing + recompiling a k*dim-literal expression string (at k=16,
-        # dim=64 that string carries 1,024 double literals and changes
-        # every iteration — measured as the dominant term of
-        # kmeans_train_portable at sf0.1: 7.8 s of its ~8 s). The UDF's
-        # codegen source is iteration-invariant (centroids live in the
-        # function object, not the plan), so nothing recompiles.
-        udf = _assign_arrow_udf(centroids)
-        return (
-            pts.withColumn("_a", udf(F.col("_pv")))
-            # cast back to int: centroid indexes are 0..k-1 (the UDF's
-            # cluster field widened to long for arbitrary cids — r15)
-            .withColumn("_cluster", F.col("_a.cluster").cast("int"))
-            .drop("_a")
-        )
-    k = len(centroids)
-    dim = len(centroids[0])
-    cols = "array(" + ",".join(
-        "array(" + ",".join(f"{centroids[j][i]!r}D" for j in range(k)) + ")"
-        for i in range(dim)
-    ) + ")"
-    zipped = F.zip_with(
-        "_pv",
-        F.sequence(F.lit(1), F.size("_pv")),
-        lambda x, i: F.struct(x.cast("double").alias("x"), i.alias("i")),
-    )
-    dists = F.aggregate(
-        zipped,
-        F.expr(f"array_repeat(0.0D, {k})"),
-        lambda acc, e: F.zip_with(
-            acc,
-            F.element_at(F.expr(cols), e["i"]),
-            # ** 2 (POWER), not x*x: keeps each term bit-identical to
-            # assign_to_seeds' fold, which the step-parity test compares
-            lambda a, c: a + (e["x"] - c) ** 2,
-        ),
-    )
-    best = F.array_min(
-        F.zip_with(
-            F.col("_d"),
-            F.sequence(F.lit(0), F.lit(k - 1)),
-            lambda d, i: F.struct(d.alias("_dist"), i.alias("_c")),
-        )
-    )["_c"]
-    # unrankable rows (null / size != dim) never enter the fold — a longer
-    # row would index past the matrix (an ANSI error) and a shorter one
-    # would rank on a prefix — and take index 0, as the arrow kernel does
-    ok = F.size("_pv") == dim
-    return (
-        pts.withColumn("_d", F.when(ok, dists))
-        .withColumn("_cluster", F.coalesce(best, F.lit(0)))
-        .drop("_d")
-    )
-
-
 def kmeans_train(
     points: DataFrame,
     *,
@@ -467,7 +321,6 @@ def kmeans_train(
     vec_col: str = "embedding",
     max_iterations: int = 10,
     tol: float = 1e-6,
-    kernel: str = "arrow",
 ) -> tuple[list[list[float]], int]:
     """DataFrame-native Lloyd's algorithm: iterate nearest-centroid
     assignment + centroid recomputation until the max centroid shift falls
@@ -493,9 +346,8 @@ def kmeans_train(
     iterations = 0
     for _ in range(max_iterations):
         iterations += 1
-        assigned = _assign_literal_centroids(pts, centroids, kernel=kernel).select(
-            F.col("_pv"), F.col("_cluster")
-        )
+        nearest = _assign_arrow_udf(centroids)(F.col("_pv"))["cluster"]
+        assigned = pts.select("_pv", nearest.cast("int").alias("_cluster"))
         sums = (
             assigned.select("_cluster", F.posexplode("_pv").alias("_d", "_v"))
             .groupBy("_cluster", "_d")
@@ -527,7 +379,7 @@ def _driver_kmeans_loop_portable(
     loop over an in-memory float64 matrix. Bit-parity with the
     distributed venue holds term by term — assignment distances are the
     same sequential per-dim accumulation of exactly-rounded squares the
-    arrow/JVM kernels compute (first-argmin = tie-to-lowest-cid);
+    nearest-centroid kernel computes (first-argmin = tie-to-lowest-cid);
     per-cluster sums are int64 over the same ``floor(x*1e9 + 0.5)``
     quantization (integer, order-independent, overflow-guarded by the
     caller); the centroid update reuses the exact ``(float(sum)/count)
@@ -556,6 +408,38 @@ def _driver_kmeans_loop_portable(
     return [[float(v) for v in c] for c in C]
 
 
+def _probed_vectors(head, pts: DataFrame, k: int):
+    """Seeds and driver matrix of :func:`kmeans_train_portable` from its
+    cell probe: ``(centroids, X)``, with ``X`` None when a vector is NULL,
+    ragged, off the seed width or not finite. The seeds are the k lowest
+    ids, NULL first as ``orderBy`` sorts them. Returns None when the ids
+    do not survive pandas exactly (take the seed query)."""
+    import numpy as np
+    from pyspark.sql.types import IntegralType
+
+    head = head.sort_values(["_r", "_d"], kind="stable")
+    r = head["_r"].to_numpy()
+    start = np.flatnonzero(np.r_[True, r[1:] != r[:-1]])
+    end = np.r_[start[1:], len(r)]
+    integral = isinstance(pts.schema["_pid"].dataType, IntegralType)
+    ids = _probed_ids(head["_pid"].iloc[start], integral)
+    if ids is None:
+        return None
+    seeds = sorted(range(len(ids)), key=lambda i: (ids[i] is not None, ids[i]))[:k]
+    d, x = head["_d"].to_numpy(), head["_x"].astype("float64").to_numpy()
+    centroids = [
+        None if d[start[i]] != d[start[i]] else [float(v) for v in x[start[i] : end[i]]]
+        for i in seeds
+    ]
+    dim = len(centroids[0])
+    X = None
+    if not head["_d"].isna().any() and ((end - start) == dim).all():
+        X = x.reshape(len(start), dim)
+        if not np.isfinite(X).all():
+            X = None
+    return centroids, X
+
+
 def kmeans_train_portable(
     points: DataFrame,
     *,
@@ -564,7 +448,6 @@ def kmeans_train_portable(
     vec_col: str = "embedding",
     iterations: int = 5,
     nano: int = 10**9,
-    kernel: str = "arrow",
 ) -> list[list[float]]:
     """Lloyd's k-means whose every cross-engine-sensitive step is made
     engine-portable — the oracle-checkable twin of :func:`kmeans_train`
@@ -581,50 +464,47 @@ def kmeans_train_portable(
       Python, Spark and DuckDB at any sum magnitude (not just < 2^53);
     - a FIXED iteration count replaces the tol early-stop (a data-driven
       break cannot unroll into SQL);
-    - assignment distances reuse the literal-matrix single fold, whose
-      left-to-right semantics DuckDB's list_sum replays exactly
-      (ml_kmeans_step's proven parity).
+    - assignment runs the nearest-centroid kernel, whose sequential
+      per-dim accumulation DuckDB's list_sum replays exactly.
 
     Cost of portability: ~1e-9 per-dimension truncation per round —
     invisible to any assignment that isn't already a coin flip. Returns
     the final centroid matrix (k x dim floats).
 
-    Driver venue: up to ``venue.DRIVER_CELLS // dim`` rows whose vectors
-    all have the seed width, no nulls or NaNs, and int64-exact nano sums
+    Driver venue: up to ``venue.DRIVER_CELLS`` vector cells, every vector
+    of the seed width with no nulls or NaNs, and int64-exact nano sums
     (:func:`_driver_kmeans_loop_portable`); otherwise the distributed loop
-    runs with the ``kernel`` of choice.
+    runs. The probe counts cells (one probed row per element, one for a
+    NULL or empty vector), so it needs no width up front, and under budget
+    it also holds the seeds: one Spark job in all.
     """
-    pts = points.select(F.col(id_col).alias("_pid"), F.col(vec_col).alias("_pv"))
-    first = pts.orderBy("_pid").limit(k).collect()
-    centroids = [[float(x) for x in r["_pv"]] for r in first]
-    dim = len(centroids[0])
-    head = venue.driver_rows(
-        pts.select("_pv"), venue.DRIVER_CELLS // max(dim, 1), "kmeans_train_portable"
-    )
-    if head is not None:
-        import numpy as np
+    import numpy as np
 
-        vals = head["_pv"].to_numpy()
-        try:
-            ok = all(
-                v is not None and len(v) == dim and None not in list(v)
-                for v in vals
-            )
-            X = np.stack(vals).astype(np.float64) if ok else None
-        except (TypeError, ValueError):
-            X = None  # malformed rows: the distributed venue defines them
-        if X is not None and np.isfinite(X).all():
+    pts = points.select(F.col(id_col).alias("_pid"), F.col(vec_col).alias("_pv"))
+    # _r numbers the vectors BEFORE the explode (in the same select it
+    # would number the cells)
+    cells = pts.withColumn("_r", F.monotonically_increasing_id()).select(
+        "_r", "_pid", F.posexplode_outer("_pv").alias("_d", "_x")
+    )
+    head = venue.driver_rows(cells, venue.DRIVER_CELLS, "kmeans_train_portable")
+    probed = None if head is None else _probed_vectors(head, pts, k)
+    if probed is None:
+        first = pts.orderBy("_pid").limit(k).collect()
+        centroids = [[float(x) for x in r["_pv"]] for r in first]
+    else:
+        centroids, X = probed
+        if X is not None:
             # every quantized term is at most max|x| * nano + 1 in magnitude
             qmax = float(np.abs(X).max(initial=0.0)) * nano + 1.0
             if venue.fits_int64_sum(len(X), qmax):
                 return _driver_kmeans_loop_portable(
                     X, centroids, iterations=iterations, nano=nano
                 )
+    dim = len(centroids[0])
     q = F.floor(F.col("_v").cast("double") * nano + F.lit(0.5)).cast("bigint")
     for _ in range(iterations):
-        assigned = _assign_literal_centroids(pts, centroids, kernel=kernel).select(
-            F.col("_pv"), F.col("_cluster")
-        )
+        nearest = _assign_arrow_udf(centroids)(F.col("_pv"))["cluster"]
+        assigned = pts.select("_pv", nearest.cast("int").alias("_cluster"))
         sums = (
             assigned.select("_cluster", F.posexplode("_pv").alias("_d", "_v"))
             .groupBy("_cluster", "_d")
@@ -734,7 +614,6 @@ def ivf_topk_portable(
     n_probe: int = 2,
     k: int = 10,
     iterations: int = 5,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """IVF approximate top-k on the PORTABLE quantizer — the oracle-
     checkable twin of :func:`ivf_topk` (VERDICT r7 #7): the coarse
@@ -746,8 +625,8 @@ def ivf_topk_portable(
     just its recall.
 
     Scale shape (identical to ivf_topk): centroids are hyperparameter-
-    sized and broadcast; corpus assignment is one narrow scan (per-row
-    fold against the broadcast seed array, zero shuffles); probes are
+    sized; corpus assignment is one narrow scan of the nearest-centroid
+    kernel (zero shuffles); probes are
     |queries| x n_probe rows and broadcast into the candidate join, so
     each query ranks ~corpus * n_probe / n_cells members instead of the
     full corpus. Ties everywhere go to the lowest cid / neighbor_id, the
@@ -755,26 +634,22 @@ def ivf_topk_portable(
     """
     centroids = kmeans_train_portable(
         corpus, k=n_cells, id_col=id_col, vec_col=vec_col,
-        iterations=iterations, kernel=kernel,
+        iterations=iterations,
     )
     spark = corpus.sparkSession
     seeds = spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)], "cid INT, cvec ARRAY<DOUBLE>"
     )
-    # corpus -> cell: assign_to_seeds' fold is the oracle af CTE's proven
-    # parity surface (ml_kmeans_train, green since round 4); the arrow
-    # kernel is its bit-identical vectorized twin (r14)
-    assigned = assign_to_seeds(
-        corpus, seeds, id_col=id_col, vec_col=vec_col, kernel=kernel
-    ).select(
+    # corpus -> cell, replayed by the oracle's af CTE
+    assigned = assign_to_seeds(corpus, seeds, id_col=id_col, vec_col=vec_col).select(
         F.col("id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
         F.col("vec"),
     )
 
-    # query -> n_probe nearest cells: same distance fold as the
-    # assignment, but slice of the (dist, cid)-sorted array instead of
-    # array_min — lexicographic struct sort = ORDER BY dist, cid
+    # query -> n_probe nearest cells: the sequential distance fold, then a
+    # slice of the (dist, cid)-sorted array — lexicographic struct sort =
+    # ORDER BY dist, cid
     from ecommerce_etl_pipeline_spark.llmops.similarity import cosine
 
     q = queries.select(

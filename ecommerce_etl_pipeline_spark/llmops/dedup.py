@@ -1174,7 +1174,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     n_seeds: int | None = None,
     threshold: float = 0.3,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication"): coarse-cluster the
@@ -1216,14 +1215,12 @@ def semantic_dedup(
     # double), so the oracle may keep computing norms inline.
     # CACHED: the seed assignment is the corpus-dominant per-row pass, and
     # this frame feeds THREE consumers (both pair-join sides and the final
-    # keep/drop join) — uncached, each re-folds every vector against all
-    # n_seeds centroids. Rows are thin (id, cluster, vec, nrm).
-    # kernel="arrow" (r14) runs the vectorized bit-identical assignment
-    # kernel instead of the interpreted HOF fold.
+    # keep/drop join) — uncached, each re-runs the assignment kernel over
+    # every vector. Rows are thin (id, cluster, vec, nrm).
     assigned = caches.persist(
-        assign_to_seeds(
-            vectors, seeds, id_col=id_col, vec_col=vec_col, kernel=kernel
-        ).select("id", "cluster", "vec", norm(F.col("vec")).alias("nrm"))
+        assign_to_seeds(vectors, seeds, id_col=id_col, vec_col=vec_col).select(
+            "id", "cluster", "vec", norm(F.col("vec")).alias("nrm")
+        )
     )
     # within-cluster candidate pairs: the self-join key IS the cluster —
     # unhinted per the JOIN STRATEGY doctrine (both sides corpus-sized)

@@ -52,24 +52,15 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    kernel: str = "jvm",
 ) -> DataFrame:
     """Exact cosine top-k per query vector.
 
     ``queries`` (small) broadcasts; the corpus is scanned once per batch of
-    queries — the optimal exact plan when |queries| ≪ |corpus|.
-
-    ``kernel`` picks the dot-product implementation:
-    - ``"jvm"`` — HOF fold (zip_with + aggregate). Sequential left-to-right
-      summation, bit-identical to the DuckDB oracle: the correctness path,
-      and the fastest at full parallelism.
-    - ``"arrow"`` — numpy over a scalar pandas UDF. Measured 6x faster
-      PER-CORE at 64-dim (HOF lambdas run interpreted, outside codegen;
-      numpy is SIMD over Arrow batches), but ~2x slower at 16-way
-      parallelism (Arrow IPC + worker overhead) — the pick when cores are
-      contended or batches are huge. Summation is pairwise, so final ulps
-      can differ from the oracle; ranking ties still break
-      deterministically by neighbor_id. See SCALING.md "Python boundary".
+    queries — the optimal exact plan when |queries| ≪ |corpus|. The cosine
+    is the JVM fold (:func:`cosine`): sequential left-to-right summation in
+    doubles, bit-identical to DuckDB's ``list_sum`` (the sim_cosine_topk
+    oracle). A NULL or width-mismatched pair scores NULL and ranks last;
+    ties break by neighbor_id.
     """
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
@@ -77,17 +68,9 @@ def brute_force_topk(
     c = ensure_parallelism(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec"))
     )
-    if kernel == "arrow":
-        from ecommerce_etl_pipeline_spark.functions.udfs import cosine_arrow
-
-        cos_col = cosine_arrow(F.col("query_vec"), F.col("vec"))
-    elif kernel == "jvm":
-        cos_col = cosine(F.col("query_vec"), F.col("vec"))
-    else:
-        raise ValueError(f"unknown kernel: {kernel!r} (use 'jvm' or 'arrow')")
     scored = (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cos_col)
+        .withColumn("cosine", cosine(F.col("query_vec"), F.col("vec")))
         .select("query_id", "neighbor_id", "cosine")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -977,7 +960,7 @@ def _unit_rows_np(np, vec_rows):
     SAME IEEE op sequence (per-element exactly-rounded squares accumulated
     sequentially left-to-right, sqrt, per-element divide; zero-norm rows
     pass through unscaled), so the unit vectors are bit-identical to the
-    JVM fold's. Shared by pq_train and the arrow encode kernel."""
+    JVM fold's. Shared by pq_train and the PQ encode kernel."""
     X = np.array(vec_rows, dtype=np.float64)
     if X.size == 0:
         return X
@@ -1013,7 +996,7 @@ def pq_train(
     assignment expressions pay the Janino compile tax every iteration
     (measured 13-31s for a 500-row corpus; numpy trains in
     milliseconds). The corpus-scaled work — the ENCODE pass over every
-    row and the ADC scan — stays JVM-side in :func:`pq_encode` /
+    row and the ADC scan — stays in Spark, in :func:`pq_encode` /
     :func:`pq_topk`.
 
     Deterministic: seeds are the k lowest-id sample rows' subvectors (no
@@ -1034,12 +1017,10 @@ def pq_train(
     )
     if len(rows) < k:
         raise ValueError(f"need >= {k} rows to seed, got {len(rows)}")
-    # r14: unit-normalize in numpy AFTER the collect instead of running the
-    # interpreted _unit_vec HOF inside the collected scan (the fold was
-    # ~1.5 s of pq_train's ~2 s warm cost at sf0.1). Same op sequence as
+    # unit-normalize in numpy after the collect, with the op sequence of
     # _unit_vec/norm: sequential sum of exactly-rounded squares, sqrt,
-    # per-element divide; zero vectors pass through — bit-identical unit
-    # vectors, re-pinned by the kernel-parity and ADC-oracle tests.
+    # per-element divide; zero vectors pass through (pinned by the ADC
+    # oracle)
     X = _unit_rows_np(np, [r["_v"] for r in rows])
     codebooks = []
     for j in range(m):
@@ -1060,32 +1041,12 @@ def pq_train(
     return codebooks
 
 
-def _dist2_lit(vec: Column, centroid: list[float]) -> Column:
-    """Squared L2 between a (sub)vector column and a literal centroid —
-    one left-to-right fold, JVM-side."""
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            F.array(*[F.lit(float(v)) for v in centroid]),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _sub_dist2(vec: Column, offset: int, centroid: list[float]) -> Column:
-    """Squared L2 between a vector slice and a literal centroid."""
-    return _dist2_lit(F.slice(vec, offset + 1, len(centroid)), centroid)
-
-
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
     *,
     vec_col: str = "embedding",
     prefix: str = "_pq",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Append one small int code column per subspace: the argmin-distance
     centroid, ties to the lower code. One narrow scan — this is the
@@ -1093,76 +1054,23 @@ def pq_encode(
     per row; at rest the codes live next to the id and the vectors need
     never be scanned again for ANN.
 
-    Kernels (r11 VERDICT brief #3 / What's wrong #2):
-
-    - ``kernel="arrow"`` (default): one Arrow-batched pandas UDF computes
-      all m argmins per batch with numpy ``((X[:,None,:]-C)**2).sum(-1)
-      .argmin(1)`` — the cosine_arrow precedent (functions/udfs.py). The
-      r11-measured JVM-HOF constant (~10s for 5k rows at sf0.1, ~5M
-      interpreted lambda evaluations at m=8,k=16) collapses to a handful
-      of SIMD ops per batch.
-    - ``kernel="jvm"``: the original HOF-fold form (interpreted but
-      Python-free), retained as the parity twin —
-      tests/test_similarity_recall.py pins the two kernels code-for-code
-      on the full embeddings fixture.
-
-    Kernel parity is structural SINCE r14 — and still empirically
-    pinned. The r12-r13 state was weaker (ADVICE r12 #1): numpy's
-    last-axis ``.sum(-1)`` uses an 8-way multi-accumulator pairwise
-    reduction for 8 <= n <= 128 (the fixture's sub-dim is exactly 8), so
-    arrow DISTANCES could drift from the JVM's left-to-right fold in the
-    last ulp and only the CODES were parity-pinned, forcing fold-exact
-    consumers (the oracle-backed ADC face) onto the interpreted JVM
-    kernel — the most expensive entry in the r13 bench. The r14 kernel
-    replaces the pairwise sum with an explicit sequential accumulation
-    over the sub-dim axis (elementwise vector adds in a Python loop —
-    no reassociation, same IEEE op sequence as the JVM fold and DuckDB's
-    list_sum), so BOTH kernels now produce bit-identical distances by
-    construction and the ADC cert face runs on the arrow kernel at
-    arrow speed. Pinned empirically on the full embeddings fixture
-    (distances AND codes, both kernels, plus the DuckDB triple) in
-    tests/test_similarity_recall.py. Ties break to the lower code on
-    both (struct least / first argmin). The UDF is Arrow-batched, never
-    row-at-a-time; pandas UDFs stay out of JVM-only oracle paths by the
-    plan gate, and the ADC face's UDF output is itself oracle-checked
-    bit-exact against the DuckDB replay."""
-    sub = len(codebooks[0][0])
-    if kernel == "arrow":
-        # r14: the kernel takes the RAW vector and unit-normalizes inside
-        # the batch (bit-identical _unit_rows_np) — the JVM _unit_vec HOF
-        # pass this scan previously paid per row (interpreted norm fold +
-        # per-element divide) is gone; kernel parity and the ADC oracle
-        # re-pin the whole chain.
-        codes = _pq_codes_arrow_udf(codebooks)(F.col(vec_col))
-        out = df.withColumn("_pqcodes", codes)
-        for j in range(len(codebooks)):
-            out = out.withColumn(
-                f"{prefix}{j}", F.col("_pqcodes").getItem(j).cast("int")
-            )
-        return out.drop("_pqcodes")
-    out = _unit_vec(df, vec_col, "_uvenc")
-    for j, book in enumerate(codebooks):
-        cands = [
-            F.struct(
-                _sub_dist2(F.col("_uvenc"), j * sub, c).alias("d"),
-                F.lit(ci).alias("c"),
-            )
-            for ci, c in enumerate(book)
-        ]
-        out = out.withColumn(
-            f"{prefix}{j}",
-            F.least(*cands).cast("struct<d:double,c:int>").getField("c"),
-        )
-    return out.drop("_uvenc")
+    The kernel is one Arrow-batched pandas UDF over the RAW vector column:
+    it unit-normalizes each batch (:func:`_unit_rows_np`, the op sequence
+    of :func:`_unit_vec`) and takes all m argmins with numpy. Each squared
+    sub-distance accumulates sequentially over the sub-dim axis (no
+    pairwise reassociation), the same IEEE op sequence as DuckDB's
+    ``list_sum``, so the sim_pq_adc_topk oracle replays the codes bit for
+    bit. A NULL or wrong-width vector gets NULL codes."""
+    codes = _pq_codes_arrow_udf(codebooks)(F.col(vec_col))
+    out = df.withColumn("_pqcodes", codes)
+    for j in range(len(codebooks)):
+        out = out.withColumn(f"{prefix}{j}", F.col("_pqcodes").getItem(j).cast("int"))
+    return out.drop("_pqcodes")
 
 
 def _pq_codes_arrow_udf(codebooks: list[list[list[float]]]):
-    """Build the Arrow batch kernel for :func:`pq_encode`: a SCALAR
-    pandas UDF mapping a RAW vector column to the m PQ codes
-    (array<int>). Unit normalization happens inside the batch
-    (:func:`_unit_rows_np`, bit-identical to the JVM _unit_vec fold) so
-    the scan pays no interpreted HOF pass. Null/width-mismatched vectors
-    yield NULL codes (the JVM fold's behavior on null input)."""
+    """Build the Arrow batch kernel of :func:`pq_encode`: a SCALAR pandas
+    UDF mapping a raw vector column to its m PQ codes (array<int>)."""
     import numpy as np
     from pyspark.sql.types import ArrayType, IntegerType
 
@@ -1171,8 +1079,9 @@ def _pq_codes_arrow_udf(codebooks: list[list[list[float]]]):
     sub = cents[0].shape[1]
     dim = m * sub
 
+    # the function name is the UDF name query plans show
     @F.pandas_udf(ArrayType(IntegerType()))
-    def _codes(uv: pd.Series) -> pd.Series:
+    def pq_encode_kernel(uv: pd.Series) -> pd.Series:
         vals = uv.to_numpy()
         ok = np.array(
             [v is not None and len(v) == dim for v in vals], dtype=bool
@@ -1185,26 +1094,18 @@ def _pq_codes_arrow_udf(codebooks: list[list[list[float]]]):
                 Xj = X[:, j * sub : (j + 1) * sub]
                 sq = Xj[:, None, :] - cents[j][None, :, :]
                 sq *= sq
-                # SEQUENTIAL accumulation over the sub-dim axis (r14):
-                # d2 = ((sq0 + sq1) + sq2) + ... exactly like the JVM
-                # HOF fold (acc starts at 0.0; 0.0 + sq0 == sq0 bit-wise
-                # since squares are never -0.0) and DuckDB's list_sum.
-                # numpy's .sum(-1) would use a pairwise multi-accumulator
-                # reduction for 8 <= n <= 128 and drift in the last ulp
-                # (ADVICE r12 #1); the explicit loop is elementwise adds
-                # only — no reassociation — so the arrow kernel's
-                # distances (not just its codes) are now bit-identical
-                # to the jvm kernel by construction, re-pinned
-                # empirically in tests/test_similarity_recall.py.
+                # d2 = ((sq0 + sq1) + sq2) + ...: sequential, like
+                # list_sum. numpy's .sum(-1) reduces pairwise for
+                # 8 <= n <= 128 and can differ in the last ulp.
                 d2 = sq[:, :, 0].copy()
                 for t in range(1, sub):
                     d2 += sq[:, :, t]
-                codes[:, j] = d2.argmin(axis=1)
+                codes[:, j] = d2.argmin(axis=1)  # first minimum: lowest code
             for i, row in zip(np.flatnonzero(ok), codes):
                 out[i] = row.tolist()
         return pd.Series(out)
 
-    return _codes
+    return pq_encode_kernel
 
 
 def pq_topk(
@@ -1215,7 +1116,6 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: each query builds a
     driver-side m x |codebook| lookup table of exact subspace distances
@@ -1236,11 +1136,6 @@ def pq_topk(
             corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
             codebooks,
             vec_col=vec_col,
-            # both kernels are fold-exact since r14 (the arrow kernel's
-            # sequential accumulation is bit-identical to the JVM fold
-            # by construction); the oracle-backed ADC face runs the
-            # arrow default, kernel="jvm" remains the parity twin
-            kernel=kernel,
         ).select("neighbor_id", *[f"_pq{j}" for j in range(m)])
     )
     qrows = (
@@ -1339,7 +1234,6 @@ def ivfpq_topk(
     beam: int = 100,
     k: int = 10,
     iterations: int = 5,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """IVF+PQ — the production ANN index composition (what FAISS calls
     IVFPQ, the shape large-scale retrieval actually deploys): a coarse
@@ -1369,18 +1263,14 @@ def ivfpq_topk(
     sub = len(codebooks[0][0])
     centroids = kmeans_train_portable(
         corpus, k=n_cells, id_col=id_col, vec_col=vec_col,
-        iterations=iterations, kernel=kernel,
+        iterations=iterations,
     )
     spark = corpus.sparkSession
     seeds = spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)], "cid INT, cvec ARRAY<DOUBLE>"
     )
-    # one fused write-side pass: cell + PQ codes per corpus row (both the
-    # cell assignment and the PQ encode run the arrow kernels by default
-    # since r14 — bit-identical to the JVM folds, pinned)
-    assigned = assign_to_seeds(
-        corpus, seeds, id_col=id_col, vec_col=vec_col, kernel=kernel
-    ).select(
+    # one fused write-side pass: cell + PQ codes per corpus row
+    assigned = assign_to_seeds(corpus, seeds, id_col=id_col, vec_col=vec_col).select(
         F.col("id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
         F.col("vec"),

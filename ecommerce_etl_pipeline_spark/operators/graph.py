@@ -25,8 +25,7 @@ strategy is stats-driven (the repo's join doctrine).
 The FP (:func:`pagerank`) and integer-exact (:func:`pagerank_portable`)
 variants differ ONLY in their arithmetic — initial rank, per-edge
 contribution, dangling redistribution, rank update — so both are thin
-parameterizations of one shared loop (:func:`_run_rank_loop`), the same
-factoring the k-means twins use via ``_assign_literal_centroids``.
+parameterizations of one shared loop (:func:`_run_rank_loop`).
 """
 
 from __future__ import annotations

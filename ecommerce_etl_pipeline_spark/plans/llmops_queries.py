@@ -2268,11 +2268,9 @@ def sim_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus rows, pure data selection, no FP-order-sensitive k-means means)
 # so the ENTIRE pipeline unrolls into DuckDB CTEs. Bit-parity chain:
 # unit vectors via the certified list_sum fold (the cosine precedent),
-# code assignment by the PRODUCTION arrow encode kernel (since r14 its
-# sequential accumulation is bit-identical to the JVM fold and DuckDB
-# list_sum by construction — r13 had to pass kernel="jvm" here because
-# the then-pairwise arrow sums could drift a ulp at sub-dim 8, ADVICE
-# r12 #1; both kernels stay pinned vs the raw DuckDB replay),
+# code assignment by the PQ encode kernel (its sequential sub-distance
+# accumulation is DuckDB list_sum's op sequence; pinned vs the raw DuckDB
+# replay),
 # ADC via Python-sequential LUT sums == the oracle's per-subspace folds,
 # raw-double ordering with id tiebreak (the certified-cosine exception).
 # The TRAINED operating point stays covered by sim_pq_rerank /
@@ -2359,13 +2357,10 @@ _ADC_DIST = " + ".join(_adc_term(j) for j in range(_ADC_M))
     "iterations — unit-subvectors of the 16 lowest-id rows, exact data "
     "selection) so encode, per-query LUTs, ADC sums and ranking all "
     "replay in single-statement SQL; the corpus scan reads only the m "
-    "int codes (the 32x narrower ADC scan). Since r14 the cert runs on "
-    "the PRODUCTION arrow encode kernel: its sequential-accumulation "
-    "inner sum is bit-identical to the JVM fold and DuckDB list_sum by "
-    "construction (pinned both-kernel vs the raw DuckDB replay in "
-    "tests/test_similarity_recall.py), so the driver's hash now covers "
-    "the exact operating point sim_pq_rerank ships — r13 paid a ~3x "
-    "interpreted-fold premium here for the same guarantee. Ordering by "
+    "int codes (the 32x narrower ADC scan). The encode runs the PQ "
+    "encode kernel sim_pq_rerank ships: its sequential-accumulation "
+    "inner sum is DuckDB list_sum's op sequence (pinned bit-exact vs the "
+    "raw DuckDB replay in tests/test_similarity_recall.py). Ordering by "
     "raw fold-identical doubles with id tiebreak (the certified-cosine "
     "exception). llmops/similarity.py::pq_train(max_iterations=0)/pq_topk.",
 )
@@ -2375,7 +2370,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, m=_ADC_M, k=_ADC_KCB, max_iterations=0
     )
     res = similarity.pq_topk(
-        emb, emb.filter(F.col("vec_id") < 5), books, k=10, kernel="arrow"
+        emb, emb.filter(F.col("vec_id") < 5), books, k=10
     )
     return res.select(
         "query_id",
@@ -3822,67 +3817,6 @@ def txt_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "entropy"
             ),
         )
-    )
-
-
-@register(
-    "sim_cosine_topk_arrow",
-    # Verbatim twin of sim_cosine_topk's oracle. DELIBERATELY duplicated
-    # rather than shared through a constant: rewriting the JVM twin's
-    # registration to import a constant would be a touched-code re-cert
-    # on a deferred-window query (slot economy); the two strings are
-    # pinned IDENTICAL by tests/test_similarity_recall.py::
-    # test_cosine_arrow_oracle_is_verbatim_jvm_twin, so they cannot
-    # drift apart silently.
-    oracle=f"""
-    WITH q AS (
-        SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5
-    ),
-    scored AS (
-        SELECT q.query_id, e.vec_id AS neighbor_id,
-               list_sum(list_transform(generate_series(1, len(e.embedding)),
-                        i -> CAST(q.qv[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(generate_series(1, len(q.qv)),
-                        i -> CAST(q.qv[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(generate_series(1, len(e.embedding)),
-                        i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))))
-               AS cos
-        FROM q, embeddings e
-        WHERE e.vec_id != q.query_id
-    )
-    SELECT query_id, neighbor_id,
-           {sql_round('cos', 6)} AS cosine,
-           CAST(rn AS INTEGER) AS rank
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                       ORDER BY cos DESC, neighbor_id) AS rn
-          FROM scored)
-    WHERE rn <= 10
-    """,
-    doc="Brute-force cosine top-10 through the Arrow/numpy kernel — "
-    "measured 6x faster than the JVM HOF fold PER-CORE at 64-dim (HOF "
-    "lambdas evaluate interpreted; numpy is SIMD over Arrow batches) but "
-    "~2x slower at 16-way parallelism (Arrow IPC + worker overhead), so "
-    "it is the pick for core-contended rerank stages, not a default. "
-    "ORACLE-BACKED since r14: the kernel's reductions now accumulate "
-    "sequentially (functions/udfs.py::cosine_arrow), bit-identical to "
-    "the JVM zip_with fold and DuckDB's list_sum by construction, so "
-    "the Arrow path carries the SAME oracle as its JVM twin "
-    "(sim_cosine_topk) — rows-only tail 6 -> 5. Bit-exact cross-kernel "
-    "equality pinned in tests/test_similarity_recall.py; ordering by "
-    "raw fold-identical doubles with id tiebreak (the certified-cosine "
-    "exception). Python-UDF plan gate: sanctioned Arrow exception, the "
-    "sim_pq_adc_topk precedent (UDF output itself oracle-checked).",
-)
-def sim_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    res = similarity.brute_force_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=10, kernel="arrow"
-    )
-    return res.select(
-        "query_id",
-        "neighbor_id",
-        portable_round(F.col("cosine"), 6).alias("cosine"),
-        F.col("rank").cast("int").alias("rank"),
     )
 
 

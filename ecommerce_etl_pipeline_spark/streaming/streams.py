@@ -537,16 +537,11 @@ def ann_index_stream(
 ) -> DataFrame:
     """Streaming ANN index ingestion — the write-side face of
     ``ivfpq_topk``'s fused index pass applied at line rate: each arriving
-    (vec_id, embedding) row gets its coarse IVF cell (the
-    assign_to_seeds argmin fold over ONE broadcast seed row — ties to the
-    lowest cid, bit-identical to the batch assignment) and its m PQ codes
-    (pq_encode with the SAME kernel the batch index build inside
-    ivfpq_topk uses — the arrow default; ADVICE r12 #1 caught the
-    streaming face on kernel="jvm" while batch had moved to arrow, and
-    the two kernels' distances can differ in the last ulp for sub-dims
-    >= 8, so a near-tie vector could code differently streamed vs batch.
-    tests/test_streaming.py pins the stream against the batch pass with
-    the kernel ivfpq_topk actually uses). STATELESS by construction:
+    (vec_id, embedding) row gets its coarse IVF cell (assign_to_seeds,
+    ties to the lowest cid) and its m PQ codes (pq_encode): the same two
+    kernels the batch index build inside ivfpq_topk runs, so a streamed
+    row codes exactly as the batch pass codes it (pinned in
+    tests/test_streaming.py). STATELESS by construction:
     every row is independent (no aggregation, no watermark, the static
     side is hyperparameter-sized driver state), so the stream runs at
     line rate forever and the index table stays append-only — new vectors
@@ -566,9 +561,6 @@ def ann_index_stream(
         F.col("vec"),
     )
     m = len(codebooks)
-    # kernel deliberately UNPINNED: inherit pq_encode's default so the
-    # streaming face always encodes with whatever kernel the batch index
-    # build (ivfpq_topk, also on the default) uses
     return pq_encode(assigned, codebooks, vec_col="vec").select(
         "vec_id", "cell", *[f"_pq{j}" for j in range(m)]
     )

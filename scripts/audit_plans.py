@@ -59,9 +59,7 @@ EXPECTED = {
     "dd_eval_decontam": "eval split postings — benchmark-sized by design",
     "dd_incremental_dedup": "daily batch side — small by design",
     "j11_bloom_pruned_join": "selective bloom build side (documented dynamic filter)",
-    "ml_kmeans_step": "k=4 seed centroids (vec_id < 4) — hyperparameter-sized",
     "sim_cosine_topk": "query vectors (vec_id < 5)",
-    "sim_cosine_topk_arrow": "query vectors",
     "sim_hard_negatives": "query vectors + labels (vec_id < 5)",
     "sim_knn_label_audit": (
         "probe vectors/labels (vec_id < 100) + |q| x k hit list — both "
@@ -90,8 +88,7 @@ EXPECTED = {
     ),
     "sim_ivfpq_rerank": (
         "same bounded sides as sim_pq_rerank (beam candidate list + "
-        "query vectors); the coarse-cell index side is a one-row seed "
-        "array broadcast, hyperparameter-sized by construction"
+        "query vectors)"
     ),
 }
 

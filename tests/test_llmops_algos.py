@@ -374,30 +374,28 @@ def test_compression_ratio_null_text(spark):
     assert rows[2]["ratio"] is None
 
 
-def test_cosine_arrow_null_and_ragged(spark):
-    import math
-
-    from ecommerce_etl_pipeline_spark.functions.udfs import cosine_arrow
+def test_cosine_null_and_ragged(spark):
+    """The one cosine (similarity.cosine, the JVM fold) gives NULL for a
+    NULL side and for a width-mismatched pair, whichever side is longer,
+    and scores well-formed pairs of any width."""
+    from ecommerce_etl_pipeline_spark.llmops.similarity import cosine
 
     df = spark.createDataFrame(
         [
-            (1, [1.0, 0.0], [1.0, 0.0]),   # aligned -> 1.0
-            (2, None, [1.0, 0.0]),          # NULL side -> NULL
-            (3, [1.0, 0.0], [1.0]),         # ragged pair -> NULL
-            (4, [0.0, 0.0], [1.0, 0.0]),    # zero norm -> NaN (JVM parity)
-            # mixed widths ACROSS rows in one batch (each pair internally
-            # consistent) must vectorize per width group, not crash np.stack
+            (1, [1.0, 0.0], [1.0, 0.0]),
+            (2, None, [1.0, 0.0]),
+            (3, [1.0, 0.0], [1.0]),
+            (4, [1.0], [1.0, 0.0]),
             (5, [1.0, 2.0, 2.0], [1.0, 2.0, 2.0]),
         ],
         "id LONG, a ARRAY<FLOAT>, b ARRAY<FLOAT>",
-    ).coalesce(1)  # one batch: forces the mixed-width case through together
+    )
     rows = {
         r["id"]: r["c"]
-        for r in df.select("id", cosine_arrow("a", "b").alias("c")).collect()
+        for r in df.select("id", cosine(F.col("a"), F.col("b")).alias("c")).collect()
     }
     assert rows[1] == pytest.approx(1.0)
-    assert rows[2] is None and rows[3] is None
-    assert rows[4] is not None and math.isnan(rows[4])
+    assert rows[2] is None and rows[3] is None and rows[4] is None
     assert rows[5] == pytest.approx(1.0)
 
 
@@ -600,77 +598,76 @@ def test_shard_manifest_covers_corpus_without_skew(spark, sf_dir):
     assert max(r.n_docs for r in manifest) < 2 * mean
 
 
-def test_assign_arrow_kernel_bit_exact_vs_jvm(spark, sf_dir):
-    """r14 optimization pin: the Arrow nearest-centroid kernel
-    (clustering._assign_arrow_udf) is bit-identical to the interpreted JVM
-    fold — per-row cluster AND bit-level dist over the whole fixture —
-    including the tie-to-lowest-cid rule and schema. This is the safety
-    case on which dd_semantic_dedup / sim_ivf_topk / sim_ivf_recall /
-    sim_ivfpq_rerank run the vectorized kernel by default (each oracle-
-    backed one also re-verifies end-to-end against DuckDB every sweep)."""
+def _nearest_seed_reference(vec, seeds):
+    """Pure-Python nearest seed: per seed in cid order, the squared
+    distance accumulated element by element from 0.0 (DuckDB list_sum's op
+    sequence), first argmin; (lowest cid, None) for a NULL or wrong-width
+    vector."""
+    best = (seeds[0][0], None)
+    if vec is None or any(len(vec) != len(cv) for _, cv in seeds):
+        return best
+    for cid, cv in seeds:
+        acc = 0.0
+        for x, c in zip(vec, cv):
+            d = float(x) - c
+            acc += d * d
+        if best[1] is None or acc < best[1]:
+            best = (cid, acc)
+    return best
+
+
+def test_assign_kernel_bit_exact_vs_python_reference(spark, sf_dir):
+    """assign_to_seeds (the nearest-centroid kernel) gives every fixture
+    row the pure-Python reference's cluster and bit-identical dist, ties
+    to the lowest cid; empty seeds give an empty frame; a NULL or ragged
+    vector gets (lowest cid, NULL dist)."""
     import struct
 
     from ecommerce_etl_pipeline_spark.llmops.clustering import assign_to_seeds
 
     emb = load_table(spark, sf_dir, "embeddings")
-    seeds = spark.createDataFrame(
-        [
-            (i, [float(x) for x in r.embedding])
-            for i, r in enumerate(emb.orderBy("vec_id").limit(16).collect())
-        ],
-        "cid INT, cvec ARRAY<DOUBLE>",
+    rows = emb.orderBy("vec_id").collect()
+    seeds = [(i, [float(x) for x in r.embedding]) for i, r in enumerate(rows[:16])]
+    seeds_df = spark.createDataFrame(seeds, "cid INT, cvec ARRAY<DOUBLE>")
+    got_frame = assign_to_seeds(emb, seeds_df)
+    assert got_frame.schema.simpleString() == (
+        "struct<id:bigint,cluster:int,dist:double,vec:array<float>>"
     )
-    jvm = assign_to_seeds(emb, seeds, kernel="jvm")
-    arrow = assign_to_seeds(emb, seeds, kernel="arrow")
-    assert jvm.schema.simpleString() == arrow.schema.simpleString()
+    got = {r.id: (r.cluster, struct.pack(">d", r.dist)) for r in got_frame.collect()}
+    want = {}
+    for r in rows:
+        cid, dist = _nearest_seed_reference(r.embedding, seeds)
+        want[r.vec_id] = (cid, struct.pack(">d", dist))
+    assert len(got) == len(rows) and got == want
 
-    def canon(rows):
-        return {
-            r.id: (r.cluster, struct.pack(">d", r.dist)) for r in rows
-        }
+    empty = assign_to_seeds(emb, seeds_df.filter("cid < 0"))
+    assert empty.count() == 0
+    assert empty.schema.simpleString() == got_frame.schema.simpleString()
 
-    cj, ca = canon(jvm.collect()), canon(arrow.collect())
-    assert len(cj) == emb.count() and cj == ca
-
-    # empty seeds: both venues return the empty frame with the same schema
-    empty = seeds.filter("cid < 0")
-    ej = assign_to_seeds(emb, empty, kernel="jvm")
-    ea = assign_to_seeds(emb, empty, kernel="arrow")
-    assert ej.count() == 0 and ea.count() == 0
-    assert ej.schema.simpleString() == ea.schema.simpleString()
-
-    # null / ragged vectors (r15, ADVICE r14): the JVM fold ranks
-    # unrankable rows — zip_with NULL-pads, every dist is NULL, array_min
-    # sorts NULL dist first — as (LOWEST cid, NULL dist); the arrow kernel
-    # must reproduce exactly that, not drop the row to NULL/NULL
     weird = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, None), (3, [1.0]), (4, [1.0, 2.0, 3.0])],
         "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
-    wseeds = spark.createDataFrame(
-        [(7, [0.0, 0.0]), (3, [2.0, 2.0])], "cid INT, cvec ARRAY<DOUBLE>"
-    )
-    wj = {
+    wseeds = [(3, [2.0, 2.0]), (7, [0.0, 0.0])]
+    got = {
         r.id: (r.cluster, r.dist)
-        for r in assign_to_seeds(weird, wseeds, kernel="jvm").collect()
+        for r in assign_to_seeds(
+            weird, spark.createDataFrame(wseeds, "cid INT, cvec ARRAY<DOUBLE>")
+        ).collect()
     }
-    wa = {
-        r.id: (r.cluster, r.dist)
-        for r in assign_to_seeds(weird, wseeds, kernel="arrow").collect()
+    assert got == {
+        i: _nearest_seed_reference(v, wseeds) for i, v in weird.collect()
     }
-    assert wj == wa
     for bad_id in (2, 3, 4):
-        assert wj[bad_id] == (3, None)  # lowest cid, NULL dist
+        assert got[bad_id] == (3, None)  # lowest cid, NULL dist
 
 
-def test_literal_centroid_kernels_agree_on_null_and_ragged_rows(spark):
-    """Both literal-matrix assignment kernels give a null or wrong-width
-    row the lowest centroid index, with ANSI off and on (a longer row must
-    never index past the centroid matrix); a well-formed row ranks
+def test_literal_centroid_assignment_null_and_ragged_rows(spark):
+    """The k-means trainers' assignment against a literal centroid matrix
+    (centroid index = cid) gives a null or wrong-width row the lowest
+    centroid index, with ANSI off and on; a well-formed row ranks
     normally."""
-    from ecommerce_etl_pipeline_spark.llmops.clustering import (
-        _assign_literal_centroids,
-    )
+    from ecommerce_etl_pipeline_spark.llmops.clustering import _assign_arrow_udf
 
     pts = spark.createDataFrame(
         [(1, [9.0, 9.0]), (2, [9.0]), (3, None), (4, [9.0, 9.0, 9.0])],
@@ -681,36 +678,30 @@ def test_literal_centroid_kernels_agree_on_null_and_ragged_rows(spark):
     try:
         for ansi in ("false", "true"):
             spark.conf.set("spark.sql.ansi.enabled", ansi)
-            for kernel in ("jvm", "arrow"):
-                assigned = _assign_literal_centroids(pts, centroids, kernel=kernel)
-                got = {r._pid: r._cluster for r in assigned.collect()}
-                assert got == {1: 1, 2: 0, 3: 0, 4: 0}, (kernel, ansi)
+            nearest = _assign_arrow_udf(centroids)(F.col("_pv"))["cluster"]
+            got = {r._pid: r.c for r in pts.select("_pid", nearest.alias("c")).collect()}
+            assert got == {1: 1, 2: 0, 3: 0, 4: 0}, ansi
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
-def test_kmeans_portable_trajectory_identical_across_kernels(
+def test_kmeans_portable_trajectory_identical_across_venues(
     spark, sf_dir, distributed_venue
 ):
-    """r14 optimization pin: kmeans_train_portable produces the IDENTICAL
-    centroid matrix (exact float equality — integer-nano updates leave no
-    FP slack) whether each iteration assigns via the interpreted literal-
-    matrix fold or the Arrow batch kernel. Five iterations compound any
-    per-row divergence into different argmins, so final equality pins the
-    whole trajectory."""
+    """kmeans_train_portable gives the IDENTICAL centroid matrix (exact
+    float equality — integer-nano updates leave no FP slack) on the
+    distributed venue (the nearest-centroid kernel per iteration) and on
+    the driver venue (the numpy loop). Five iterations at k=16 compound
+    any per-row divergence into different argmins, so final equality pins
+    the whole trajectory."""
     from ecommerce_etl_pipeline_spark.llmops.clustering import (
         kmeans_train_portable,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # distributed_venue forces the DISTRIBUTED venue (the 100 TB regime);
-    # the default takes the driver numpy venue at fixture size
     with distributed_venue():
-        jvm = kmeans_train_portable(emb, k=16, iterations=5, kernel="jvm")
-        arrow = kmeans_train_portable(emb, k=16, iterations=5, kernel="arrow")
-    driver = kmeans_train_portable(emb, k=16, iterations=5)
-    assert jvm == arrow
-    assert jvm == driver
+        distributed = kmeans_train_portable(emb, k=16, iterations=5)
+    assert distributed == kmeans_train_portable(emb, k=16, iterations=5)
 
 
 def test_kmeans_train_monotone_and_deterministic(spark, sf_dir):

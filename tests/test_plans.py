@@ -6,6 +6,8 @@ that stay semi, TakeOrderedAndProject for top-k, partial aggregation.
 
 from __future__ import annotations
 
+import re
+
 import ecommerce_etl_pipeline_spark.plans  # noqa: F401
 from ecommerce_etl_pipeline_spark.plans.registry import _REGISTRY, get
 
@@ -82,43 +84,43 @@ def test_vocabulary_partial_agg_and_topk(spark):
     assert plan.count("HashAggregate") >= 2  # map-side partial before exchange
 
 
-def test_no_python_udfs_or_cartesian_in_oracle_queries(spark):
-    """Oracle-checked queries must stay JVM-side (Python evaluation nodes
-    are allowed only in the sanctioned multimodal path) and must never plan
-    an unbounded cross product.
+#: The engine's Arrow kernels, by UDF name: each is checked bit for bit
+#: against a reference outside Spark (DuckDB oracles, pure-Python
+#: references in tests/test_llmops_algos.py and tests/test_properties.py).
+ENGINE_KERNELS = {"pq_encode_kernel", "nearest_centroid_kernel"}
 
-    Sanctioned Arrow exception (r14): sim_pq_adc_topk runs the production
-    Arrow encode kernel — allowed because the UDF's effect on the result
-    (the PQ codes, hence the ranked distances) is itself pinned BIT-EXACT
-    against the raw DuckDB replay on both kernels
-    (tests/test_similarity_recall.py::test_pq_adc_fold_is_bit_exact_vs_
-    duckdb), a strictly stronger guarantee than this gate's plan-shape
-    proxy. Same basis for sim_cosine_topk_arrow (sequential-fold cosine
-    kernel, bit-exact vs the JVM twin and the shared oracle —
-    test_arrow_cosine_is_bit_exact_vs_jvm_twin), and — r14 optimization
-    round — for the nearest-centroid assignment kernel
-    (clustering._assign_arrow_udf, bit-exact cluster AND dist vs the JVM
-    fold on the full fixture plus whole-trajectory centroid equality,
-    test_assign_arrow_kernel_bit_exact_vs_jvm /
-    test_kmeans_portable_trajectory_identical_across_kernels) carried by
-    dd_semantic_dedup, sim_ivf_topk and sim_ivf_recall; each of these
-    also re-verifies END TO END against its DuckDB oracle every sweep.
-    Row-at-a-time BatchEvalPython stays banned everywhere."""
-    arrow_sanctioned = {
-        "sim_pq_adc_topk",
-        "sim_cosine_topk_arrow",
-        "dd_semantic_dedup",
-        "sim_ivf_topk",
-        "sim_ivf_recall",
-    }
+
+def arrow_udf_names(plan: str) -> list[str]:
+    """Names of the UDFs the ArrowEvalPython nodes of ``plan`` evaluate:
+    the calls of each node's first list, ``name(args)#id, ...``, one per
+    pythonUDF output of its second list."""
+    names = []
+    for line in plan.splitlines():
+        if "ArrowEvalPython [" in line:
+            udfs, outputs = line.split("ArrowEvalPython [", 1)[1].split("], [", 1)
+            found = re.findall(r"(?:^|\)#\d+, )(\w+)\(", udfs)
+            assert len(found) == outputs.split("]")[0].count("pythonUDF"), line
+            names += found
+    return names
+
+
+def test_no_python_udfs_or_cartesian_in_oracle_queries(spark):
+    """Oracle-checked plans evaluate Python only through the engine's
+    Arrow kernels (ENGINE_KERNELS), and never plan an unbounded cross
+    product. Row-at-a-time BatchEvalPython stays banned everywhere."""
+    seen = set()
     for name, spec in _REGISTRY.items():
         if spec.oracle is None:
             continue
         plan = explain_str(spec.fn(spark, SF), "simple")
         assert "BatchEvalPython" not in plan, name
-        if name not in arrow_sanctioned:
-            assert "ArrowEvalPython" not in plan, name
         assert "CartesianProduct" not in plan, name
+        assert plan.count("ArrowEvalPython [") == plan.count("ArrowEvalPython"), name
+        udfs = arrow_udf_names(plan)
+        assert set(udfs) <= ENGINE_KERNELS, (name, udfs)
+        seen.update(udfs)
+    # both kernels carry oracle queries, so the name parse is exercised
+    assert seen == ENGINE_KERNELS
 
 
 def test_asof_join_is_window_not_join(spark):

@@ -444,15 +444,40 @@ def test_quantile_edge_rounding_parity_with_duckdb(spark):
 
 
 # ---------------------------------------------------------------------------
-# PQ Arrow encode kernel vs an INDEPENDENT pure-Python reference (the JVM
-# parity pin in test_similarity_recall.py shares the normalized input —
-# this reference recomputes normalization and argmin from raw floats, so
-# the two kernels cannot be "wrong together")
+# PQ encode kernel vs an INDEPENDENT pure-Python reference: normalization
+# and argmin recomputed from raw floats (also used on the embeddings
+# fixture in test_similarity_recall.py)
 # ---------------------------------------------------------------------------
 
 
-def test_pq_encode_matches_pure_python_reference(spark):
+def pq_reference_codes(books, v):
+    """PQ codes of one raw vector: unit-normalize (zero vectors pass
+    through), then per subspace the first argmin of the squared distance,
+    every sum accumulated left to right from 0.0 (the kernel's and DuckDB
+    list_sum's op sequence)."""
     import math
+
+    acc = 0.0
+    for x in v:
+        acc += float(x) * float(x)
+    n = math.sqrt(acc)
+    u = [float(x) for x in v] if n == 0 else [float(x) / n for x in v]
+    sub = len(books[0][0])
+    out = []
+    for j, book in enumerate(books):
+        s = u[j * sub : (j + 1) * sub]
+        d2 = []
+        for c in book:
+            acc = 0.0
+            for a, b in zip(s, c):
+                d = a - b
+                acc += d * d
+            d2.append(acc)
+        out.append(min(range(len(book)), key=lambda ci: (d2[ci], ci)))
+    return tuple(out)
+
+
+def test_pq_encode_matches_pure_python_reference(spark):
     import random
 
     from ecommerce_etl_pipeline_spark.llmops.similarity import pq_encode
@@ -468,25 +493,13 @@ def test_pq_encode_matches_pure_python_reference(spark):
         (i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(200)
     ] + [(200, [0.0] * dim)]  # zero vector: passes through unscaled
 
-    def ref_codes(v):
-        n = math.sqrt(sum(x * x for x in v))
-        u = v if n == 0 else [x / n for x in v]
-        out = []
-        for j, book in enumerate(books):
-            s = u[j * sub : (j + 1) * sub]
-            d2 = [sum((a - b) ** 2 for a, b in zip(s, c)) for c in book]
-            out.append(min(range(k), key=lambda ci: (d2[ci], ci)))
-        return tuple(out)
-
     df = spark.createDataFrame(vecs, "vec_id LONG, embedding ARRAY<DOUBLE>")
     got = {
         r["vec_id"]: tuple(r[f"_pq{j}"] for j in range(m))
-        for r in pq_encode(df, books, kernel="arrow")
+        for r in pq_encode(df, books)
         .select("vec_id", *[f"_pq{j}" for j in range(m)])
         .collect()
     }
-    want = {i: ref_codes(v) for i, v in vecs}
-    # Python's x/n and sum-of-squares use the same IEEE ops in the same
-    # order as the JVM normalization and the numpy sequential sums, so
-    # equality is exact, not approximate
+    want = {i: pq_reference_codes(books, v) for i, v in vecs}
+    # same IEEE ops in the same order as the kernel, so equality is exact
     assert got == want

@@ -125,23 +125,6 @@ def test_signatures_via_join_matches_literal_path(spark, clustered_embeddings):
             assert via_join[(r["vec_id"], t)] == r[f"b{t}"]
 
 
-def test_arrow_kernel_agrees_with_jvm_kernel(spark):
-    """The Arrow/numpy cosine kernel must produce the same top-k neighbor
-    sets as the JVM fold. Historical tolerance-level check (r10, when the
-    kernel summed pairwise and could drift in final ulps); since r14 the
-    sequential-fold kernel is BIT-identical — the strict superset pin is
-    test_arrow_cosine_is_bit_exact_vs_jvm_twin. Kept as a fast smoke."""
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    q = emb.filter(F.col("vec_id") < 5)
-    jvm = similarity.brute_force_topk(emb, q, k=10, kernel="jvm").collect()
-    arrow = similarity.brute_force_topk(emb, q, k=10, kernel="arrow").collect()
-    jvm_m = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in jvm}
-    arrow_m = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in arrow}
-    assert set(jvm_m) == set(arrow_m)
-    for key, v in jvm_m.items():
-        assert abs(v - arrow_m[key]) < 1e-9
-
-
 def test_ivf_recall_on_clustered_data(spark, clustered_embeddings):
     """IVF with 16 cells over 10 true clusters, probing 2 cells, must
     recover nearly all exact neighbors — cluster structure is exactly what
@@ -288,34 +271,28 @@ def test_ivfpq_recall_and_exactness(spark, sf_dir):
     assert a == b
 
 
-def test_pq_encode_arrow_kernel_matches_jvm_fold(spark, sf_dir):
-    """The vectorized Arrow encode kernel (r11 VERDICT brief #3) is
-    pinned CODE-FOR-CODE against the retained JVM HOF fold on the full
-    embeddings fixture. Since r14 the parity is STRUCTURAL, not just
-    empirical: the kernel accumulates the sub-dim axis with an explicit
-    sequential loop (same IEEE op order as the JVM fold) instead of
-    numpy's pairwise ``.sum(-1)``, which for 8 <= n <= 128 uses an 8-way
-    multi-accumulator reduction that could drift in the last ulp (the
-    r12-r13 state, ADVICE r12 #1). This pin stays as the empirical
-    backstop for that claim (ties break to the lower code on both);
-    test_pq_adc_fold_is_bit_exact_vs_duckdb extends it to DISTANCES via
-    the DuckDB triple. Null and width-mismatched vectors yield NULL
-    codes on both kernels."""
+def test_pq_encode_matches_python_reference_on_fixture(spark, sf_dir):
+    """The PQ encode kernel gives every row of the embeddings fixture the
+    pure-Python reference's codes (tests/test_properties.py), ties to the
+    lower code; test_pq_adc_fold_is_bit_exact_vs_duckdb extends the check
+    to distances via DuckDB. Null and width-mismatched vectors yield NULL
+    codes."""
     from ecommerce_etl_pipeline_spark.llmops.similarity import pq_encode, pq_train
+    from tests.test_properties import pq_reference_codes
 
     emb = load_table(spark, sf_dir, "embeddings")
     books = pq_train(emb, m=8, k=16, max_iterations=4)
     cols = ["vec_id"] + [f"_pq{j}" for j in range(8)]
-    arrow = {
+    got = {
         r["vec_id"]: tuple(r[f"_pq{j}"] for j in range(8))
-        for r in pq_encode(emb, books, kernel="arrow").select(*cols).collect()
+        for r in pq_encode(emb, books).select(*cols).collect()
     }
-    jvm = {
-        r["vec_id"]: tuple(r[f"_pq{j}"] for j in range(8))
-        for r in pq_encode(emb, books, kernel="jvm").select(*cols).collect()
+    want = {
+        r["vec_id"]: pq_reference_codes(books, r["embedding"])
+        for r in emb.collect()
     }
-    assert len(arrow) == len(jvm) > 0
-    assert arrow == jvm
+    assert len(got) == len(want) > 0
+    assert got == want
 
     # degenerate inputs: NULL vector and wrong-width vector -> NULL codes
     bad = spark.createDataFrame(
@@ -324,24 +301,20 @@ def test_pq_encode_arrow_kernel_matches_jvm_fold(spark, sf_dir):
     )
     got = {
         r["vec_id"]: tuple(r[f"_pq{j}"] for j in range(8))
-        for r in pq_encode(bad, books, kernel="arrow").select(*cols).collect()
+        for r in pq_encode(bad, books).select(*cols).collect()
     }
     assert got == {1: (None,) * 8, 2: (None,) * 8}
 
 
-@pytest.mark.parametrize("kernel", ["jvm", "arrow"])
-def test_pq_adc_fold_is_bit_exact_vs_duckdb(spark, sf_dir, kernel):
+def test_pq_adc_fold_is_bit_exact_vs_duckdb(spark, sf_dir):
     """The sim_pq_adc_topk parity chain holds BIT-FOR-BIT, not just to
     the oracle compare's 6-sig-digit canon: with seeds-only codebooks
     (max_iterations=0), every ranked pair's raw ADC distance equals the
     DuckDB replay's double exactly (unit-vec fold == list_sum,
     sub-distance fold == list_sum, Python LUT sums == per-subspace
-    folds, left-assoc m-term add both sides) — for BOTH encode kernels,
-    since r14's sequential-accumulation arrow kernel restored structural
-    fold parity. The arrow leg of this parametrization is the cert
-    safety case for running the REGISTERED sim_pq_adc_topk on the
-    production kernel. A red here means a kernel/fold regression that
-    would surface as a driver hash miss on sim_pq_adc_topk."""
+    folds, left-assoc m-term add both sides). A red here means a
+    kernel/fold regression that would surface as a driver hash miss on
+    sim_pq_adc_topk."""
     import struct
 
     from pyspark.sql import functions as F
@@ -354,7 +327,7 @@ def test_pq_adc_fold_is_bit_exact_vs_duckdb(spark, sf_dir, kernel):
     emb = load_table(spark, sf_dir, "embeddings")
     books = similarity.pq_train(emb, m=8, k=16, max_iterations=0)
     res = similarity.pq_topk(
-        emb, emb.filter(F.col("vec_id") < 5), books, k=10, kernel=kernel
+        emb, emb.filter(F.col("vec_id") < 5), books, k=10
     )
     got = {(r["query_id"], r["neighbor_id"]): r["adc_dist"] for r in res.collect()}
 
@@ -398,62 +371,29 @@ def test_adc_oracle_seed_predicate_matches_pq_train_selection(spark, sf_dir):
     )
 
 
-def test_pq_production_faces_default_to_arrow_kernel():
-    """VERDICT r13 brief #5: the batch/production PQ faces must default
-    to the Arrow encode kernel (the r11 vectorization win — interpreted
-    JVM folds are the cert-only path). Guards against a future refactor
-    flipping the default, which would silently triple sim_pq_rerank /
-    sim_ivfpq_rerank. (The r13 bench regression on those two was
-    arbitrated to session noise — the r12-close tree reproduced the slow
-    reading on the same corpus — but this pin makes the code axis
-    checkable in one assert.)"""
+def test_one_kernel_per_vector_operation():
+    """No public function of the llmops operators or the streams takes a
+    ``kernel`` keyword, and functions.udfs defines no cosine: cosine,
+    nearest-centroid assignment and PQ encode each have one
+    implementation."""
+    import importlib
     import inspect
+    import pkgutil
 
-    assert inspect.signature(similarity.pq_encode).parameters["kernel"].default == "arrow"
-    assert inspect.signature(similarity.pq_topk).parameters["kernel"].default == "arrow"
+    import ecommerce_etl_pipeline_spark.llmops as llmops
+    from ecommerce_etl_pipeline_spark.functions import udfs
 
-
-def test_cosine_arrow_oracle_is_verbatim_jvm_twin():
-    """sim_cosine_topk_arrow's oracle is a DELIBERATE verbatim duplicate
-    of sim_cosine_topk's (sharing a constant would have rewritten the JVM
-    twin's registration — a touched-code re-cert on a deferred-window
-    query). This pin is the drift guard that makes the duplication safe:
-    the two strings must stay byte-identical."""
-    import ecommerce_etl_pipeline_spark.plans  # noqa: F401
-    from ecommerce_etl_pipeline_spark.plans.registry import _REGISTRY
-
-    assert (
-        _REGISTRY["sim_cosine_topk_arrow"].oracle
-        == _REGISTRY["sim_cosine_topk"].oracle
-    )
-
-
-def test_arrow_cosine_is_bit_exact_vs_jvm_twin(spark, sf_dir):
-    """The r14 sequential-accumulation cosine_arrow kernel makes the
-    Arrow brute-force face bit-identical to the JVM zip_with fold — raw
-    doubles compared via struct.pack, full fixture, every ranked pair.
-    This is the safety case for sim_cosine_topk_arrow carrying the same
-    DuckDB oracle as sim_cosine_topk (rows-only tail 6 -> 5)."""
-    import struct
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    jvm = {
-        (r["query_id"], r["neighbor_id"]): (r["cosine"], r["rank"])
-        for r in similarity.brute_force_topk(emb, queries, k=10).collect()
-    }
-    arrow = {
-        (r["query_id"], r["neighbor_id"]): (r["cosine"], r["rank"])
-        for r in similarity.brute_force_topk(
-            emb, queries, k=10, kernel="arrow"
-        ).collect()
-    }
-    assert set(jvm) == set(arrow) and len(jvm) == 50
-    for pair, (cos_j, rank_j) in jvm.items():
-        cos_a, rank_a = arrow[pair]
-        assert rank_a == rank_j, pair
-        assert struct.pack("<d", cos_a) == struct.pack("<d", cos_j), (
-            pair,
-            cos_a,
-            cos_j,
-        )
+    modules = [
+        importlib.import_module(f"{llmops.__name__}.{m.name}")
+        for m in pkgutil.iter_modules(llmops.__path__)
+    ] + [importlib.import_module("ecommerce_etl_pipeline_spark.streaming.streams")]
+    offenders = [
+        f"{mod.__name__}.{name}"
+        for mod in modules
+        for name, fn in inspect.getmembers(mod, inspect.isfunction)
+        if not name.startswith("_")
+        and fn.__module__ == mod.__name__
+        and "kernel" in inspect.signature(fn).parameters
+    ]
+    assert offenders == []
+    assert not [n for n in vars(udfs) if "cosine" in n.lower()]

@@ -464,13 +464,8 @@ def test_ann_index_stream_matches_batch_index_pass(spark):
     """The streaming ANN-index ingestion face (ann_index_stream) emits,
     for every replayed vector, EXACTLY the (cell, PQ codes) row the batch
     index pass (assign_to_seeds + pq_encode — the ivfpq_topk write side)
-    produces. The batch twin here deliberately uses pq_encode's DEFAULT
-    kernel — the one ivfpq_topk's index build actually runs — so this
-    pin fails if the stream ever encodes with a different kernel than
-    batch (ADVICE r12 #1: the kernels' distances can differ in the last
-    ulp at sub-dim >= 8, so near-tie vectors could code differently).
-    Stateless: no aggregation state, so the plan needs no watermark and
-    runs in append mode."""
+    produces. Stateless: no aggregation state, so the plan needs no
+    watermark and runs in append mode."""
     from ecommerce_etl_pipeline_spark.llmops.clustering import (
         assign_to_seeds,
         kmeans_train_portable,
@@ -501,7 +496,6 @@ def test_ann_index_stream_matches_batch_index_pass(spark):
         ),
         books,
         vec_col="vec",
-        # no kernel= : the default, i.e. what ivfpq_topk's index build uses
     ).select("vec_id", "cell", *[f"_pq{j}" for j in range(8)])
     want = {
         r["vec_id"]: (r["cell"],) + tuple(r[f"_pq{j}"] for j in range(8))

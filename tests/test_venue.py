@@ -64,7 +64,7 @@ class Case(NamedTuple):
 CASES = [
     Case("connected_components", (clustering, "SMALL_GRAPH_EDGES", 7),
          (clustering, "_union_find_components"), 3, _cc),
-    # dim 2: 11 // 2
+    # dim 2: 5 rows are 10 cells, 6 rows 12 > 11
     Case("kmeans_train_portable", (venue, "DRIVER_CELLS", 11),
          (clustering, "_driver_kmeans_loop_portable"), 5, _kmeans),
     # d = 5 quality features + label: 29 // 6
@@ -117,3 +117,19 @@ def test_driver_rows_logs_each_decision(spark, caplog):
         "op_over: probed 3 rows, budget 2 rows; venue=distributed",
         "op_off: driver venue disabled (budget 0 rows); venue=distributed",
     ]
+
+
+def test_kmeans_under_budget_runs_one_job(spark, sf_dir):
+    """Under budget, kmeans_train_portable takes its seeds from the probe:
+    the whole call is one Spark job (a separate seed query made it two)."""
+    from ecommerce_etl_pipeline_spark.sources.io import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    sc = spark.sparkContext
+    group = "kmeans-under-budget"
+    sc.setJobGroup(group, group)
+    try:
+        clustering.kmeans_train_portable(emb, k=4, iterations=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
