@@ -9,7 +9,7 @@ aggregation the working set is the WORD-TYPE table (distinct words with
 corpus counts — Zipf-small relative to the corpus), so each merge round
 is one narrow per-word fold plus one vocabulary-sized aggregate, and the
 driver holds only the merge list (the model — the same bounded class as
-kmeans_train's centroid matrix). The 100 TB corpus is touched exactly
+kmeans_train_portable's centroid matrix). The 100 TB corpus is touched exactly
 once, by the initial word-count shuffle.
 
 Determinism: pair-count ties break lexicographically on (left, right), so

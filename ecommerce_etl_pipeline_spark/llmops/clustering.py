@@ -3,7 +3,8 @@
 
 Both are the canonical "beyond one SQL query" shapes: connected components
 is an iterative fixpoint (non-SQL-expressible — rows-only checked), IVF
-uses a trained coarse quantizer (KMeans) as its bucketer.
+uses a trained coarse quantizer (:func:`kmeans_train_portable`) as its
+bucketer.
 """
 
 from __future__ import annotations
@@ -15,7 +16,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ecommerce_etl_pipeline_spark.operators import caches, venue
-from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 
 #: Driver-venue budget of :func:`connected_components`, in undirected
@@ -279,9 +279,8 @@ def kmeans_step(
     BROADCAST (bounded by construction — k is a hyperparameter, not a data
     size), the corpus is scanned once, the per-dimension aggregation is
     one map-side-combined shuffle of k*dim cells, and the driver never
-    sees a vector. Iterating = feeding the recomputed centroids back in;
-    pyspark.ml's KMeans (used by :func:`ivf_topk`) is the library form of
-    the same loop.
+    sees a vector. Iterating = feeding the recomputed centroids back in,
+    which :func:`kmeans_train_portable` does.
 
     Returns (cluster, n_members, avg_dist, centroid_norm) — avg_dist /
     centroid_norm unrounded; oracle queries round both sides.
@@ -311,65 +310,6 @@ def kmeans_step(
         "avg_dist",
         (F.col("s2") / F.col("n_members")).alias("centroid_norm"),
     )
-
-
-def kmeans_train(
-    points: DataFrame,
-    *,
-    k: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iterations: int = 10,
-    tol: float = 1e-6,
-) -> tuple[list[list[float]], int]:
-    """DataFrame-native Lloyd's algorithm: iterate nearest-centroid
-    assignment + centroid recomputation until the max centroid shift falls
-    under ``tol``. Deterministic: seeds are the k lowest-``id_col`` rows
-    (no RNG), ties go to the lowest centroid id, so results are identical
-    across runs and partitionings.
-
-    The driver holds ONLY k*dim floats per round (the centroid matrix —
-    a hyperparameter-sized collect, same bounded class as a join-strategy
-    statistic); each round is one corpus scan + one map-side-combined
-    shuffle of k*dim cells. This is the hand-rolled form of what
-    pyspark.ml's KMeans does with treeAggregate; use that at scale for
-    kmeans|| init and DenseVector kernels — this exists to show the
-    iterative-trainer shape as a plain DataFrame loop (compare
-    connected_components' label-propagation loop).
-
-    Returns (centroids, iterations_run).
-    """
-    pts = points.select(F.col(id_col).alias("_pid"), F.col(vec_col).alias("_pv"))
-    first = pts.orderBy("_pid").limit(k).collect()
-    centroids = [[float(x) for x in r["_pv"]] for r in first]
-    dim = len(centroids[0])
-    iterations = 0
-    for _ in range(max_iterations):
-        iterations += 1
-        nearest = _assign_arrow_udf(centroids)(F.col("_pv"))["cluster"]
-        assigned = pts.select("_pv", nearest.cast("int").alias("_cluster"))
-        sums = (
-            assigned.select("_cluster", F.posexplode("_pv").alias("_d", "_v"))
-            .groupBy("_cluster", "_d")
-            .agg(F.sum(F.col("_v").cast("double")).alias("_sv"), F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        new_centroids = [list(c) for c in centroids]  # empty clusters keep position
-        counts = [0] * k
-        per_dim: dict[int, list[float]] = {}
-        for r in sums:
-            per_dim.setdefault(r["_cluster"], [0.0] * dim)[r["_d"]] = r["_sv"]
-            counts[r["_cluster"]] = r["_n"]
-        for ci, sv in per_dim.items():
-            new_centroids[ci] = [x / counts[ci] for x in sv]
-        shift = max(
-            sum((a - b) ** 2 for a, b in zip(c0, c1)) ** 0.5
-            for c0, c1 in zip(centroids, new_centroids)
-        )
-        centroids = new_centroids
-        if shift < tol:
-            break
-    return centroids, iterations
 
 
 def _driver_kmeans_loop_portable(
@@ -410,13 +350,16 @@ def _driver_kmeans_loop_portable(
 
 def _probed_vectors(head, pts: DataFrame, k: int):
     """Seeds and driver matrix of :func:`kmeans_train_portable` from its
-    cell probe: ``(centroids, X)``, with ``X`` None when a vector is NULL,
-    ragged, off the seed width or not finite. The seeds are the k lowest
-    ids, NULL first as ``orderBy`` sorts them. Returns None when the ids
+    cell probe: ``(seeds, X)``. ``seeds`` are the (id, vector) pairs of the
+    k lowest ids, NULL first as ``orderBy`` sorts them, with vector None
+    when it is NULL or empty. ``X`` is None when a vector is NULL, empty,
+    ragged, off the seed width or not finite. Returns None when the ids
     do not survive pandas exactly (take the seed query)."""
     import numpy as np
     from pyspark.sql.types import IntegralType
 
+    if head.empty:
+        return [], None
     head = head.sort_values(["_r", "_d"], kind="stable")
     r = head["_r"].to_numpy()
     start = np.flatnonzero(np.r_[True, r[1:] != r[:-1]])
@@ -425,19 +368,23 @@ def _probed_vectors(head, pts: DataFrame, k: int):
     ids = _probed_ids(head["_pid"].iloc[start], integral)
     if ids is None:
         return None
-    seeds = sorted(range(len(ids)), key=lambda i: (ids[i] is not None, ids[i]))[:k]
+    lowest = sorted(range(len(ids)), key=lambda i: (ids[i] is not None, ids[i]))[:k]
     d, x = head["_d"].to_numpy(), head["_x"].astype("float64").to_numpy()
-    centroids = [
-        None if d[start[i]] != d[start[i]] else [float(v) for v in x[start[i] : end[i]]]
-        for i in seeds
+    seeds = [
+        (
+            ids[i],
+            None if d[start[i]] != d[start[i]] else [float(v) for v in x[start[i] : end[i]]],
+        )
+        for i in lowest
     ]
-    dim = len(centroids[0])
     X = None
-    if not head["_d"].isna().any() and ((end - start) == dim).all():
-        X = x.reshape(len(start), dim)
-        if not np.isfinite(X).all():
-            X = None
-    return centroids, X
+    if not head["_d"].isna().any():  # every vector, so every seed, has a cell
+        dim = len(seeds[0][1])
+        if ((end - start) == dim).all():
+            X = x.reshape(len(start), dim)
+            if not np.isfinite(X).all():
+                X = None
+    return seeds, X
 
 
 def kmeans_train_portable(
@@ -450,9 +397,10 @@ def kmeans_train_portable(
     nano: int = 10**9,
 ) -> list[list[float]]:
     """Lloyd's k-means whose every cross-engine-sensitive step is made
-    engine-portable — the oracle-checkable twin of :func:`kmeans_train`
-    (same loop and scale shape; the pagerank_portable doctrine applied to
-    a centroid trainer):
+    engine-portable, so the trained centroids replay bit for bit in DuckDB
+    (the pagerank_portable doctrine applied to a centroid trainer). Seeds
+    are the k lowest-``id_col`` rows (no RNG) and ties go to the lowest
+    centroid id, so results are identical across runs and partitionings:
 
     - per-dimension member sums run over NANO-QUANTIZED values
       (``floor(x*1e9 + 0.5)`` as bigint — txt_unigram_logprob's trick),
@@ -462,7 +410,7 @@ def kmeans_train_portable(
       ``CAST(SUM(..) AS DOUBLE) / COUNT``); int->double conversion and
       division are both IEEE-defined, so the replay is bit-identical in
       Python, Spark and DuckDB at any sum magnitude (not just < 2^53);
-    - a FIXED iteration count replaces the tol early-stop (a data-driven
+    - a FIXED iteration count, no tolerance early stop (a data-driven
       break cannot unroll into SQL);
     - assignment runs the nearest-centroid kernel, whose sequential
       per-dim accumulation DuckDB's list_sum replays exactly.
@@ -477,6 +425,10 @@ def kmeans_train_portable(
     runs. The probe counts cells (one probed row per element, one for a
     NULL or empty vector), so it needs no width up front, and under budget
     it also holds the seeds: one Spark job in all.
+
+    Inputs the loops do not model get one answer in both venues: an empty
+    frame returns ``[]``; a NULL or empty seed vector raises ``ValueError``
+    naming its id.
     """
     import numpy as np
 
@@ -489,17 +441,26 @@ def kmeans_train_portable(
     head = venue.driver_rows(cells, venue.DRIVER_CELLS, "kmeans_train_portable")
     probed = None if head is None else _probed_vectors(head, pts, k)
     if probed is None:
-        first = pts.orderBy("_pid").limit(k).collect()
-        centroids = [[float(x) for x in r["_pv"]] for r in first]
+        seeds = [(r["_pid"], r["_pv"]) for r in pts.orderBy("_pid").limit(k).collect()]
+        X = None
     else:
-        centroids, X = probed
-        if X is not None:
-            # every quantized term is at most max|x| * nano + 1 in magnitude
-            qmax = float(np.abs(X).max(initial=0.0)) * nano + 1.0
-            if venue.fits_int64_sum(len(X), qmax):
-                return _driver_kmeans_loop_portable(
-                    X, centroids, iterations=iterations, nano=nano
-                )
+        seeds, X = probed
+    for sid, v in seeds:
+        if not v:
+            raise ValueError(
+                f"kmeans_train_portable: seed vector of {id_col}={sid!r} "
+                "is NULL or empty"
+            )
+    centroids = [[float(x) for x in v] for _, v in seeds]
+    if not centroids:
+        return []
+    if X is not None:
+        # every quantized term is at most max|x| * nano + 1 in magnitude
+        qmax = float(np.abs(X).max(initial=0.0)) * nano + 1.0
+        if venue.fits_int64_sum(len(X), qmax):
+            return _driver_kmeans_loop_portable(
+                X, centroids, iterations=iterations, nano=nano
+            )
     dim = len(centroids[0])
     q = F.floor(F.col("_v").cast("double") * nano + F.lit(0.5)).cast("bigint")
     for _ in range(iterations):
@@ -530,80 +491,6 @@ def kmeans_train_portable(
     return centroids
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    n_probe: int = 2,
-    k: int = 10,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: a KMeans coarse quantizer
-    assigns every vector to its nearest centroid cell; each query probes its
-    ``n_probe`` closest cells and ranks only those members.
-
-    The scale shape: candidate set ≈ corpus × n_probe / n_cells per query;
-    recall rises with n_probe at linear candidate cost. Training samples the
-    corpus (quantizer quality needs thousands of vectors, not all of them).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from ecommerce_etl_pipeline_spark.llmops.similarity import cosine, dot
-
-    corpus = ensure_parallelism(corpus)
-    with_vec = corpus.withColumn("_v", array_to_vector(F.col(vec_col)))
-    km = KMeans(k=n_cells, seed=seed, featuresCol="_v", predictionCol="_cell")
-    model = km.fit(with_vec.select("_v"))
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-
-    def cell_dists(vec):
-        # Euclidean-equivalent score: argmin ||x-c||^2 = argmax (x.c - ||c||^2/2)
-        # (the ||x||^2 term is constant per query) — MUST match the KMeans
-        # assignment metric or probes visit the wrong cells.
-        return F.array(
-            *[
-                dot(vec, F.array(*[F.lit(x) for x in c]))
-                - F.lit(sum(x * x for x in c) / 2.0)
-                for c in centroids
-            ]
-        )
-
-    def probe_cells(vec):
-        dists = cell_dists(vec)
-        idx = F.sequence(F.lit(0), F.lit(n_cells - 1))
-        pairs = F.zip_with(dists, idx, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
-        return F.slice(F.reverse(F.array_sort(pairs)), 1, n_probe)
-
-    assigned = model.transform(with_vec).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        F.col("_cell").cast("int").alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        F.explode(probe_cells(F.col(vec_col))).alias("probe"),
-    ).select("query_id", "query_vec", F.col("probe.i").alias("cell"))
-
-    scored = (
-        assigned.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("query_vec"), F.col("vec")))
-        .select("query_id", "neighbor_id", "cosine")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def ivf_topk_portable(
     corpus: DataFrame,
     queries: DataFrame,
@@ -615,22 +502,24 @@ def ivf_topk_portable(
     k: int = 10,
     iterations: int = 5,
 ) -> DataFrame:
-    """IVF approximate top-k on the PORTABLE quantizer — the oracle-
-    checkable twin of :func:`ivf_topk` (VERDICT r7 #7): the coarse
+    """IVF (inverted-file) approximate top-k: a coarse quantizer assigns
+    every corpus vector to its nearest centroid cell; each query probes
+    its ``n_probe`` closest cells and ranks only those members. The
     quantizer is :func:`kmeans_train_portable` (deterministic lowest-id
     seeds, integer-nano centroid updates, fixed iteration count), so the
     trained centroids, every cell assignment, every probe choice and the
     final cosine ranking all replay bit-for-bit in DuckDB as unrolled
-    CTEs — the whole ANN index build becomes a checkable quantity, not
-    just its recall.
+    CTEs — the whole ANN index build is a checkable quantity, not just
+    its recall.
 
-    Scale shape (identical to ivf_topk): centroids are hyperparameter-
-    sized; corpus assignment is one narrow scan of the nearest-centroid
-    kernel (zero shuffles); probes are
-    |queries| x n_probe rows and broadcast into the candidate join, so
+    Scale shape: centroids are hyperparameter-sized; corpus assignment is
+    one narrow scan of the nearest-centroid kernel (zero shuffles); probes
+    are |queries| x n_probe rows and broadcast into the candidate join, so
     each query ranks ~corpus * n_probe / n_cells members instead of the
-    full corpus. Ties everywhere go to the lowest cid / neighbor_id, the
-    engine-portable order.
+    full corpus; recall rises with n_probe at linear candidate cost. Ties
+    everywhere go to the lowest cid / neighbor_id, the engine-portable
+    order. An empty corpus gives an empty result; a NULL seed vector
+    raises (see :func:`kmeans_train_portable`).
     """
     centroids = kmeans_train_portable(
         corpus, k=n_cells, id_col=id_col, vec_col=vec_col,

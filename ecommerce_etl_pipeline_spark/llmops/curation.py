@@ -97,7 +97,6 @@ def curate(
     use_minhash: bool = True,
     portable_minhash: bool = False,
     use_ppjoin: bool = False,
-    exact_hashed: bool = False,
     classifier_weights: list[int] | None = None,
     classifier_threshold: float = 0.5,
 ) -> DataFrame:
@@ -112,13 +111,9 @@ def curate(
     fan-out stays linear on df-skewed (Zipf) corpora where the plain
     index join's sum(df^2) is dominated by hot boilerplate shingles —
     the exact END-TO-END pipeline a real web corpus runs at scale
-    (SCALING.md round-6 Zipf fixture: 783-5230x candidate cut).
-    ``exact_hashed`` selects the shingle representation for BOTH exact
-    candidate generators: False (default) shuffles raw shingle strings —
-    the oracle-parity mode every registered curation query replays in
-    DuckDB; True shuffles 31-bit hashes — the narrower exchange for
-    at-scale runs (dedup.py's "100 TB mode"; results can differ only via
-    a ~2^-31 per-shingle hash collision).
+    (SCALING.md round-6 Zipf fixture: 783-5230x candidate cut). Both
+    exact candidate generators shuffle raw shingle strings, the mode every
+    registered curation query replays in DuckDB.
 
     ``classifier_weights`` (FineWeb shape: train -> holdout-gate ->
     apply at corpus scale) replaces stage 2's PUNCT-RATIO HEURISTIC with
@@ -201,12 +196,12 @@ def curate(
     elif use_ppjoin:
         pairs = dedup.ppjoin_pairs(
             exact, id_col, text_col,
-            threshold=jaccard_threshold, hashed=exact_hashed,
+            threshold=jaccard_threshold, hashed=False,
         )
     else:
         pairs = dedup.jaccard_similarity_join(
             exact, id_col, text_col,
-            threshold=jaccard_threshold, hashed=exact_hashed,
+            threshold=jaccard_threshold, hashed=False,
         )
     components = connected_components(pairs)
     drop = components.filter(F.col("node") != F.col("component")).select(

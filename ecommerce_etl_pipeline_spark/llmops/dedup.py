@@ -1185,8 +1185,8 @@ def semantic_dedup(
 
     Deterministic oracle-able form: one assignment pass against the
     ``n_seeds`` lowest-id vectors as centroids (the same rule
-    ml_kmeans_step checks); production swaps in kmeans_train's converged
-    centroids — identical plan, different literals. Near-duplicate pairs
+    ml_kmeans_step checks); production swaps in kmeans_train_portable's
+    trained centroids — identical plan, different literals. Near-duplicate pairs
     (cosine >= threshold) resolve to clusters via connected components;
     the min-id member of each component is canonical.
 

@@ -24,7 +24,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ecommerce_etl_pipeline_spark.operators import caches
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 
@@ -278,43 +277,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit signature against fixed hyperplanes, packed into a long.
-
-    The plane matrix is inlined as array literals — right for test-scale
-    dims (64x12 ≈ 800 literals). At production embedding dims the plan
-    bloats (1536-dim x 96 planes ≈ 150k literals); use
-    :func:`signatures_via_join` there, which ships the planes as a
-    broadcast table instead of plan text.
-
-    A vector whose width differs from the plane dim would zip_with-pad
-    with NULLs, every sign test would fall to 0, and ALL vectors would
-    silently collapse into bucket 0 (a quadratic join, no error) — so the
-    width is asserted lazily per row via ``raise_error``. A NULL vector is
-    not a width mismatch: it yields a NULL signature (joins drop it), the
-    same propagate-don't-crash semantics as every other NULL input here.
-    """
-    dim = len(planes[0])
-    checked = F.when(F.size(vec) == F.lit(dim), vec).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(f"lsh_signature: expected {dim}-dim vector, got "),
-                F.size(vec).cast("string"),
-            )
-        )
-    )
-    bits = [
-        F.when(dot(checked, F.array(*[F.lit(w) for w in plane])) >= 0, F.lit(1 << i))
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        for i, plane in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return F.when(vec.isNull(), F.lit(None).cast("bigint")).otherwise(out)
-
-
 def _sql_ident(name: str) -> str:
     """Backtick-quote a column NAME for SQL-text interpolation, matching
     F.col's resolution: dots split into nested-field access, every other
@@ -330,8 +292,9 @@ def _project_all(vec: str, flat: list[list[float]]) -> Column:
     lambdas run interpreted, so one pass over the input elements carrying a
     wide partial-sum accumulator beats len(flat) separate passes).
     Accumulator j updates in input order — each projection is the same
-    sequential left-to-right sum as ``dot(vec, plane_j)``, so sign bits
-    packed from these are BIT-IDENTICAL to :func:`lsh_signature`'s.
+    sequential left-to-right sum ``acc += x * w`` as ``dot(vec, plane_j)``,
+    so the sign bits are bit-identical to a per-plane fold (the form the
+    oracle SQL replays).
 
     ``vec`` is a COLUMN NAME, not a Column: the whole expression is built
     as SQL text and parsed in ONE F.expr call. The Column-API form of this
@@ -341,8 +304,11 @@ def _project_all(vec: str, flat: list[list[float]]) -> Column:
     #5). Semantics and evaluation order are unchanged: same fold, same
     literals, same codegen after parsing.
 
-    Same per-row contracts as lsh_signature: NULL vector → NULL output;
-    width mismatch raises (never a silent bucket collapse).
+    Per-row contracts: a NULL vector gives NULL projections (its
+    signature is NULL and joins drop it). A vector whose width differs
+    from the plane dim raises: folded against the wrong width, every sign
+    test would fall one way and ALL vectors would silently collapse into
+    one bucket (a quadratic join, no error).
     """
     vec = _sql_ident(vec)
     total = len(flat)
@@ -380,8 +346,8 @@ def _project_all(vec: str, flat: list[list[float]]) -> Column:
 def _pack_signatures(proj: str, n_tables: int, n_planes: int) -> Column:
     """Pack sign bits of a MATERIALIZED projection column into one bigint
     bucket per table (table t owns projections [t*n_planes, (t+1)*n_planes)).
-    Identical bit layout to :func:`lsh_signature` (bit i set iff projection
-    i >= 0). ``proj`` is a COLUMN NAME (see _project_all: the expression is
+    Bit i of a table's bucket is set iff its projection i is >= 0.
+    ``proj`` is a COLUMN NAME (see _project_all: the expression is
     SQL text, one parse instead of ~n_tables*n_planes*6 py4j calls) and
     must name a real attribute, not the fold expression — this references
     it n_tables*n_planes times, and only CollapseProject's
@@ -402,69 +368,6 @@ def _pack_signatures(proj: str, n_tables: int, n_planes: int) -> Column:
     return F.expr(
         f"CASE WHEN {proj} IS NULL THEN CAST(NULL AS ARRAY<BIGINT>) "
         f"ELSE {arr} END"
-    )
-
-
-def signatures_via_join(
-    df: DataFrame,
-    tables: list[list[list[float]]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Plan-bloat-free signature computation: the plane matrix rides as a
-    BROADCAST table of (table_id, plane_id, weights) rows instead of plan
-    literals, so plan size is O(1) in dim x planes. One broadcast
-    nested-loop fan-out of |df| x n_planes thin rows, one partial-agg
-    groupBy packing sign bits per (id, table). Bit-identical to
-    :func:`lsh_signature` (same left-to-right dot fold).
-
-    Returns (id_col, table_id, bucket) — the melted layout
-    :func:`lsh_topk_multi` joins on.
-    """
-    spark = df.sparkSession
-    plane_rows = [
-        (t, i, plane)
-        for t, planes in enumerate(tables)
-        for i, plane in enumerate(planes)
-    ]
-    planes_df = spark.createDataFrame(
-        plane_rows, "table_id INT, plane_id INT, w ARRAY<DOUBLE>"
-    )
-    # the SQL shiftleft accepts a column shift; the Python wrapper does not.
-    # NULL _sign (NULL vector) keeps the bit NULL so the SUM below returns a
-    # NULL bucket — matching lsh_signature's NULL-in-NULL-out.
-    bit = F.expr(
-        "CASE WHEN _sign IS NULL THEN CAST(NULL AS BIGINT) "
-        "WHEN _sign THEN shiftleft(CAST(1 AS BIGINT), plane_id) "
-        "ELSE CAST(0 AS BIGINT) END"
-    )
-    return (
-        df.select(id_col, vec_col)
-        .join(F.broadcast(planes_df))
-        .withColumn(
-            "_sign",
-            # NULL vector -> NULL sign (not a width mismatch; see
-            # lsh_signature); genuine width mismatch raises
-            F.when(F.col(vec_col).isNull(), F.lit(None).cast("boolean"))
-            .when(
-                F.size(F.col(vec_col)) == F.size(F.col("w")),
-                dot(F.col(vec_col), F.col("w")) >= 0,
-            )
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("signatures_via_join: vector width "),
-                        F.size(F.col(vec_col)).cast("string"),
-                        F.lit(" != plane dim "),
-                        F.size(F.col("w")).cast("string"),
-                    )
-                )
-            ),
-        )
-        .select(id_col, "table_id", bit.alias("_bit"))
-        .groupBy(id_col, "table_id")
-        .agg(F.sum("_bit").cast("bigint").alias("bucket"))
     )
 
 
@@ -546,10 +449,9 @@ def lsh_topk_multi(
 
     def melted(df: DataFrame, out_id: str) -> DataFrame:
         # single-fold: ALL n_tables*n_planes projections in one aggregate
-        # pass (bit-identical to per-table lsh_signature — parity-tested),
+        # pass (bit-identical to per-table folds — parity-tested),
         # materialized as "_proj" so the bit-pack reads, not recomputes, it.
-        # A NULL vector posexplodes to zero rows here where the literal path
-        # emitted n_tables NULL-bucket rows; both vanish at the bucket join.
+        # A NULL vector posexplodes to zero rows: it joins no bucket.
         return df.select(
             F.col(id_col).alias(out_id),
             _project_all(vec_col, flat).alias("_proj"),
@@ -637,7 +539,7 @@ def random_project(vec: Column, rows: list[list[float]]) -> Column:
             lambda a, m: a + e["x"] * m,
         ),
     )
-    # same per-row width contract as lsh_signature: a vector narrower or
+    # same per-row width contract as _project_all: a vector narrower or
     # wider than the matrix must FAIL LOUDLY, not silently project onto a
     # prefix of the matrix (the silent-collapse failure mode); NULL
     # vectors pass through as NULL (joins drop the row).
@@ -752,7 +654,7 @@ def rp_rerank_topk(
 
 
 def cosine_py(a, b) -> float:
-    """Driver-side twin of :func:`cosine` — the SAME left-to-right fold
+    """Driver-side form of :func:`cosine` — the SAME left-to-right fold
     (acc starts at 0.0, each float32 element widened to double before the
     multiply, one summation order), so the result is bit-identical to the
     JVM HOF fold and to DuckDB's list_sum. Used only over bounded state
@@ -783,8 +685,8 @@ def mmr_greedy(
     ``argmax lam*rel - (1-lam)*max(sim to selected)`` with ties broken on
     the smaller id — float ops in the exact order the SQL oracle replays
     (lam*rel - om*ms; max is a comparison, not arithmetic), so the scores
-    are bit-identical to the unrolled DataFrame venue. Returns
-    (step, id, rel, mmr) tuples."""
+    are bit-identical to the sim_mmr_diversify oracle's chained CTEs.
+    Returns (step, id, rel, mmr) tuples."""
     om = 1 - lam
     remaining = dict(sorted(pool))
     selected: list[int] = []
@@ -816,7 +718,7 @@ def mmr_diversify_rows(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[tuple[int, int, float, float]]:
-    """Bounded-state MMR diversified re-ranking (the production venue).
+    """Bounded-state MMR diversified re-ranking of one query's pool.
 
     The ONLY corpus-scaled term is the relevance pool build — one
     :func:`brute_force_topk` scan (at 100 TB the IVF/LSH index swaps in
@@ -824,10 +726,11 @@ def mmr_diversify_rows(
     pairwise sims, i.e. bounded DRIVER state by construction — so it
     collects ONCE (ids, relevances, embeddings in a single small job) and
     the K-step greedy argmax runs in pure Python via :func:`mmr_greedy`
-    (the kmeans_train/bpe_train bounded-state doctrine). This replaces the
-    r10 unrolled-lineage venue, which paid ~9s of Catalyst planning to
-    re-rank 20 cached rows; output is pinned bit-equal to that venue in
-    tests/test_llmops_algos.py."""
+    (the bpe_train bounded-state doctrine). A lazy DataFrame form of the
+    greedy chains orderBy/limit/left_anti lineage per step, so Catalyst
+    re-plans an ever-wider tree (~9 s of planning for a 20-row pool).
+    Picks and raw scores are pinned against a pure-Python greedy over the
+    collected embeddings in tests/test_llmops_algos.py."""
     pool = brute_force_topk(corpus, queries, id_col=id_col, vec_col=vec_col,
                             k=pool_n).select(
         "query_id", F.col("neighbor_id").alias("_mid"), F.col("cosine").alias("_rel")
@@ -851,82 +754,6 @@ def mmr_diversify_rows(
     return mmr_greedy(pool_rows, sims, k=k, lam=lam)
 
 
-def mmr_diversify_unrolled(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 5,
-    pool_n: int = 20,
-    lam: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The r10 unrolled-lazy-lineage MMR venue, kept as the distributed
-    parity twin for :func:`mmr_diversify_rows` (the pinned-equal test
-    pattern kmeans/BPE established). Correct and scale-safe — the pool and
-    sim frames are bounded and cached — but each greedy step chains
-    orderBy/limit/unionByName/left_anti lineage over the previous steps,
-    so Catalyst re-plans an exponentially-wider tree every step: ~9s of
-    planning constant for a 20-row pool (SCALING.md round-10 close). Not
-    registered; the bounded-state venue is the production plan."""
-    om = 1 - lam
-    pool = caches.persist(
-        brute_force_topk(corpus, queries, id_col=id_col, vec_col=vec_col,
-                         k=pool_n)
-        .select(F.col("neighbor_id").alias("vec_id"), F.col("cosine").alias("rel"))
-    )
-    pvec = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    ).join(F.broadcast(pool.select("vec_id")), "vec_id")
-    # non-equi self-join over the POOL-BOUNDED frame (<= pool_n rows);
-    # broadcast one side explicitly so it plans BroadcastNestedLoopJoin,
-    # never CartesianProduct (the test_plans gate)
-    sims = caches.persist(
-        pvec.alias("a")
-        .join(F.broadcast(pvec.alias("b")), F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("a_id"),
-            F.col("b.vec_id").alias("b_id"),
-            cosine(F.col("a.embedding"), F.col("b.embedding")).alias("sim"),
-        )
-    )
-    selected = None
-    remaining = pool
-    for t in range(1, k + 1):
-        if selected is None:
-            scored = remaining.select(
-                "vec_id",
-                "rel",
-                ((F.lit(lam) * F.col("rel")) - (F.lit(om) * F.lit(0.0))).alias("mmr"),
-            )
-        else:
-            maxsim = (
-                sims.join(
-                    F.broadcast(selected.select(F.col("vec_id").alias("b_id"))),
-                    "b_id",
-                )
-                .groupBy(F.col("a_id").alias("vec_id"))
-                .agg(F.max("sim").alias("ms"))
-            )
-            scored = remaining.join(maxsim, "vec_id", "left").select(
-                "vec_id",
-                "rel",
-                (
-                    (F.lit(lam) * F.col("rel"))
-                    - (F.lit(om) * F.coalesce(F.col("ms"), F.lit(0.0)))
-                ).alias("mmr"),
-            )
-        pick = (
-            scored.orderBy(F.desc("mmr"), F.asc("vec_id"))
-            .limit(1)
-            .withColumn("step", F.lit(t))
-        )
-        selected = pick if selected is None else selected.unionByName(pick)
-        remaining = remaining.join(pick.select("vec_id"), "vec_id", "left_anti")
-    return selected.select(F.col("step").cast("int").alias("step"),
-                           "vec_id", "rel", "mmr")
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (round 11): the canonical ANN memory-compression
 # path at 100 TB — each vector becomes m sub-codes (here 8 x 4-bit-ish
@@ -934,8 +761,8 @@ def mmr_diversify_unrolled(
 # reduction), and the query-time scan reads ONLY the code columns with
 # per-subspace lookup tables (ADC), never the vectors. Composes with IVF
 # (coarse cells, PQ within a cell) exactly like production FAISS indexes.
-# Everything is deterministic (kmeans_train's lowest-id seeding, struct
-# argmin tie-break on the lower code), so recall is measurable in pytest
+# Everything is deterministic (lowest-id seeding, argmin tie-break on the
+# lower code), so recall is measurable in pytest
 # the same way the LSH/IVF paths are.
 # ---------------------------------------------------------------------------
 

@@ -4,9 +4,9 @@ PageRank (Brin & Page 1998) in its standard distributed formulation:
 ranks live in a (node, rank) frame, each iteration is one join + one
 map-side-combinable aggregate (contributions grouped by destination),
 dangling-node mass is redistributed uniformly via a single scalar
-aggregate, and the driver never holds a rank vector — the same
-shuffle-per-iteration shape every Pregel-style engine runs, expressed
-with plain joins so Catalyst/AQE plan each round.
+aggregate, and the distributed venue never holds a rank vector on the
+driver — the same shuffle-per-iteration shape every Pregel-style engine
+runs, expressed with plain joins so Catalyst/AQE plan each round.
 
 Iteration state management (two failure modes, both hit while building
 this): (1) WITHOUT a lineage cut, each round's plan embeds the previous
@@ -22,47 +22,44 @@ has no honest size statistics, and a mis-estimated broadcast rebuilt
 per round is its own OOM; after materialization every round's join
 strategy is stats-driven (the repo's join doctrine).
 
-The FP (:func:`pagerank`) and integer-exact (:func:`pagerank_portable`)
-variants differ ONLY in their arithmetic — initial rank, per-edge
-contribution, dangling redistribution, rank update — so both are thin
-parameterizations of one shared loop (:func:`_run_rank_loop`).
+All arithmetic is exact int64 (:func:`pagerank_portable`): integer sums
+are order-independent, so every partitioning and both venues give the
+same ranks bit for bit, and a fixed iteration count replays in SQL.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ecommerce_etl_pipeline_spark.operators import caches, venue
 from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 
-def _empty_ranks(e_raw: DataFrame, zero_rank: Column) -> DataFrame:
-    """Zero-row (node, rank) frame with the union-coerced endpoint type —
-    what any rank loop over an empty edge list must return (the loops
-    themselves divide by n and cannot run at n = 0)."""
+def _empty_ranks(e_raw: DataFrame) -> DataFrame:
+    """Zero-row (node, rank) frame with the union-coerced endpoint type and
+    bigint ranks — the answer over an empty edge list (the loops divide by
+    n and cannot run at n = 0)."""
     return (
         e_raw.select(F.col(e_raw.columns[0]).alias("node"))
         .union(e_raw.select(F.col(e_raw.columns[1]).alias("node")))
         .limit(0)
-        .select("node", zero_rank.alias("rank"))
+        .select("node", F.lit(0).cast("bigint").alias("rank"))
     )
 
 
 def _prep_graph(
     edges: DataFrame, src_col: str, dst_col: str, pre_deduped: bool = False
 ) -> tuple[DataFrame, DataFrame, DataFrame, int, bool]:
-    """Materialize the loop-invariant frames and bounded scalars shared by
-    every rank loop: the degree-annotated edge list, node set, out-degrees
-    (all persisted with honest stats — see module docstring failure mode
-    2), the node count n (baking 1/n in as a literal keeps each round's
-    plan a join + aggregate + one 1-row broadcast instead of two extra
-    crossJoins whose codegen dominated first-run latency), and whether any
-    dangling nodes exist (a graph with none — every symmetric graph, e.g.
-    co-occurrence — skips the per-round dangling aggregate + broadcast
-    entirely, half the jobs per iteration). Both scalars are the
+    """Materialize the loop-invariant frames and bounded scalars of the
+    distributed rank loop: the degree-annotated edge list, node set,
+    out-degrees (all persisted with honest stats — see module docstring
+    failure mode 2), the node count n (baking 1/n in as a literal keeps
+    each round's plan a join + aggregate + one 1-row broadcast instead of
+    two extra crossJoins whose codegen dominated first-run latency), and
+    whether any dangling nodes exist (a graph with none — every symmetric
+    graph, e.g. co-occurrence — skips the per-round dangling aggregate +
+    broadcast entirely, half the jobs per iteration). Both scalars are the
     kmeans-centroid / bloom-sizing class of bounded driver statistic.
 
     The edge cache is LAYOUT-PREPARED for the loop (round-5 per-round-
@@ -108,23 +105,24 @@ def _run_rank_loop(
     e: DataFrame,
     nodes: DataFrame,
     out_deg: DataFrame,
+    n: int,
     has_dangling: bool,
     *,
-    init_rank: Column,
-    contrib: Callable[[], Column],
-    zero: Column,
-    redistributed: Callable[[], Column],
-    new_rank: Callable[[Column, Column], Column],
+    scale: int,
     iterations: int,
 ) -> DataFrame:
-    """The shared PageRank iteration shell. Per round: one rank-edge join
-    + per-destination aggregate of ``contrib()`` (evaluated against the
-    joined rank/deg columns), an optional dangling-mass scalar broadcast
-    (``redistributed()`` sees its ``dm`` column), and
-    ``new_rank(recv, redist)`` over the node frame, with the lineage cut
-    and previous-round block release described in the module docstring.
+    """The distributed integer PageRank loop (update rule in
+    :func:`pagerank_portable`). Per round: one rank-edge join + per-
+    destination integer aggregate of the contributions, an optional
+    dangling-mass scalar broadcast, and the rank update over the node
+    frame, with the lineage cut and previous-round block release described
+    in the module docstring.
     """
-    ranks = nodes.select("node", init_rank.alias("rank")).localCheckpoint()
+    zero = F.lit(0).cast("bigint")
+    teleport = F.lit((15 * scale) // (100 * n)).cast("bigint")
+    ranks = nodes.select(
+        "node", F.lit(scale // n).cast("bigint").alias("rank")
+    ).localCheckpoint()
     for _ in range(iterations):
         prev = ranks
         contribs = (
@@ -139,7 +137,12 @@ def _run_rank_loop(
             # the merge join streams it with NO per-round exchange or sort
             # — the node-sized rank frame is the only exchange per round.
             ranks.join(e.hint("merge"), ranks.node == e.src)
-            .select(F.col("dst").alias("node"), contrib().alias("c"))
+            # integer contribution (85*r) div (100*deg): exact, and the
+            # per-destination SUM is order-independent
+            .select(
+                F.col("dst").alias("node"),
+                F.expr("(85 * rank) div (100 * deg)").alias("c"),
+            )
             .groupBy("node")
             .agg(F.sum("c").alias("recv"))
         )
@@ -151,12 +154,14 @@ def _run_rank_loop(
                 .agg(F.coalesce(F.sum("rank"), zero).alias("dm"))
             )
             base = base.crossJoin(F.broadcast(dangling))
-            redist = redistributed()
+            redist = F.expr(f"(85 * dm) div (100 * {n})")
         else:
             redist = zero
         ranks = base.select(
             "node",
-            new_rank(F.coalesce(F.col("recv"), zero), redist).alias("rank"),
+            (teleport + F.coalesce(F.col("recv"), zero) + redist)
+            .cast("bigint")
+            .alias("rank"),
         )
         # eager checkpoint: materializes this round AND cuts lineage.
         # coalesce first: ranks are node-sized, and under a default
@@ -173,47 +178,6 @@ def _run_rank_loop(
         except Exception:
             pass
     return ranks
-
-
-def pagerank(
-    edges: DataFrame,
-    *,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    damping: float = 0.85,
-    iterations: int = 10,
-) -> DataFrame:
-    """PageRank over a directed edge list. Returns (node, rank); ranks sum
-    to 1 (dangling mass redistributed uniformly each round).
-
-    Scale shape per iteration: one join of ranks (node-sized) against the
-    out-degree-annotated edge list on src, one groupBy(dst) sum with
-    map-side partial aggregation, one scalar dangling-mass aggregate
-    (broadcast back as a one-row frame — never a driver value), one
-    node-sized left join to re-attach rank-0 receivers. Nothing the
-    driver holds grows with the graph.
-    """
-    e, nodes, out_deg, n, has_dangling = _prep_graph(edges, src_col, dst_col)
-    if n == 0:
-        for f in (e, nodes, out_deg):
-            f.unpersist()
-        return _empty_ranks(
-            edges.select(src_col, dst_col), F.lit(0.0)
-        )
-    return _run_rank_loop(
-        e,
-        nodes,
-        out_deg,
-        has_dangling,
-        init_rank=F.lit(1.0 / n),
-        contrib=lambda: F.col("rank") / F.col("deg"),
-        zero=F.lit(0.0),
-        redistributed=lambda: F.col("dm") / F.lit(float(n)),
-        new_rank=lambda recv, redist: (
-            F.lit((1.0 - damping) / n) + F.lit(damping) * (recv + redist)
-        ),
-        iterations=iterations,
-    )
 
 
 #: Driver-venue budget for :func:`pagerank_portable`, in RAW probed rows
@@ -319,8 +283,8 @@ def pagerank_portable(
     scale: int = 10**12,
     symmetric: bool = False,
 ) -> DataFrame:
-    """PageRank in exact INTEGER arithmetic — the oracle-checkable twin of
-    :func:`pagerank` (same loop shape, same state management).
+    """PageRank (damping 0.85) in exact INTEGER arithmetic, so the ranks
+    replay bit for bit in any SQL engine (g1's oracle).
 
     ``symmetric=True`` declares the input UNDIRECTED with one canonical
     row per edge (``src < dst`` strictly — no self-loops, no reversed
@@ -350,9 +314,9 @@ def pagerank_portable(
     portability is ≤ iterations * (scale^-1 * deg) truncation per rank —
     ~1e-12 at default scale, far below any ranking-relevant difference —
     and total mass decaying by the truncation remainders instead of
-    summing to exactly 1. Same per-round scale shape as :func:`pagerank`:
-    one rank-edge join, one map-side-combinable integer aggregate, one
-    bounded scalar, lineage cut per round.
+    summing to exactly 1. Per round (:func:`_run_rank_loop`): one
+    rank-edge join, one map-side-combinable integer aggregate, one bounded
+    scalar, lineage cut per round.
 
     Driver venue: up to ``DRIVER_EDGE_ROWS`` raw (not deduplicated) edge
     rows, half that when ``symmetric``, with integral, null-free ids
@@ -380,7 +344,7 @@ def pagerank_portable(
     if head is not None and len(head) == 0:
         # empty edge list: both loop venues would divide by n = 0; the
         # rank frame over zero nodes is well-defined — return it directly
-        return _empty_ranks(e_raw, F.lit(0).cast("bigint"))
+        return _empty_ranks(e_raw)
     if (
         head is not None
         and not head["src"].isna().any()
@@ -436,21 +400,7 @@ def pagerank_portable(
     if n == 0:
         for f in (e, nodes, out_deg):
             f.unpersist()
-        return _empty_ranks(e_raw, F.lit(0).cast("bigint"))
-    base = (15 * scale) // (100 * n)
+        return _empty_ranks(e_raw)
     return _run_rank_loop(
-        e,
-        nodes,
-        out_deg,
-        has_dangling,
-        init_rank=F.lit(scale // n).cast("bigint"),
-        # integer contribution: (85*r) div (100*deg) — exact, and the
-        # per-destination SUM is an integer sum (order-independent)
-        contrib=lambda: F.expr("(85 * rank) div (100 * deg)"),
-        zero=F.lit(0).cast("bigint"),
-        redistributed=lambda: F.expr(f"(85 * dm) div (100 * {n})"),
-        new_rank=lambda recv, redist: (
-            F.lit(base).cast("bigint") + recv + redist
-        ).cast("bigint"),
-        iterations=iterations,
+        e, nodes, out_deg, n, has_dangling, scale=scale, iterations=iterations
     )

@@ -1,4 +1,10 @@
-"""Seeded and referential-integrity sampling — SURVEY.md §2.10 (SM1-SM3).
+"""Portable and referential-integrity sampling — SURVEY.md §2.10 (SM1-SM3).
+
+Every draw is an md5-portable function of (salt, id), not a seeded
+``rand``: it replays identically in any engine, across re-runs and
+re-partitionings, so each sample is oracle-checkable, and re-salting is a
+fresh independent draw. (Spark's ``sample(seed)`` reproduces neither the
+reference's pandas ``random_state`` draw nor itself across partitionings.)
 
 The reference's sampler (src/utils/data_sampling.py) pulls parent keys to
 the driver (`tolist()`) and filters children chunk-by-chunk; here the whole
@@ -9,65 +15,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-
-def seeded_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """Bernoulli sample (approximate-n) — reference data_sampling.py:40-43.
-    One scan, no shuffle; the right default at scale."""
-    return df.sample(fraction=fraction, seed=seed)
-
-
-def seeded_sample_exact(df: DataFrame, n: int, order_key: str, seed: int = 42) -> DataFrame:
-    """Exact-n seeded sample: rank rows by ``rand(seed)`` (tiebroken by a
-    unique key for determinism) and keep the first n — the fixture-parity
-    variant (SURVEY §4 item 2). Costs a single-partition window over the
-    sampled ordering; prefer :func:`seeded_sample` unless exact n matters."""
-    w = Window.orderBy(F.rand(seed), F.col(order_key))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n)
-        .drop("_rn")
-    )
-
-
-def ri_cascade_sample(
-    parents: DataFrame,
-    children: list[tuple[DataFrame, str, str]],
-    *,
-    fraction: float,
-    seed: int = 42,
-) -> list[DataFrame]:
-    """Referential-integrity cascade (reference data_sampling.py:144-151):
-    sample the parent, then semi-join each child level on its FK so every
-    child row keeps a sampled ancestor.
-
-    ``children`` is a list of (child_df, child_fk_col, parent_key_col)
-    applied in order, each level keyed to the previous level's output.
-    Returns [sampled_parent, child1, child2, ...].
-    """
-    out = [seeded_sample(parents, fraction, seed)]
-    prev = out[0]
-    for child, fk, pk in children:
-        keys = prev.select(F.col(pk).alias(fk)).distinct()
-        out.append(child.join(keys, on=fk, how="left_semi"))
-        prev = out[-1]
-    return out
 
 
 def portable_sample(
     df: DataFrame, fraction: float, id_col: str, *, salt: str = "sample:v1"
 ) -> DataFrame:
-    """Bernoulli sample by md5-portable uniform: keep rows whose
+    """Bernoulli sample (approximate n) by md5-portable uniform — reference
+    data_sampling.py:40-43: keep rows whose
     ``hash_uint32(salt || id) / 2^32 < fraction``.
 
-    The oracle-checkable twin of :func:`seeded_sample` (the sm8/splits
-    doctrine): the draw depends only on (salt, id), so it replays
-    identically in any engine, across re-runs and re-partitionings — and
-    re-salting is a fresh independent draw. Same plan shape as
-    ``df.sample``: one narrow filter inside the scan stage, no shuffle.
-    The division by 2^32 is exact in a double, so the ``< fraction``
-    comparison is engine-identical.
+    One narrow filter inside the scan stage, no shuffle: the right default
+    at scale. The division by 2^32 is exact in a double, so the
+    ``< fraction`` comparison is engine-identical.
     """
     from ecommerce_etl_pipeline_spark.llmops.splits import hash_uint32
 
@@ -82,10 +41,9 @@ def portable_sample_exact(
     ``salt || id`` (tiebroken by the id for total order) and keep the
     first n.
 
-    Oracle-checkable twin of :func:`seeded_sample_exact`, with a better
-    scale shape: ``orderBy + limit`` plans as TakeOrderedAndProject
-    (per-partition top-n, driver merges n-row heads) instead of the
-    single-partition ``row_number`` window.
+    ``orderBy + limit`` plans as TakeOrderedAndProject (per-partition
+    top-n, driver merges n-row heads), never a single-partition
+    ``row_number`` window.
     """
     from ecommerce_etl_pipeline_spark.llmops.splits import hash_key
 
@@ -100,10 +58,15 @@ def portable_ri_cascade(
     fraction: float,
     salt: str = "sample:v1",
 ) -> list[DataFrame]:
-    """:func:`ri_cascade_sample` with the parent drawn by
-    :func:`portable_sample` — the whole cascade (parent draw + every
-    semi-join level) then replays in SQL, so referential-integrity
-    sampling is oracle-checkable end-to-end."""
+    """Referential-integrity cascade (reference data_sampling.py:144-151):
+    draw the parent with :func:`portable_sample`, then semi-join each child
+    level on its FK so every child row keeps a sampled ancestor. The whole
+    cascade (parent draw + every semi-join level) replays in SQL.
+
+    ``children`` is a list of (child_df, child_fk_col, parent_key_col)
+    applied in order, each level keyed to the previous level's output.
+    Returns [sampled_parent, child1, child2, ...].
+    """
     out = [portable_sample(parents, fraction, parent_key, salt=salt)]
     prev = out[0]
     for child, fk, pk in children:
@@ -128,9 +91,8 @@ def weighted_sample_exact(
 
     The uniform is md5-PORTABLE (llmops/splits.py::hash_uint32 of
     salt||id), not a seeded rand: the draw replays identically in any
-    engine and across re-runs/partitionings, which makes this — unlike
-    sm1/sm2's seeded-rand samples — fully oracle-checkable, and re-salting
-    is a fresh draw. At scale this is one TakeOrdered-shaped top-n (no
+    engine and across re-runs/partitionings, which makes it fully
+    oracle-checkable, and re-salting is a fresh draw. At scale this is one TakeOrdered-shaped top-n (no
     global sort): the canonical quality-weighted document selection for
     mixture construction.
     """

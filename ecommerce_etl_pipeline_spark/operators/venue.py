@@ -14,9 +14,9 @@ Invariants every caller keeps:
   candidate-pair graph, the most expensive join in the pipeline) twice.
 - **Bit-identical venues.** A driver venue exists only where its loop
   gives the distributed answer bit for bit: order-independent integer
-  sums, or union-find with min-id representatives. Float-summing loops
-  such as ``graph.pagerank`` stay distributed-only. Tests pin each pair
-  of venues against each other.
+  sums, or union-find with min-id representatives. A float-summing loop
+  would get no driver venue. Tests pin each pair of venues against each
+  other.
 - **Per-operator budget, in rows,** read from the site's constant at call
   time. A budget of zero or less disables the driver venue.
 - **Well-formedness stays at the site.** A site may still refuse rows that

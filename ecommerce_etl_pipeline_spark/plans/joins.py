@@ -523,13 +523,13 @@ def _pagerank_oracle_sql(iterations: int = 6, scale: int = 10**12) -> str:
     "the same order, both directions): the canonical iterative graph "
     "algorithm as a DataFrame loop — per round one rank-edge join + one "
     "map-side-combinable contribution aggregate, lineage cut every "
-    "round, driver never holds a rank vector. Oracle-checked since "
-    "round 4: ranks update in EXACT integer picorank arithmetic "
+    "round, driver never holds a rank vector. Oracle-checked: ranks "
+    "update in EXACT integer picorank arithmetic "
     "(operators/graph.py::pagerank_portable — damping as the ratio "
     "85/100, truncating division), so sums are order-independent and the "
-    "six iterations unroll into plain DuckDB CTEs; the FP variant "
-    "(::pagerank, 1e-9 pure-Python parity in tests/test_graph.py) "
-    "remains for callers preferring exact mass conservation.",
+    "six iterations unroll into plain DuckDB CTEs. Picoranks / 1e12 stay "
+    "within 1e-9 of float PageRank (pure-Python reference in "
+    "tests/test_graph.py).",
 )
 def g1_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_etl_pipeline_spark.operators.graph import pagerank_portable

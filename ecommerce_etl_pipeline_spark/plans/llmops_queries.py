@@ -500,9 +500,8 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # broadcast query x corpus scan; swap in the IVF/LSH index at 100 TB); the
 # pool (N=20 rows) and its N^2 pairwise sims are BOUNDED state by
 # construction, so the greedy re-rank runs driver-side over one small
-# collect (round 11, the kmeans/bpe bounded-state doctrine — the r10
-# unrolled-lineage venue paid a ~9s Catalyst planning constant and is kept
-# as the pinned parity twin in llmops/similarity.py). The oracle replays
+# collect (the bpe bounded-state doctrine; a lazy unrolled-lineage form of
+# the greedy pays a ~9s Catalyst planning constant). The oracle replays
 # the identical greedy steps as chained CTEs. Scores stay raw doubles
 # through the argmax (the sim_cosine_topk precedent: the driver fold is
 # bit-identical to DuckDB's list_sum, ties break on vec_id) and round only
@@ -601,10 +600,9 @@ def _mmr_sel_ctes() -> str:
     "100 TB the IVF/LSH index swaps in for the same bounded pool); the "
     "pool and its pairwise sims are BOUNDED state by construction (<= N + "
     "N^2 rows), so the K-step greedy argmax runs driver-side over one "
-    "small collect (the kmeans_train/bpe_train bounded-state doctrine — "
-    "r10's unrolled-lineage venue paid ~9s of Catalyst planning to re-rank "
-    "20 cached rows and is kept only as the pinned parity twin, "
-    "similarity.mmr_diversify_unrolled). Scores stay raw doubles through "
+    "small collect (the bpe_train bounded-state doctrine — a lazy "
+    "unrolled-lineage form pays ~9s of Catalyst planning to re-rank 20 "
+    "cached rows). Scores stay raw doubles through "
     "every argmax (the driver fold is bit-identical to DuckDB's list_sum; "
     "ties break on vec_id) and round only at the output. "
     "EAGER-EXECUTION CONTRACT (ADVICE r11 #4): building this query RUNS "
@@ -1528,8 +1526,8 @@ _SEM_COS = (
     FROM assigned a LEFT JOIN comp c ON c.node = a.vec_id
     """,
     doc="SemDeDup (Abbas et al. 2023) end-to-end: coarse-cluster the "
-    "embedding space (deterministic lowest-id seed assignment — the "
-    "oracle-able twin of the trained quantizer), generate near-duplicate "
+    "embedding space (deterministic lowest-id seed assignment; trained "
+    "centroids swap in with the same plan), generate near-duplicate "
     "candidates WITHIN clusters only (pair cost sum(|cluster|^2), never "
     "corpus^2 — k scales with the corpus to bound cluster size), resolve "
     "cosine>=0.35 pairs to components, keep each component's min-id "
@@ -1935,8 +1933,7 @@ def txt_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distance, recomputed-centroid L2 norm derived from per-dimension "
     "sums. Scale shape: k seed rows broadcast, one corpus scan, one "
     "map-side-combined k*dim-cell shuffle; the driver never holds a "
-    "vector. pyspark.ml's KMeans (ivf_topk's quantizer) is the library "
-    "form of this loop iterated.",
+    "vector. ml_kmeans_train iterates this loop.",
 )
 def ml_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2030,14 +2027,13 @@ def _kmeans_train_oracle_sql(k: int = 4, iterations: int = 5, nano: int = 10**9)
     "lowest-id seeds, per-round nearest-centroid assignment against "
     "literal centroids, centroid recomputation from one k*dim-cell "
     "aggregate (the only driver-side state is the centroid matrix — "
-    "hyperparameter-sized, like a join statistic). Oracle-checked since "
-    "round 4: member sums are nano-quantized INTEGERS (order-independent) "
+    "hyperparameter-sized, like a join statistic). Oracle-checked: "
+    "member sums are nano-quantized INTEGERS (order-independent) "
     "and the iteration count is fixed, so five Lloyd rounds unroll into "
     "DuckDB CTEs and the whole training run replays bit-for-bit — the "
-    "pagerank_portable doctrine applied to a centroid trainer. The "
-    "tol-early-stop FP variant (::kmeans_train, monotone-inertia pytest "
-    "gates) remains; pyspark.ml KMeans is the production kernel for the "
-    "same shape.",
+    "pagerank_portable doctrine applied to a centroid trainer. Inertia "
+    "is pytest-gated as non-increasing per round and within 10% of "
+    "pyspark.ml's KMeans.",
 )
 def ml_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2450,13 +2446,10 @@ def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Portable IVF (VERDICT r7 #7): the coarse quantizer is
-# kmeans_train_portable, so the ENTIRE index build — centroid training,
-# cell assignment, probe selection, candidate ranking — replays in DuckDB
-# on top of the shared _kmeans_ctes prefix. This upgraded sim_ivf_topk /
-# sim_ivf_recall from rows-only to oracle-backed (rows-only set 7 -> 5);
-# clustering.ivf_topk (pyspark.ml KMeans quantizer) remains the library
-# kernel, recall-gated in tests/test_similarity_recall.py.
+# Portable IVF: the coarse quantizer is kmeans_train_portable, so the
+# ENTIRE index build — centroid training, cell assignment, probe
+# selection, candidate ranking — replays in DuckDB on top of the shared
+# _kmeans_ctes prefix; recall is gated in tests/test_similarity_recall.py.
 # ---------------------------------------------------------------------------
 _IVF_CELLS, _IVF_PROBE, _IVF_ITER, _IVF_K = 16, 2, 5, 10
 _IVF_DISTQ = (
@@ -2511,12 +2504,10 @@ _IVF_WITH = _kmeans_ctes(_IVF_CELLS, _IVF_ITER) + f""",
     "cells (integer-nano Lloyd, deterministic lowest-id seeds), every "
     "corpus vector is cell-assigned by the broadcast-seed fold, each "
     "query probes its 2 nearest cells and cosine-ranks only those "
-    "members (~corpus/8 candidates per query). Upgraded from rows-only "
-    "in round 8: the whole index build unrolls into DuckDB CTEs on the "
-    "shared ml_kmeans_train prefix, so training, assignment, probing and "
-    "ranking are all hash-checked, not just recall-gated. The "
-    "pyspark.ml-KMeans variant (clustering.ivf_topk) stays as the "
-    "library kernel with its recall>=0.9 pytest gate.",
+    "members (~corpus/8 candidates per query). The whole index build "
+    "unrolls into DuckDB CTEs on the shared ml_kmeans_train prefix, so "
+    "training, assignment, probing and ranking are all hash-checked; "
+    "recall is pytest-gated too (>=0.9 on clustered data).",
 )
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_etl_pipeline_spark.llmops.clustering import ivf_topk_portable
@@ -3851,10 +3842,9 @@ def txt_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Recall@10 of the PORTABLE IVF index (16 integer-nano Lloyd "
     "cells, 2 probes) vs the exact brute-force ranking, per query — the "
     "same measured-quality stance as sim_lsh_recall applied to the "
-    "coarse-quantizer path. Upgraded from rows-only in round 8: the "
-    "portable quantizer makes BOTH rankings and the recall arithmetic "
-    "DuckDB-replayable (hits as integer counts, recall = hits/10.0). "
-    "The clustered-data recall>=0.9 gate on the pyspark.ml variant "
+    "coarse-quantizer path. The portable quantizer makes BOTH rankings "
+    "and the recall arithmetic DuckDB-replayable (hits as integer "
+    "counts, recall = hits/10.0). The clustered-data recall>=0.9 gate "
     "lives in tests/test_similarity_recall.py.",
 )
 def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

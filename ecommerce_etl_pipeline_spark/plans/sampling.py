@@ -1,11 +1,10 @@
 """Sampling & generation queries — SURVEY.md §2.10 (SM1-SM4).
 
-Round 4 moved sm1/sm2/sm3 from seeded ``rand`` (not replayable in DuckDB,
-so rows-only by design, SURVEY §7 risk 4) to the md5-portable uniform the
-sm8/sm10 machinery already used — the whole draw now replays in the oracle
-and those queries are fully hash-checked. Only sm4 (uuid/rand generator
-ladders — the randomness IS the product) remains rows-only; determinism
-WITHIN Spark is covered by tests/test_sampling.py either way.
+sm1/sm2/sm3 draw with the md5-portable uniform of operators/sampling.py
+(a seeded ``rand`` does not replay in DuckDB, SURVEY §7 risk 4), so each
+draw replays in the oracle and the queries are fully hash-checked. Only
+sm4 (uuid/rand generator ladders — the randomness IS the product) is
+rows-only; determinism WITHIN Spark is covered by tests/test_sampling.py.
 """
 
 from __future__ import annotations
@@ -32,14 +31,11 @@ from ecommerce_etl_pipeline_spark.sources.io import load_table
     WHERE {splits.sql_hash_uint32("o_orderkey", "sm1:v1")} / 4294967296.0 < 0.1
     """,
     doc="10% Bernoulli sample (SM1) — reference data_sampling.py:40-43, "
-    "md5-PORTABLE draw (was seeded rand / rows-only through round 3): "
-    "keep rows whose hash_uint32('sm1:v1' || o_orderkey) / 2^32 falls "
+    "md5-PORTABLE draw: keep rows whose hash_uint32('sm1:v1' || o_orderkey) / 2^32 falls "
     "under the fraction, so the exact sample replays in DuckDB and the "
     "query is fully oracle-checked. Division by 2^32 is exact in a "
     "double, so the comparison is engine-identical. One narrow filter "
-    "inside the scan — no shuffle, the right shape at any scale; "
-    "operators/sampling.py::seeded_sample keeps the native rand form "
-    "for seed-parity with the reference.",
+    "inside the scan — no shuffle, the right shape at any scale.",
 )
 def sm1_seeded_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return portable_sample(
@@ -55,7 +51,7 @@ def sm1_seeded_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 100
     """,
     doc="Exact-n sample (SM1 exact variant, SURVEY §4 item 2), md5-PORTABLE "
-    "order (was rand+row_number / rows-only through round 3): rank by the "
+    "order: rank by the "
     "hex digest of 'sm2:v1' || o_orderkey, tiebreak on the key, keep the "
     "first 100 — the draw replays in DuckDB. Better scale shape too: "
     "orderBy+limit plans as TakeOrderedAndProject (per-partition top-n) "
@@ -89,8 +85,7 @@ def sm2_exact_n_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Referential-integrity cascade sample (SM3) — reference "
     "data_sampling.py:144-151: sample customers -> semi-join orders -> "
     "semi-join lineitem, one lazy DAG, no driver key lists. The parent "
-    "draw is the md5-portable uniform (was seeded rand / rows-only "
-    "through round 3), so the ENTIRE cascade replays in DuckDB as "
+    "draw is the md5-portable uniform, so the ENTIRE cascade replays in DuckDB as "
     "filter + IN-subqueries and the result is fully oracle-checked.",
 )
 def sm3_ri_cascade_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

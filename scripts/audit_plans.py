@@ -69,12 +69,10 @@ EXPECTED = {
     "sim_ivf_topk": "probe-cell assignments (|q| x n_probe)",
     "sim_lsh_recall": "query vectors + top-k outputs (|q| x k)",
     "sim_mmr_diversify": (
-        "r11 bounded-state venue: the registered plan is a LocalTableScan "
+        "bounded-state venue: the registered plan is a LocalTableScan "
         "of the K driver-side picks; the pool build (broadcast query x "
         "corpus scan) runs as an eager bounded-collect job inside the "
-        "query builder, so no forced broadcast appears in the final plan "
-        "— entry kept so the unrolled parity twin (similarity."
-        "mmr_diversify_unrolled, pytest-only) stays documented"
+        "query builder, so no forced broadcast appears in the final plan"
     ),
     "sim_lsh_topk": "query signatures",
     "sim_quantized_topk": "query codes",

@@ -4,11 +4,17 @@ recall against the brute-force ground truth, curation stage monotonicity."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 from ecommerce_etl_pipeline_spark.llmops import curation, similarity
-from ecommerce_etl_pipeline_spark.llmops.clustering import connected_components, ivf_topk
+from ecommerce_etl_pipeline_spark.llmops.clustering import (
+    connected_components,
+    ivf_topk_portable,
+    kmeans_train_portable,
+)
 from ecommerce_etl_pipeline_spark.sources.io import load_table
 
 @pytest.fixture(params=["local", "distributed"])
@@ -74,7 +80,7 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = similarity.brute_force_topk(emb, queries, k=10)
-    approx = ivf_topk(emb, queries, k=10, n_cells=8, n_probe=3)
+    approx = ivf_topk_portable(emb, queries, k=10, n_cells=8, n_probe=3)
     truth = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     got = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(truth & got) / len(truth)
@@ -264,67 +270,71 @@ def test_quantize_int8_null_semantics(spark):
     assert q3 == [0, None]
 
 
+def _folded_signatures(df, tables):
+    """vec_id -> per-table buckets through the fold lsh_topk and
+    lsh_topk_multi execute (one projection pass, then the bit pack)."""
+    from ecommerce_etl_pipeline_spark.llmops.similarity import (
+        _pack_signatures,
+        _project_all,
+    )
+
+    flat = [plane for planes in tables for plane in planes]
+    return {
+        r["vec_id"]: r["sigs"]
+        for r in df.select("vec_id", _project_all("embedding", flat).alias("_proj"))
+        .select(
+            "vec_id",
+            _pack_signatures("_proj", len(tables), len(tables[0])).alias("sigs"),
+        )
+        .collect()
+    }
+
+
+def _ref_sign_bits(vec, planes):
+    """Pure-Python LSH bucket: a sequential ``acc += x * w`` per plane, bit
+    i set iff plane i's sum is >= 0."""
+    bucket = 0
+    for i, plane in enumerate(planes):
+        acc = 0.0
+        for x, w in zip(vec, plane):
+            acc += x * w
+        if acc >= 0:
+            bucket |= 1 << i
+    return bucket
+
+
 def test_lsh_dim_mismatch_raises(spark):
     """A vector narrower than the plane dim must raise, not collapse every
     vector into bucket 0 (which would silently turn the index quadratic)."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PySparkException
 
-    from ecommerce_etl_pipeline_spark.llmops.similarity import (
-        _hyperplanes,
-        lsh_signature,
-        signatures_via_join,
-    )
+    from ecommerce_etl_pipeline_spark.llmops.similarity import _hyperplanes
 
     df = spark.createDataFrame([(1, [1.0] * 8)], "vec_id LONG, embedding ARRAY<DOUBLE>")
     with pytest.raises((PySparkException, Py4JJavaError)):
-        df.select(
-            lsh_signature(F.col("embedding"), _hyperplanes(16, 4)).alias("b")
-        ).collect()
-    with pytest.raises((PySparkException, Py4JJavaError)):
-        signatures_via_join(df, [_hyperplanes(16, 4)]).collect()
+        _folded_signatures(df, [_hyperplanes(16, 4)])
     # matching width still works (and is deterministic)
-    ok = df.select(
-        lsh_signature(F.col("embedding"), _hyperplanes(8, 4)).alias("b")
-    ).collect()
-    assert len(ok) == 1 and ok[0]["b"] is not None
+    ok = _folded_signatures(df, [_hyperplanes(8, 4)])
+    assert len(ok) == 1 and ok[1] is not None
+    assert ok == _folded_signatures(df, [_hyperplanes(8, 4)])
 
-    # a NULL vector is NOT a width mismatch: NULL signature, no crash,
-    # in both the inline-literal and broadcast-planes paths
+    # a NULL vector is NOT a width mismatch: NULL signature, no crash
     dfn = spark.createDataFrame(
         [(1, [1.0] * 8), (2, None)], "vec_id LONG, embedding ARRAY<DOUBLE>"
     )
-    sigs = {
-        r["vec_id"]: r["b"]
-        for r in dfn.select(
-            "vec_id", lsh_signature(F.col("embedding"), _hyperplanes(8, 4)).alias("b")
-        ).collect()
-    }
-    assert sigs[1] is not None and sigs[2] is None
-    via_join = {
-        r["vec_id"]: r["bucket"]
-        for r in signatures_via_join(dfn, [_hyperplanes(8, 4)]).collect()
-    }
-    assert via_join[1] == sigs[1] and via_join[2] is None
+    sigs = _folded_signatures(dfn, [_hyperplanes(8, 4)])
+    assert sigs[1] == ok[1] and sigs[2] is None
 
 
 def test_folded_signatures_bit_identical_to_literal_path(spark):
     """The single-fold multi-table signature path (one aggregate pass with
     a wide accumulator, then bit-pack from the materialized projections)
-    must produce bit-identical buckets to the per-table lsh_signature
-    folds — it is what lsh_topk / lsh_topk_multi now execute, while the
-    oracle SQL still replays the per-table form."""
+    must produce bit-identical buckets to a pure-Python per-plane
+    sequential fold — the per-table form the oracle SQL replays."""
     import random as _random
 
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import PySparkException
-
-    from ecommerce_etl_pipeline_spark.llmops.similarity import (
-        _hyperplanes,
-        _pack_signatures,
-        _project_all,
-        lsh_signature,
-    )
+    from ecommerce_etl_pipeline_spark.llmops.similarity import _hyperplanes
 
     rng = _random.Random(7)
     rows = [(i, [rng.gauss(0.0, 1.0) for _ in range(16)]) for i in range(40)]
@@ -332,33 +342,11 @@ def test_folded_signatures_bit_identical_to_literal_path(spark):
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
 
     tables = [_hyperplanes(16, 5, 42 + t) for t in range(3)]
-    flat = [plane for planes in tables for plane in planes]
-    folded = {
-        r["vec_id"]: r["sigs"]
-        for r in df.select(
-            "vec_id", _project_all("embedding", flat).alias("_proj")
-        )
-        .select("vec_id", _pack_signatures("_proj", 3, 5).alias("sigs"))
-        .collect()
-    }
-    literal = {
-        r["vec_id"]: [r[f"b{t}"] for t in range(3)]
-        for r in df.select(
-            "vec_id",
-            *[
-                lsh_signature(F.col("embedding"), tables[t]).alias(f"b{t}")
-                for t in range(3)
-            ],
-        ).collect()
-    }
-    for i in range(40):
-        assert folded[i] == literal[i], f"vec {i}: {folded[i]} != {literal[i]}"
-    assert folded[40] is None and literal[40] == [None, None, None]
-
-    # width mismatch still fails loudly in the folded path
-    bad = spark.createDataFrame([(1, [1.0] * 8)], "vec_id LONG, embedding ARRAY<DOUBLE>")
-    with pytest.raises((PySparkException, Py4JJavaError)):
-        bad.select(_project_all("embedding", flat).alias("p")).collect()
+    folded = _folded_signatures(df, tables)
+    for i, vec in rows[:40]:
+        want = [_ref_sign_bits(vec, planes) for planes in tables]
+        assert folded[i] == want, f"vec {i}: {folded[i]} != {want}"
+    assert folded[40] is None  # NULL vector: NULL buckets
 
 
 def test_compression_ratio_null_text(spark):
@@ -704,12 +692,44 @@ def test_kmeans_portable_trajectory_identical_across_venues(
     assert distributed == kmeans_train_portable(emb, k=16, iterations=5)
 
 
+def test_kmeans_portable_empty_and_null_seed_both_venues(spark, distributed_venue):
+    """Inputs the Lloyd loops do not model get one answer in both venues:
+    an empty frame trains no centroids, and IVF over an empty corpus is an
+    empty frame with the usual schema; a NULL seed vector (here at the
+    lowest id) raises ValueError naming the id."""
+    import contextlib
+
+    schema = "vec_id LONG, embedding ARRAY<DOUBLE>"
+    empty = spark.createDataFrame([], schema)
+    nulled = spark.createDataFrame(
+        [(1, None), (2, [1.0, 0.0]), (3, [0.0, 1.0]), (4, [1.0, 1.0])], schema
+    )
+    for forced in (contextlib.nullcontext, distributed_venue):
+        with forced():
+            assert kmeans_train_portable(empty, k=2) == []
+            out = ivf_topk_portable(empty, nulled.filter("vec_id > 1"), k=3)
+            assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+                ("query_id", "bigint"),
+                ("neighbor_id", "bigint"),
+                ("cosine", "double"),
+                ("rank", "int"),
+            ]
+            assert out.count() == 0
+            with pytest.raises(ValueError, match="vec_id=1 "):
+                kmeans_train_portable(nulled, k=2)
+            with pytest.raises(ValueError, match="vec_id=1 "):
+                ivf_topk_portable(nulled, nulled, n_cells=2)
+
+
 def test_kmeans_train_monotone_and_deterministic(spark, sf_dir):
-    """Lloyd invariants: total inertia never increases with more
-    iterations; the loop is bit-deterministic (no RNG, fixed tiebreaks);
-    iteration-1 centroids reproduce ml_kmeans_step's cluster sizes (same
-    lowest-id seeds)."""
-    from ecommerce_etl_pipeline_spark.llmops.clustering import kmeans_step, kmeans_train
+    """Lloyd invariants of kmeans_train_portable: total inertia never
+    increases with more iterations; the loop is bit-deterministic (no RNG,
+    fixed tiebreaks); iteration-1 centroids reproduce ml_kmeans_step's
+    cluster sizes (same lowest-id seeds)."""
+    from ecommerce_etl_pipeline_spark.llmops.clustering import (
+        kmeans_step,
+        kmeans_train_portable,
+    )
     from ecommerce_etl_pipeline_spark.plans.registry import get
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -723,15 +743,14 @@ def test_kmeans_train_monotone_and_deterministic(spark, sf_dir):
 
     prev = None
     for n in (1, 2, 4):
-        cents, iters = kmeans_train(emb, k=4, max_iterations=n)
-        assert iters <= n
+        cents = kmeans_train_portable(emb, k=4, iterations=n)
         cur = inertia(cents)
         if prev is not None:
             assert cur <= prev + 1e-9, (n, cur, prev)
         prev = cur
 
-    c1, _ = kmeans_train(emb, k=4, max_iterations=3)
-    c2, _ = kmeans_train(emb, k=4, max_iterations=3)
+    c1 = kmeans_train_portable(emb, k=4, iterations=3)
+    c2 = kmeans_train_portable(emb, k=4, iterations=3)
     assert c1 == c2
 
     # one training round from the raw seeds = the oracle-checked step query
@@ -841,19 +860,22 @@ def test_rp_rerank_end_to_end_recall(spark, sf_dir):
 
 
 def test_kmeans_train_inertia_close_to_mllib(spark, sf_dir):
-    """Quality context for the DataFrame-loop trainer: with the same k,
-    its converged within-cluster inertia must land within 10% of
-    pyspark.ml's KMeans (kmeans|| init, the production kernel). Lloyd's
+    """Quality context for kmeans_train_portable: with the same k, its
+    within-cluster inertia after 15 rounds must land within 10% of
+    pyspark.ml's KMeans (kmeans|| init, the external reference). Lloyd's
     from lowest-id seeds can trail a smarter init slightly — it must not
     collapse to something structurally worse."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    from ecommerce_etl_pipeline_spark.llmops.clustering import kmeans_step, kmeans_train
+    from ecommerce_etl_pipeline_spark.llmops.clustering import (
+        kmeans_step,
+        kmeans_train_portable,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
 
-    cents, _ = kmeans_train(emb, k=4, max_iterations=15)
+    cents = kmeans_train_portable(emb, k=4, iterations=15)
     seeds = spark.createDataFrame(
         [(i, c) for i, c in enumerate(cents)], "cid INT, cvec ARRAY<DOUBLE>"
     )
@@ -1720,32 +1742,52 @@ def test_logreg_calibration_structure(spark, sf_dir):
         assert r["bin"] / 10 - 1e-6 <= r["mean_score"] < (r["bin"] + 1) / 10 + 1e-6
 
 
+def _ref_cosine(a, b):
+    """Sequential left-to-right double fold, as the JVM cosine sums."""
+    num = na = nb = 0.0
+    for x, y in zip(a, b):
+        num += float(x) * float(y)
+    for x in a:
+        na += float(x) * float(x)
+    for y in b:
+        nb += float(y) * float(y)
+    return num / (math.sqrt(na) * math.sqrt(nb))
+
+
 def test_mmr_bounded_state_matches_unrolled_venue(spark, sf_dir):
-    """The r11 bounded-state MMR (collect-once + driver greedy,
-    llmops/similarity.mmr_diversify_rows — the registered venue) is pinned
-    bit-equal to the r10 unrolled-lazy-lineage venue it replaced
-    (mmr_diversify_unrolled): same picks in the same order, and the raw
-    double rel/mmr scores identical to the last ulp (the driver fold is
-    the same left-to-right IEEE sequence as the JVM HOF fold). This is the
-    kmeans/bpe pinned-equal-to-distributed pattern applied to the MMR fix
-    (r10 VERDICT brief #2)."""
+    """mmr_diversify_rows (collect-once + driver greedy, the registered
+    venue) equals a pure-Python MMR over the collected embeddings: pool =
+    the pool_n highest cosines to the query (ties to the lower id), then
+    K greedy steps of argmax lam*rel - (1-lam)*max-sim-to-selected (ties
+    to the lower id). Same picks in the same order, and the raw double
+    rel/mmr scores identical to the last ulp."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0)
     bounded = similarity.mmr_diversify_rows(emb, q, k=5, pool_n=20, lam=0.5)
-    unrolled_df = similarity.mmr_diversify_unrolled(emb, q, k=5, pool_n=20, lam=0.5)
-    unrolled = [
-        (r["step"], r["vec_id"], r["rel"], r["mmr"])
-        for r in unrolled_df.orderBy("step").collect()
-    ]
+
+    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+    rel = {i: _ref_cosine(vecs[0], v) for i, v in vecs.items() if i != 0}
+    pool = sorted(rel, key=lambda i: (-rel[i], i))[:20]
+    want, selected = [], []
+    for step in range(1, 6):
+        best = None
+        for i in sorted(set(pool) - set(selected)):
+            ms = max((_ref_cosine(vecs[i], vecs[j]) for j in selected), default=0.0)
+            mmr = 0.5 * rel[i] - 0.5 * ms
+            if best is None or mmr > best[3]:
+                best = (step, i, rel[i], mmr)
+        want.append(best)
+        selected.append(best[1])
+
     assert len(bounded) == 5
-    assert bounded == unrolled
+    assert bounded == want
     # greedy invariants: step 1 is the pure-relevance argmax; picks are
     # distinct; the diversity term is a max over cosines in [-1, 1], so
     # mmr deviates from lam*rel by at most (1-lam)
     assert bounded[0][3] == 0.5 * bounded[0][2]
     assert len({b[1] for b in bounded}) == 5
-    for _, _, rel, mmr in bounded:
-        assert abs(mmr - 0.5 * rel) <= 0.5 + 1e-12
+    for _, _, rel_, mmr in bounded:
+        assert abs(mmr - 0.5 * rel_) <= 0.5 + 1e-12
 
 
 def test_cluster_safe_split_leakage_invariant_and_singleton_parity(spark):

@@ -5,9 +5,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from ecommerce_etl_pipeline_spark.operators.sampling import (
-    ri_cascade_sample,
-    seeded_sample,
-    seeded_sample_exact,
+    portable_ri_cascade,
+    portable_sample,
+    portable_sample_exact,
 )
 from ecommerce_etl_pipeline_spark.sources.generator import (
     generate_clicks,
@@ -20,16 +20,16 @@ SF = "/root/testdata/sf0.001"
 
 def test_seeded_sample_deterministic(spark):
     orders = load_table(spark, SF, "orders")
-    a = {r.o_orderkey for r in seeded_sample(orders, 0.1).select("o_orderkey").collect()}
-    b = {r.o_orderkey for r in seeded_sample(orders, 0.1).select("o_orderkey").collect()}
+    a = {r.o_orderkey for r in portable_sample(orders, 0.1, "o_orderkey").collect()}
+    b = {r.o_orderkey for r in portable_sample(orders, 0.1, "o_orderkey").collect()}
     assert a == b and 0 < len(a) < orders.count()
 
 
 def test_exact_n_sample(spark):
     orders = load_table(spark, SF, "orders")
-    s = seeded_sample_exact(orders, 100, "o_orderkey")
+    s = portable_sample_exact(orders, 100, "o_orderkey")
     assert s.count() == 100
-    again = seeded_sample_exact(orders, 100, "o_orderkey")
+    again = portable_sample_exact(orders, 100, "o_orderkey")
     assert {r.o_orderkey for r in s.collect()} == {r.o_orderkey for r in again.collect()}
 
 
@@ -37,8 +37,9 @@ def test_ri_cascade_integrity(spark):
     customer = load_table(spark, SF, "customer")
     orders = load_table(spark, SF, "orders")
     li = load_table(spark, SF, "lineitem")
-    sc, so, sl = ri_cascade_sample(
+    sc, so, sl = portable_ri_cascade(
         customer,
+        "c_custkey",
         [(orders, "o_custkey", "c_custkey"), (li, "l_orderkey", "o_orderkey")],
         fraction=0.2,
     )
