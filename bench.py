@@ -9,24 +9,18 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 Each query is forced to full materialization with the noop sink (measures
 compute + shuffle, not driver collect).
 
-``value`` is ONE timed run per query, summed. Rounds 1-3 warmed only a1
-before timing, so their first runs also billed whole-stage-codegen
-compilation and JVM JIT to whichever queries executed first — a constant
-term that grew with the registry (r3's 8.8% first-run regression was
-exactly this; VERDICT r3 "Performance"). Round 4 adopts that verdict's
-remedy: before timing starts, every headline plan runs once at sf0.001
-(~1% data cost; codegen classes are cached by generated source, which
-depends on plan structure, not input path), so the timed runs measure
-sf0.1 IO + shuffle + compute, not compiler startup. The JSON records the
-protocol in ``warmup``. Because single runs on a shared local[32] box
-still swing with GC/co-tenant load, the JSON also carries
-``value_median3`` / ``queries_median3``: per-query median of 3 runs in
-the same session — the noise-robust estimate of plan cost.
+Before timing starts, every headline and extended plan runs once at
+sf0.001 (about 1% of the data cost). Codegen classes are cached by generated
+source, which depends on plan structure and not on the input path, so the
+timed runs measure IO, shuffle and compute, not compiler start-up. The JSON
+records the warm-up actually used in ``warmup`` and ``warmup_mode``.
 
-Cross-round caveat: dd_minhash_pairs switched to the md5-portable hash
-variant in round 4 (the conversion that made it oracle-checkable), which
-costs ~0.2 s more at sf0.1 than the xxhash64 form rounds 1-3 timed —
-read its cross-round delta with that swap in mind.
+``value`` is ONE timed run per headline query, summed. Single runs swing
+with GC and host load, so the JSON also carries ``value_median3`` /
+``queries_median3``, the per-query median of 3 runs in the same session
+(the noise-robust estimate of plan cost), and ``first_run_over_median3``.
+``extended`` holds one timed run of each EXTENDED query; it is not part of
+``value``.
 """
 
 from __future__ import annotations
@@ -63,11 +57,10 @@ HEADLINE = [
     "dd_curation_pipeline",
 ]
 
-#: Round-3/4 flagship operators, timed separately so the HEADLINE metric
-#: stays comparable across rounds (one timed run each, reported under
-#: "extended" — informational, not part of headline_total). Round 4 adds
-#: the two oracle-checked iterative loops (integer-exact PageRank and
-#: the nano-quantized k-means trainer) and the portable SimHash banding.
+#: Flagship operators, timed separately so the HEADLINE metric keeps its
+#: query set (one timed run each, reported under "extended": informational,
+#: not part of headline_total). The pl_pw_face_* diagnostics are slices of
+#: the product DAG timed here, so they are not timed again.
 EXTENDED = [
     "dd_span_excision",
     "dd_semantic_dedup",
@@ -79,37 +72,33 @@ EXTENDED = [
     "g1_pagerank_copurchase",
     "ml_kmeans_train",
     "dd_simhash_pairs",
-    "dd_ppjoin_pairs",  # round 6: prefix-filter exact join (Zipf scale path)
-    "ml_logreg_train",  # round 6: quality-classifier trainer (12 GD rounds)
-    "ml_logreg_holdout",  # round 7: held-out eval (train 80%, score unseen 20%)
-    "dd_jaccard_df_capped",  # round 7: linear-fan-out capped exact jaccard
-    "dd_curation_ppjoin",  # round 7: end-to-end ppjoin curation pipeline
-    "ml_logreg_train_d64",  # round 8: production-width hashed-unigram trainer
-    "sim_ivf_topk",  # round 8: portable-quantizer IVF (oracle-backed index build)
-    "dd_curation_classifier",  # round 9: train->apply classifier-gated curation
-    "dd_curation_classifier_ppjoin",  # round 10: the 100 TB composition (trained
-    # gate + prefix-filter candidates) — first round recorded, banded next
-    "txt_bm25_topk",  # round 10: shuffle-free lexical retrieval (sparse face)
-    "sim_mmr_diversify",  # round 10: MMR diversified re-rank over a bounded pool
-    "pl_sales_warehouse",  # round 11: the reference's sales DAG end-to-end
-    # (four warehouse tables off one shared scan) — first round recorded,
-    # banded next per the standing new-query protocol
-    "dq_benford_deviation",  # round 11: Benford first-digit DQ conformance
-    "pl_customer_warehouse",  # round 12: the customer DAG end-to-end (fused
-    # grouping-sets venue — one orders scan + one customer scan)
-    "sim_pq_rerank",  # round 12: PQ ADC beam + exact re-rank, measured after
-    # the Arrow encode kernel landed (r11 brief #3)
-    "sim_ivfpq_rerank",  # round 12: the FAISS-shaped IVF+PQ composition
-    "pl_product_warehouse",  # round 12: the product DAG end-to-end (5 tables;
+    "dd_ppjoin_pairs",  # prefix-filter exact join (Zipf scale path)
+    "ml_logreg_train",  # quality-classifier trainer (12 GD rounds)
+    "ml_logreg_holdout",  # held-out eval (train 80%, score unseen 20%)
+    "dd_jaccard_df_capped",  # linear-fan-out capped exact jaccard
+    "dd_curation_ppjoin",  # end-to-end ppjoin curation pipeline
+    "ml_logreg_train_d64",  # production-width hashed-unigram trainer
+    "sim_ivf_topk",  # portable-quantizer IVF (oracle-backed index build)
+    "dd_curation_classifier",  # train->apply classifier-gated curation
+    "dd_curation_classifier_ppjoin",  # the 100 TB composition (trained
+    # gate + prefix-filter candidates)
+    "txt_bm25_topk",  # shuffle-free lexical retrieval (sparse face)
+    "sim_mmr_diversify",  # MMR diversified re-rank over a bounded pool
+    "pl_sales_warehouse",  # the reference's sales DAG end-to-end
+    # (four warehouse tables off one shared scan)
+    "dq_benford_deviation",  # Benford first-digit DQ conformance
+    "pl_customer_warehouse",  # the customer DAG end-to-end (fused
+    # grouping-sets venue: one orders scan + one customer scan)
+    "sim_pq_rerank",  # PQ ADC beam + exact re-rank (Arrow encode kernel)
+    "sim_ivfpq_rerank",  # the FAISS-shaped IVF+PQ composition
+    "pl_product_warehouse",  # the product DAG end-to-end (5 tables;
     # grouping-sets fusion + HOF pairs, no lineitem self-join)
-    "pl_pricing_warehouse",  # round 12: the pricing DAG end-to-end (single
+    "pl_pricing_warehouse",  # the pricing DAG end-to-end (single
     # pass, both faces exploded per part row)
-    "dd_cluster_safe_split",  # round 12: leakage-safe splitting (near-dup
+    "dd_cluster_safe_split",  # leakage-safe splitting (near-dup
     # clusters hash as a unit; singletons = dd_hash_split exactly)
-    "sim_pq_adc_topk",  # round 13: oracle-backed PQ ADC leg (seeds-only
-    # codebooks, the PQ encode kernel — the driver-hash face of the PQ suite;
-    # the pl_pw_face_* diagnostics are slices of the already-timed
-    # product DAG and are banded in bench_sf1, not re-timed here)
+    "sim_pq_adc_topk",  # oracle-backed PQ ADC leg (seeds-only codebooks,
+    # the PQ encode kernel)
 ]
 
 
@@ -123,13 +112,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
-    # Warmup before timing starts (VERDICT r3's constant-term remedy): run
-    # every headline plan once at sf0.001 — whole-stage codegen classes are
-    # keyed by generated SOURCE, which depends on plan structure, not the
-    # input path, so this pre-compiles the same janino classes and JITs the
-    # same JVM operator paths the timed queries use, for ~1% of the data
-    # cost. Then a1 once at the target SF to warm its parquet footers.
-    # Timed runs below still pay their own sf0.1 IO, shuffles and compute.
+    # Warmup before timing starts: run every headline and extended plan once
+    # at sf0.001. Whole-stage codegen classes are keyed by generated SOURCE,
+    # which depends on plan structure, not the input path, so this
+    # pre-compiles the same janino classes and JITs the same JVM operator
+    # paths the timed queries use, for ~1% of the data cost. Then a1 once
+    # at the target SF to warm its parquet footers. Timed runs below still
+    # pay their own IO, shuffles and compute at the target SF.
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
@@ -142,10 +131,9 @@ def main() -> None:
         spark.catalog.clearCache()
     # Warm the target-SF inputs themselves (full column scan to the noop
     # sink — count() would be satisfied from footer stats and read no
-    # data): the 13.9-23s first-run spread measured for IDENTICAL code
-    # traced to page-cache state of these files after other host
-    # activity, and the bench's stated object is compute + shuffle, not
-    # disk-cache luck. Applies equally to every timed query.
+    # data): first runs of identical code otherwise vary with the
+    # page-cache state of these files, and the bench measures compute +
+    # shuffle, not disk-cache luck. Applies equally to every timed query.
     for t in ("orders", "lineitem", "part", "customer", "documents", "embeddings"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").write.format("noop").mode(
             "overwrite"
@@ -153,15 +141,15 @@ def main() -> None:
     queries["a1_daily_sales"](spark, sf_dir).write.format("noop").mode("overwrite").save()
     # provenance string reflects the warm_dir ACTUALLY used — on a host
     # without sf0.001 the fallback warms at the target SF, which makes the
-    # timed first runs cache-warm and must not be mistaken for the r1-r3
-    # protocol
+    # timed first runs cache-warm and must not be mistaken for a cold-
+    # first-run protocol
     warmup_desc = (
         f"headline+extended@{os.path.basename(warm_dir.rstrip('/'))} "
         "+ table scans + a1 @sf (pre-compiles codegen/JIT and warms input "
         "page cache; r1-r3 warmed a1 only, r4 warmed headline only — the "
         "extended singles paid their own first-compile there)"
     )
-    # machine-readable protocol marker (r4 ADVICE): on a host without
+    # machine-readable protocol marker: on a host without
     # sf0.001 the fallback warms every headline plan at the TARGET SF, so
     # timed first runs are fully result/page-cache warm — a different
     # protocol that tooling must be able to detect without parsing prose
@@ -176,9 +164,9 @@ def main() -> None:
             times[name] = round(time.perf_counter() - t0, 3)
             # reps 1-2 isolate queries (a cache an operator persisted —
             # operators/caches.py — must not donate warm blocks to the
-            # queries timed after it). Rep 0 does NOT clear between queries: the
-            # round-1/2 protocol didn't either, and `value` must stay
-            # comparable to those records.
+            # queries timed after it). Rep 0 does NOT clear between
+            # queries: `value` keeps the one protocol all its records
+            # share.
             if rep > 0:
                 spark.catalog.clearCache()
         spark.catalog.clearCache()
@@ -199,17 +187,15 @@ def main() -> None:
     payload = json.dumps(
             {
                 "metric": "headline_total",
-                # round-1/2-comparable protocol: the FIRST run of each query
+                # the FIRST run of each query, the protocol of every record
                 "value": round(sum(runs[0].values()), 3),
                 "unit": "sec",
                 "queries": runs[0],
                 "value_median3": round(sum(median3.values()), 3),
                 "queries_median3": median3,
-                # r11 VERDICT brief #5: the first-run/med3 ratio, machine-
-                # visible per round (12.01/9.83 -> 12.97/12.66 ->
-                # 17.29/12.37 so far) so first-rep warmup drift cannot
-                # hide a real constant-factor regression (SCALING.md
-                # carries the trend table)
+                # the first-run/med3 ratio, machine-visible per run so
+                # first-rep warmup drift cannot hide a real constant-factor
+                # regression (SCALING.md carries the trend table)
                 "first_run_over_median3": round(
                     sum(runs[0].values()) / max(sum(median3.values()), 1e-9), 3
                 ),
@@ -219,11 +205,10 @@ def main() -> None:
                 "sf": sf,
             }
     )
-    # r15 (VERDICT r14 #5): the driver's capture buffer truncated the r13
-    # one-line JSON (~4 KB and growing with the extended tier), losing the
-    # whole round-over-round table. Mirror the line to a file next to this
-    # script so the comparison survives tail truncation; stdout contract
-    # unchanged (same single JSON line, printed last).
+    # The one-line JSON is several KB and grows with the extended tier; a
+    # caller that keeps only a bounded tail of stdout can truncate it.
+    # Mirror the line to a file next to this script so it survives that;
+    # stdout contract unchanged (same single JSON line, printed last).
     try:
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json"),

@@ -15,8 +15,8 @@ payload bytes, and ``decode_features`` sniffs the container from magic
 bytes and emits exact integer pixel/sample statistics (byte-checkable
 against an oracle).
 Codec-library formats (JPEG/MP4/...) remain gated behind
-``require_codecs()``; the deterministic fake extractor is kept for
-plumbing-only tests.
+``require_codecs()``; ``sample_frames`` and ``resize`` treat payloads as
+raw bytes unless called with ``fake=False``.
 """
 
 from __future__ import annotations
@@ -48,15 +48,6 @@ ASSET_SCHEMA = StructType(
         StructField("payload", BinaryType()),
         StructField("n_bytes", LongType()),
         StructField("source", StringType()),
-    ]
-)
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("head_byte", IntegerType()),
-        StructField("byte_checksum", LongType()),
     ]
 )
 
@@ -478,34 +469,6 @@ def assets_from_documents(docs: DataFrame) -> DataFrame:
         F.octet_length("text").cast("bigint").alias("n_bytes"),
         "source",
     )
-
-
-def extract_features(assets: DataFrame, *, fake: bool = True) -> DataFrame:
-    """Per-asset feature extraction over mapInPandas (Arrow batches).
-
-    With ``fake=True`` computes deterministic byte-level features (length,
-    head byte, order-independent checksum); the real path would decode and
-    embed here, with identical plumbing: batch in, batch out, no driver
-    round-trip, parallelism = input partitions.
-    """
-    if not fake:
-        require_codecs()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "head_byte": payloads.map(
-                        lambda b: int(b[0]) if len(b) else -1
-                    ).astype("int32"),
-                    "byte_checksum": payloads.map(lambda b: int(sum(b))).astype("int64"),
-                }
-            )
-
-    return assets.mapInPandas(batches, FEATURE_SCHEMA)
 
 
 AUDIO_FRAME_SCHEMA = StructType(

@@ -69,13 +69,15 @@ def get_spark(
     # In local mode the "driver" heap IS the executor memory for every
     # task thread, and 32 threads on 1g spend the suite in GC — measured
     # round 5: headline med3 13.8s -> 10.6s and the collect-heavy PageRank
-    # single-shot 10.9s -> 3.7s from this setting alone. Builder-time
+    # single-shot 10.9s -> 3.7s from this setting alone. A local-cluster
+    # master is not local mode here: its executors are separate JVMs with
+    # their own heap, so its driver keeps Spark's default. Builder-time
     # spark.driver.memory arrives after the JVM launches (the make_sf1 /
     # scale_probe scripts hit this first), so it must go through
     # PYSPARK_SUBMIT_ARGS before the first session starts; on a real
     # cluster this env is absent and --driver-memory/--executor-memory
     # come from spark-submit as usual.
-    if master.startswith("local"):
+    if local_threads(master) is not None:
         mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
         if mem is None:
             # default: half the available physical memory, capped at 16g

@@ -47,7 +47,8 @@ from the AND-gate, is printed and recorded in the JSON `warnings` list —
 no exit-1, but neither the r7 holdout case (14.6s vs a 3.9s band,
 growth arm green) nor the r8 curation/g1 case (20.95x vs a 15.1x band,
 absolute arm green) can pass machine-silent. Arbitration protocol for a
-warning: SCALING.md "gate attributions" (fresh-session probe_query.py).
+warning: SCALING.md "gate attributions" (a fresh process of
+`scripts/query.py NAME --sf SF0.1 --sf SF1`).
 
 Usage: python scripts/bench_sf1.py [out_json] [reps]
        python scripts/bench_sf1.py [out_json] --recheck   (re-evaluate an
@@ -104,7 +105,8 @@ SF1 = os.path.join(
 #: both past band) still trips.
 #: Round-8 re-anchor (ADVICE r7 #2): the five noise-widened r7 absolute
 #: bands (and four more that drifted) are re-anchored on FRESH-SESSION
-#: 5-rep medians x 1.3 (stated margin; scripts/probe_query.py, idle
+#: 5-rep medians x 1.3 (stated margin; fresh `scripts/query.py NAME
+#: --sf … --sf …` processes, idle
 #: host, uptime 4h) instead of max-of-noisy-runs x 1.15 — the r7 widening
 #: had embedded 5-10x regression allowance (w4 3.7s band vs 1.7s fresh
 #: median). Root cause of the cross-round absolute drift identified:
@@ -155,7 +157,8 @@ GROWTH_BASELINE = {
     # linearity is gated exactly in scripts/check_zipf.py; the banded
     # dd_curation_minhash is the registered 100 TB route).
     # Round-9 boot-fresh re-base (r8 VERDICT brief #3 — bands derived
-    # from idle-host dual-scale probe_query runs at round OPEN, before
+    # from idle-host dual-scale fresh probes (`scripts/query.py NAME
+    # --sf … --sf …`) at round OPEN, before
     # gate sessions; SCALING.md "Round-9 boot-fresh probe table"):
     # growth = fresh same-session ratio x 1.15; absolute = fresh sf1
     # median x 1.3 EXCEPT where the r8 gate-vs-fresh pair measured a
@@ -429,11 +432,11 @@ WARN_ABS_FACTOR = 2.0
 #: ADVICE r9 #1 — the session-inflation constant, MONITORED machine-side
 #: instead of living only in SCALING.md arbitration prose: for every
 #: query whose band was ever re-based off a fresh-session probe, the
-#: fresh sf1 median the re-base used (gc-hygienic scripts/probe_query.py
-#: runs; round-10 boot except where noted). Each gate run records
-#: measured_sf1 / fresh_anchor per query in the JSON
-#: (`session_inflation`) and WARNS (report-only) when the ratio exceeds
-#: INFLATION_WARN — so a ratcheting session constant (bands re-based
+#: fresh sf1 median the re-base used (gc-hygienic fresh-process probes,
+#: `scripts/query.py NAME --sf … --sf …`; round-10 boot except where
+#: noted). Each gate run records measured_sf1 / fresh_anchor per query in
+#: the JSON (`session_inflation`) and WARNS (report-only) when the ratio
+#: exceeds INFLATION_WARN — so a ratcheting session constant (bands re-based
 #: ever wider off inflated in-gate readings) is caught the round it
 #: starts drifting, not rounds later by a judge re-deriving it. Anchors
 #: are this boot's content; a future boot's corpus redraw moves them
@@ -488,7 +491,8 @@ INFLATION_WARN = 2.0
 #: distinguishability the in-gate monitor alone cannot provide. The
 #: history is emitted verbatim in every gate JSON (fresh_probe_history)
 #: so the judge and the next round read the trend machine-side; entries
-#: append at round open from scripts/probe_query.py runs (SCALING.md
+#: append at round open from fresh `scripts/query.py NAME --sf … --sf …`
+#: processes (SCALING.md
 #: carries the full rep tables and arbitration prose).
 FRESH_PROBE_HISTORY = {
     "dd_ppjoin_pairs": {
@@ -568,9 +572,9 @@ def warn_drift(sf1: dict, growth: dict) -> list[str]:
     EXCUSED — a query that fully violates (both arms past tolerance)
     belongs to `violations` alone, so warnings + violations never
     double-count one excursion. The arbitration protocol is SCALING.md's
-    "gate attributions" (fresh-session scripts/probe_query.py
-    median, dual-scale form for growth): re-probe before attributing a
-    warning to a regression."""
+    "gate attributions" (a fresh process of
+    `scripts/query.py NAME --sf SF0.1 --sf SF1`, warm medians and
+    growth): re-probe before attributing a warning to a regression."""
     warnings = []
     for name, secs in sf1.items():
         base = GROWTH_BASELINE.get(name)
@@ -591,8 +595,8 @@ def warn_drift(sf1: dict, growth: dict) -> list[str]:
                 f"{name}: growth {g}x > band {base[0]}x * {1 + TOLERANCE} "
                 f"but absolute arm passed (sf1 {secs}s <= {base[1]}s * "
                 f"{1 + TOLERANCE / 2}) — growth-only excursion; re-probe "
-                "dual-scale fresh-session (probe_query.py QUERY sf0.1 5 "
-                "sf1) before attributing"
+                "dual-scale fresh-session (scripts/query.py QUERY --sf "
+                "SF0.1 --sf SF1 --reps 5) before attributing"
             )
     return warnings
 

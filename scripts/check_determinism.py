@@ -13,7 +13,7 @@ of freedom a cluster re-plan changes.
 
 On success the script WRITES the result block (query count, tree hash,
 date, sf) between the AUTO markers in DETERMINISM.md — the artifact is
-owned by the gate the way COSTS.json is owned by cost_report.py, so its
+owned by the gate the way COSTS.json is owned by scripts/query.py, so its
 committed text can never lag the tree it certifies (the r6 staleness
 finding). A failing run leaves the artifact untouched.
 

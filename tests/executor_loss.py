@@ -133,7 +133,9 @@ def main(sf_dir: str, tmp: str) -> dict:
     from ecommerce_etl_pipeline_spark.session import get_spark
 
     _private_spark_home(tmp)
-    os.environ["PYSPARK_SUBMIT_ARGS"] = "--driver-memory 1g pyspark-shell"
+    # a local-mode heap setting inherited from the caller would size this
+    # driver too; get_spark leaves a local-cluster driver at the default
+    os.environ.pop("PYSPARK_SUBMIT_ARGS", None)
     spark = get_spark(
         app_name="executor-loss",
         master=MASTER,
