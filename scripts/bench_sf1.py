@@ -58,11 +58,9 @@ Exit 1 on any regression; the JSON carries the verdict either way.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -70,6 +68,7 @@ from ecommerce_etl_pipeline_spark.plans import all_queries  # noqa: E402
 from ecommerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 import bench  # noqa: E402  (HEADLINE/EXTENDED stay single-sourced)
+import query  # noqa: E402  (scripts/query.py: the one per-query timing loop)
 
 SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SF1 = os.path.join(
@@ -573,8 +572,8 @@ def warn_drift(sf1: dict, growth: dict) -> list[str]:
     belongs to `violations` alone, so warnings + violations never
     double-count one excursion. The arbitration protocol is SCALING.md's
     "gate attributions" (a fresh process of
-    `scripts/query.py NAME --sf SF0.1 --sf SF1`, warm medians and
-    growth): re-probe before attributing a warning to a regression."""
+    `scripts/query.py NAME --sf SF0.1 --sf SF1`, medians over every rep
+    and their growth): re-probe before attributing a warning to a regression."""
     warnings = []
     for name, secs in sf1.items():
         base = GROWTH_BASELINE.get(name)
@@ -698,38 +697,15 @@ def main() -> int:
             ).save()
 
     def med(name: str, d: str) -> float:
-        ts = []
-        for _ in range(reps):
-            # full GC before the clock starts (round-9 experiment,
-            # SCALING.md "gate-session inflation mechanism"): the gate's
-            # accumulated driver/executor garbage — one JVM in local
-            # mode — lands collection pauses inside whichever
-            # allocation-heavy measurement runs next (a gate-replica
-            # probe read j4@sf1 [14.1, 5.84, 5.0]s without this and
-            # [4.44, 4.41, 4.23]s with it; fresh-session floor 2.6s).
-            # Collecting OUTSIDE the timed window pays the pause where
-            # it isn't measured. A ~1.7x residual session constant
-            # remains (not GC — documented in SCALING.md), so absolute
-            # bands stay anchored on IN-GATE readings, which this
-            # hygiene can only bring CLOSER to fresh, never past.
-            # Guarded (ADVICE r9 #2 + r10 #2): under Spark Connect the
-            # `spark.sparkContext` ACCESS itself raises (there is no
-            # py4j context object to getattr on), so the whole JVM hint
-            # sits in a try/except; Python driver garbage accumulated
-            # across reps is collected explicitly alongside it so the
-            # hygiene degrades gracefully on non-py4j sessions.
-            gc.collect()
-            try:
-                jvm = getattr(spark.sparkContext, "_jvm", None)
-            except Exception:  # Spark Connect: no sparkContext at all
-                jvm = None
-            if jvm is not None:
-                jvm.System.gc()
-            t0 = time.perf_counter()
-            queries[name](spark, d).write.format("noop").mode("overwrite").save()
-            ts.append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        return round(sorted(ts)[len(ts) // 2], 3)
+        # scripts/query.py's timing loop, which fresh probes use too: full
+        # GC before the clock starts, so the session's accumulated garbage
+        # (one JVM in local mode) is collected where it is not measured
+        # instead of pausing whichever measurement allocates next
+        # (SCALING.md "gate-session inflation mechanism": j4@sf1 read
+        # [14.1, 5.84, 5.0]s without it and [4.44, 4.41, 4.23]s with it).
+        # A ~1.7x residual session constant remains, so absolute bands
+        # stay anchored on in-gate readings. Median over every rep.
+        return query.measure(spark, [name], d, reps)[name]["median_s"]
 
     sf01, sf1, growth = {}, {}, {}
     for name in names:

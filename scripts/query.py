@@ -5,9 +5,9 @@ counters, and the caches each query leaves behind.
     python scripts/query.py [NAME ... | all] [--sf DIR [--sf DIR2]]
                             [--reps N] [--out FILE] [--check REF]
 
-With no NAME it measures bench.py's HEADLINE + EXTENDED queries; ``all``
-measures every registered query. ``--sf`` defaults to $SPARK_GRAFT_SF_DIR,
-the scale bench.py reads.
+With no NAME it measures bench.py's HEADLINE + EXTENDED queries and
+the registered queries in ALSO_GATED; ``all`` measures every registered
+query. ``--sf`` defaults to $SPARK_GRAFT_SF_DIR, the scale bench.py reads.
 
 Each rep runs the queries in an order shuffled by ``random.Random(rep)``.
 A query is built (``fn(spark, sf_dir)``) and then written to the ``noop``
@@ -16,8 +16,10 @@ before its timer starts. Its record holds:
 
 - ``build_s``, ``build_jobs``, ``action_s``, ``action_jobs``: seconds and
   Spark jobs of building the frame and of writing it, in the first rep;
-- ``first_s``: the first rep's build + action seconds, and ``warm_s``: their
-  median over the remaining reps (``None`` with ``--reps 1``);
+- ``first_s``: the first rep's build + action seconds; ``warm_s``: their
+  median over the remaining reps (``None`` with ``--reps 1``); and
+  ``median_s``: their median over every rep, the first included, as
+  bench_sf1.py's gate and the fresh-probe anchors of its bands take it;
 - ``stages``, ``tasks``, ``scan_rows``, ``scan_bytes``,
   ``shuffle_write_bytes``, ``shuffle_read_bytes``: the first rep's stage
   counters, read from Spark's monitoring REST API through
@@ -26,10 +28,11 @@ before its timer starts. Its record holds:
   there after its scope exited (the most over the reps).
 
 A second ``--sf`` measures the same queries at that scale in the same
-session and adds ``growth``, the ratio of the two warm medians.
+session and adds ``growth``, the ratio of the two ``median_s``.
 
 The records print as a table; ``--out`` also writes them as JSON.
 ``COSTS.json`` is that file for the default queries at sf0.1, one rep.
+``sf_dir`` is recorded as its real path.
 ``--check REF`` compares the run with a baseline (a JSON file, or a git ref
 whose tree holds ``COSTS.json``) and exits 1 when :func:`cost_violations`
 finds any.
@@ -70,6 +73,9 @@ GATED = ("shuffle_write_bytes", "scan_bytes")
 MAX_GROWTH = 2.0
 #: Below this, byte deltas are scheduler noise, not plans.
 FLOOR_BYTES = 4 * 1024
+#: Measured and gated by default besides bench.py's queries: the banded
+#: MinHash curation route that large corpora take, and BPE merge training.
+ALSO_GATED = ("dd_curation_minhash", "txt_bpe_merges")
 
 
 def run_once(spark, counters: SparkCounters, fn, sf_dir: str) -> dict:
@@ -105,8 +111,9 @@ def summarize(runs: list[dict]) -> dict:
     rec["build_s"] = round(rec["build_s"], 3)
     rec["action_s"] = round(rec["action_s"], 3)
     rec["first_s"] = round(runs[0]["build_s"] + runs[0]["action_s"], 3)
-    warm = [r["build_s"] + r["action_s"] for r in runs[1:]]
-    rec["warm_s"] = round(median(warm), 3) if warm else None
+    total = [r["build_s"] + r["action_s"] for r in runs]
+    rec["warm_s"] = round(median(total[1:]), 3) if len(total) > 1 else None
+    rec["median_s"] = round(median(total), 3)
     rec["retained_rdds"] = max(r["retained_rdds"] for r in runs)
     return rec
 
@@ -127,7 +134,8 @@ def measure(spark, names: list[str], sf_dir: str, reps: int) -> dict[str, dict]:
 def cost_violations(base: dict, run: dict) -> list[str] | None:
     """The cost gate: one line per violation of ``run`` against ``base``
     (both as written by ``--out``), or ``None`` when they were measured at
-    different scales and their bytes do not compare.
+    different scales (``sf_dir`` resolves to different paths) and their
+    bytes do not compare.
 
     A baseline query missing from the run is a violation: it may hide the
     very growth the gate is for. A gated counter violates when it grows
@@ -135,7 +143,7 @@ def cost_violations(base: dict, run: dict) -> list[str] | None:
     still under 4 × FLOOR_BYTES, so the drift it lets through stays under
     16 KiB however small the baseline.
     """
-    if base.get("sf_dir") != run.get("sf_dir"):
+    if os.path.realpath(base["sf_dir"]) != os.path.realpath(run["sf_dir"]):
         return None
     out = [
         f"{name}: in the baseline but missing from the run"
@@ -177,14 +185,15 @@ def fmt_bytes(n: float) -> str:
 
 
 def print_table(sf_dir: str, records: dict[str, dict], growth: dict | None = None) -> None:
-    cols = ["query", "first_s", "warm_s", "build_jobs", "action_jobs", "stages",
-            "tasks", "scan_rows", "scan", "shuffle write", "shuffle read",
+    cols = ["query", "first_s", "warm_s", "median_s", "build_jobs", "action_jobs",
+            "stages", "tasks", "scan_rows", "scan", "shuffle write", "shuffle read",
             "retained_rdds"] + (["growth"] if growth else [])
     print(f"\n{sf_dir}\n\n| " + " | ".join(cols) + " |\n|" + "---|" * len(cols))
     for name, r in records.items():
-        cells = [name, r["first_s"], r["warm_s"], r["build_jobs"], r["action_jobs"],
-                 r["stages"], r["tasks"], r["scan_rows"], fmt_bytes(r["scan_bytes"]),
-                 fmt_bytes(r["shuffle_write_bytes"]), fmt_bytes(r["shuffle_read_bytes"]),
+        cells = [name, r["first_s"], r["warm_s"], r["median_s"], r["build_jobs"],
+                 r["action_jobs"], r["stages"], r["tasks"], r["scan_rows"],
+                 fmt_bytes(r["scan_bytes"]), fmt_bytes(r["shuffle_write_bytes"]),
+                 fmt_bytes(r["shuffle_read_bytes"]),
                  r["retained_rdds"]] + ([growth[name]] if growth else [])
         print("| " + " | ".join("-" if c is None else str(c) for c in cells) + " |")
 
@@ -206,6 +215,7 @@ def main(argv: list[str] | None = None) -> int:
     sfs = a.sf or [os.environ.get("SPARK_GRAFT_SF_DIR")]
     if sfs[0] is None:
         p.error("give --sf DIR or set SPARK_GRAFT_SF_DIR")
+    sfs = [os.path.realpath(d) for d in sfs]
     if len(sfs) > 2:
         p.error("at most two --sf")
     if a.reps < 1:
@@ -219,7 +229,8 @@ def main(argv: list[str] | None = None) -> int:
             p.error(f"not registered: {', '.join(unknown)}")
         names = a.names
     else:
-        names = [n for n in bench.HEADLINE + bench.EXTENDED if n in queries]
+        defaults = bench.HEADLINE + bench.EXTENDED + list(ALSO_GATED)
+        names = [n for n in defaults if n in queries]
     base = None
     if a.check:
         try:
@@ -235,8 +246,7 @@ def main(argv: list[str] | None = None) -> int:
     if len(sfs) == 2:
         first, second = report["queries"], measure(spark, names, sfs[1], a.reps)
         report.update(sf_dir2=sfs[1], queries2=second, growth={
-            n: round(second[n]["warm_s"] / max(first[n]["warm_s"], 1e-9), 2)
-            if a.reps > 1 else None
+            n: round(second[n]["median_s"] / max(first[n]["median_s"], 1e-9), 2)
             for n in names
         })
         print_table(sfs[1], second, report["growth"])

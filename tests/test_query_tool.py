@@ -19,7 +19,7 @@ _spec.loader.exec_module(query)
 
 KEYS = {
     "build_s", "build_jobs", "action_s", "action_jobs", "first_s", "warm_s",
-    "stages", "tasks", "scan_rows", "scan_bytes", "shuffle_write_bytes",
+    "median_s", "stages", "tasks", "scan_rows", "scan_bytes", "shuffle_write_bytes",
     "shuffle_read_bytes", "retained_rdds",
 }
 BASE = {
@@ -74,6 +74,18 @@ def test_gate_skips_runs_at_another_scale():
     run = _run(q__shuffle_write_bytes=10**9)
     run["sf_dir"] = "sf1"
     assert query.cost_violations(BASE, run) is None
+    # another spelling of the same directory still gates
+    run["sf_dir"] = "./sf0.1/"
+    assert query.cost_violations(BASE, run) == [
+        "q.shuffle_write_bytes: 100000 -> 1000000000 (10000.00x > 2.0x)"
+    ]
+
+
+def test_committed_baseline_covers_the_default_queries():
+    with open(os.path.join(query.ROOT, "COSTS.json")) as fh:
+        base = json.load(fh)
+    defaults = query.bench.HEADLINE + query.bench.EXTENDED + list(query.ALSO_GATED)
+    assert sorted(base["queries"]) == sorted(defaults)
 
 
 def test_measure_records_every_key_and_repeats_its_counters(spark, sf_dir):
@@ -86,7 +98,9 @@ def test_measure_records_every_key_and_repeats_its_counters(spark, sf_dir):
         assert rec["retained_rdds"] == 0
         assert rec["stages"] > 0 and rec["tasks"] >= rec["stages"] and rec["scan_rows"] > 0
         assert rec["first_s"] > 0 and rec["warm_s"] > 0
+        assert abs(rec["median_s"] - (rec["first_s"] + rec["warm_s"]) / 2) <= 0.001
         assert again[name]["warm_s"] is None
+        assert again[name]["median_s"] == again[name]["first_s"]
         assert {k: again[name][k] for k in query.COUNTERS} == {k: rec[k] for k in query.COUNTERS}
 
 
