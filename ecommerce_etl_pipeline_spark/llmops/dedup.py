@@ -891,9 +891,8 @@ def jaccard_similarity_join(
     # factors to the parquet scan size), so it crosses the broadcast
     # threshold exactly when the data does, and AQE re-checks against
     # MEASURED shuffle sizes at runtime — the optimizer flips to
-    # SortMergeJoin with skew-split on its own (verified by the 10x plan
-    # flip in scripts/scale_probe.py). Pinning merge here forces the
-    # 100 TB physical plan onto kB-sized local exchanges: measured +10-20%
+    # SortMergeJoin with skew-split on its own. Pinning merge here forces
+    # the 100 TB physical plan onto kB-sized local exchanges: measured +10-20%
     # on the sf0.1 headline with zero scale benefit. What we DO enforce
     # (tests/test_plans.py, scripts/audit_plans.py): no EXPLICIT
     # F.broadcast()/hint ever forces a corpus-scaled side — with

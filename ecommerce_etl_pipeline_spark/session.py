@@ -72,11 +72,11 @@ def get_spark(
     # single-shot 10.9s -> 3.7s from this setting alone. A local-cluster
     # master is not local mode here: its executors are separate JVMs with
     # their own heap, so its driver keeps Spark's default. Builder-time
-    # spark.driver.memory arrives after the JVM launches (the make_sf1 /
-    # scale_probe scripts hit this first), so it must go through
-    # PYSPARK_SUBMIT_ARGS before the first session starts; on a real
-    # cluster this env is absent and --driver-memory/--executor-memory
-    # come from spark-submit as usual.
+    # spark.driver.memory arrives after the JVM launches, so it must go
+    # through PYSPARK_SUBMIT_ARGS before the first session starts; a
+    # PYSPARK_SUBMIT_ARGS the caller set wins. On a real cluster this env
+    # is absent and --driver-memory/--executor-memory come from
+    # spark-submit as usual.
     if local_threads(master) is not None:
         mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
         if mem is None:

@@ -40,7 +40,7 @@ in rounds 7-8 and cross-checked against SCALING.md round-6's pair column.
 A legitimate change to threshold/shingle_k/ordering must update them in
 the same commit — that is the point.
 
-Usage: python scripts/check_zipf.py        (~60s, local[16])
+Usage: python scripts/check_zipf.py        (~80s on 4 cores, local[*])
 Exit 1 on any assertion failure.
 """
 
@@ -52,8 +52,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
+from ecommerce_etl_pipeline_spark import session  # noqa: E402
 from ecommerce_etl_pipeline_spark.llmops import dedup  # noqa: E402
 from ecommerce_etl_pipeline_spark.operators import caches  # noqa: E402
 
@@ -96,12 +95,7 @@ MAX_RATIO = 12.0
 
 
 def main() -> int:
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .appName("check_zipf")
-        .getOrCreate()
-    )
+    spark = session.get_spark(app_name="check_zipf")
     spark.sparkContext.setLogLevel("ERROR")
     measured: dict[str, tuple[int, int]] = {}
     fails: list[str] = []
@@ -111,15 +105,14 @@ def main() -> int:
             fails.append(f"{name}: fixture missing at {path} — run scripts/make_zipf.py")
             continue
         docs = spark.read.parquet(path)
-        cand, ordered = dedup.ppjoin_candidates(docs, threshold=0.5, hashed=True)
-        # cache cand: BOTH the count and the verify consume it, and the
-        # candidate stage (prefix self-join + distinct) is the gate's
-        # heaviest lineage — uncached it would execute twice
-        cand = cand.cache()
-        n_cand = cand.count()
-        n_pairs = dedup.ppjoin_verify(cand, ordered, threshold=0.5).count()
-        cand.unpersist()
-        ordered.unpersist()
+        with caches.scope():
+            cand, ordered = dedup.ppjoin_candidates(docs, threshold=0.5, hashed=True)
+            # persist cand: BOTH the count and the verify consume it, and
+            # the candidate stage (prefix self-join + distinct) is the
+            # gate's heaviest lineage; unpersisted it would execute twice
+            cand = caches.persist(cand)
+            n_cand = cand.count()
+            n_pairs = dedup.ppjoin_verify(cand, ordered, threshold=0.5).count()
         measured[name] = (n_cand, n_pairs)
         if n_cand != exp_cand:
             fails.append(f"{name}: candidates {n_cand} != pinned {exp_cand}")
@@ -168,10 +161,12 @@ def main() -> int:
         train = docs01.filter(h < F.lit(int(0.8 * splits.HASH_SPACE)))
         # trainer hyperparameters mirror the registered composition
         # (dd_curation_classifier_ppjoin: 12 rounds, lr 16/1, d=64)
-        w, feats = classifier.train_linear_scorer(
-            train, iterations=12, lr_num=16, lr_den=1, features="hashed"
-        )
-        feats.unpersist()
+        # the scope releases the trainer's feature frame and lineage cuts;
+        # the weights are plain Python values
+        with caches.scope():
+            w, _ = classifier.train_linear_scorer(
+                train, iterations=12, lr_num=16, lr_den=1, features="hashed"
+            )
         for name, exp_kept in EXPECTED_CURATE_CLS.items():
             path = os.path.join(ROOT, "localdata", name, "documents.parquet")
             if not os.path.exists(path):

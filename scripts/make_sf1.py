@@ -1,18 +1,17 @@
 #!/usr/bin/env python
 """Synthesize an sf1 directory (10x sf0.1) by deterministic
-replicate-with-resalt — the committed form of scale_probe.py's in-memory
-replication, written to parquet so the whole registry can run against a
-second measured scale decade (SCALING.md growth table sf0.01 -> sf0.1 ->
-sf1).
+replicate-with-resalt, written to parquet so every registered query can
+run against a second scale decade (``scripts/query.py --sf SF0.1 --sf
+localdata/sf1`` measures and gates both).
 
-Key-domain discipline (scale_probe.replicate_facts): every table sharing
-a key domain shifts by the SAME per-copy offset — orders+lineitem on
-orderkey, customer+orders on custkey, part+lineitem on partkey,
-supplier+lineitem on suppkey — so referential integrity (and therefore
-join selectivity per row) is preserved exactly at 10x.
+Key-domain discipline: every table sharing a key domain shifts by the
+SAME per-copy offset (orders+lineitem on orderkey, customer+orders on
+custkey, part+lineitem on partkey, supplier+lineitem on suppkey), so
+referential integrity (and therefore join selectivity per row) is
+preserved exactly at 10x.
 
-Text resalt (scale_probe.replicate_docs): each non-first document copy
-gets a copy-specific marker token injected every 4 tokens, rewriting its
+Text resalt (:func:`resalt_text`): each non-first document copy gets a
+copy-specific marker token injected every 4 tokens, rewriting its
 shingle set so copies are NOT near-duplicates of each other and
 duplicate density stays ~linear in the corpus (the realistic web-corpus
 shape). Embeddings get a deterministic per-copy, per-dimension
@@ -30,17 +29,12 @@ from __future__ import annotations
 import os
 import sys
 
-os.environ.setdefault("PYSPARK_SUBMIT_ARGS", "--driver-memory 16g pyspark-shell")
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, functions as F  # noqa: E402
+from pyspark.sql import Column, DataFrame, functions as F  # noqa: E402
 
 from ecommerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 from ecommerce_etl_pipeline_spark.sources.io import load_table  # noqa: E402
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from scale_probe import resalt_text  # noqa: E402  (shared resalt cadence)
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 COPIES = 10
@@ -90,9 +84,14 @@ def replicate(df: DataFrame, key_offsets: dict[str, str], copies: int = COPIES,
     return out
 
 
+def resalt_text(col: Column, i: int) -> Column:
+    """Copy ``i``'s text: a copy-specific marker token injected every 4
+    tokens, which rewrites its shingle set so replicas are not near-dups
+    of each other."""
+    return F.regexp_replace(col, r"((\S+\s+){4})", f"$1u{i} ")
+
+
 def doc_resalt(df: DataFrame, i: int) -> DataFrame:
-    # resalt cadence shared with scale_probe.replicate_docs (one source of
-    # truth for the duplicate-density shape across both harnesses)
     return df.withColumn("text", resalt_text(F.col("text"), i)).withColumn(
         "n_chars", F.length("text")
     )

@@ -18,8 +18,7 @@ before its timer starts. Its record holds:
   Spark jobs of building the frame and of writing it, in the first rep;
 - ``first_s``: the first rep's build + action seconds; ``warm_s``: their
   median over the remaining reps (``None`` with ``--reps 1``); and
-  ``median_s``: their median over every rep, the first included, as
-  bench_sf1.py's gate and the fresh-probe anchors of its bands take it;
+  ``median_s``: their median over every rep, the first included;
 - ``stages``, ``tasks``, ``scan_rows``, ``scan_bytes``,
   ``shuffle_write_bytes``, ``shuffle_read_bytes``: the first rep's stage
   counters, read from Spark's monitoring REST API through
@@ -28,11 +27,13 @@ before its timer starts. Its record holds:
   there after its scope exited (the most over the reps).
 
 A second ``--sf`` measures the same queries at that scale in the same
-session and adds ``growth``, the ratio of the two ``median_s``.
+session (``sf_dir2``, ``queries2``) and adds ``growth``, the ratio of the
+two ``median_s``; it is reported, not gated.
 
 The records print as a table; ``--out`` also writes them as JSON.
-``COSTS.json`` is that file for the default queries at sf0.1, one rep.
-``sf_dir`` is recorded as its real path.
+``COSTS.json`` is that file for the default queries at sf0.1 and at
+``localdata/sf1`` (built by ``scripts/make_sf1.py``), one rep. Each scale
+is recorded by :func:`scale_id`.
 ``--check REF`` compares the run with a baseline (a JSON file, or a git ref
 whose tree holds ``COSTS.json``) and exits 1 when :func:`cost_violations`
 finds any.
@@ -131,11 +132,21 @@ def measure(spark, names: list[str], sf_dir: str, reps: int) -> dict[str, dict]:
     return {name: summarize(r) for name, r in runs.items()}
 
 
-def cost_violations(base: dict, run: dict) -> list[str] | None:
-    """The cost gate: one line per violation of ``run`` against ``base``
-    (both as written by ``--out``), or ``None`` when they were measured at
-    different scales (``sf_dir`` resolves to different paths) and their
-    bytes do not compare.
+def scale_id(sf_dir: str) -> str:
+    """How a report names a scale: relative to ROOT for a directory under
+    it, so a baseline recorded in one checkout gates in every other; the
+    real path for any other directory."""
+    real = os.path.realpath(sf_dir)
+    rel = os.path.relpath(real, os.path.realpath(ROOT))
+    return real if rel == os.pardir or rel.startswith(os.pardir + os.sep) else rel
+
+
+def cost_violations(base: dict, run: dict) -> tuple[list[str], list[str]]:
+    """The cost gate: ``(violations, skipped)`` for ``run`` against ``base``
+    (both as written by ``--out``). Each scale the run measured is checked
+    against the baseline's record of the same scale, in either slot
+    (``sf_dir``/``queries``, ``sf_dir2``/``queries2``). ``skipped`` names
+    the scales only one of the two measured: their bytes do not compare.
 
     A baseline query missing from the run is a violation: it may hide the
     very growth the gate is for. A gated counter violates when it grows
@@ -143,24 +154,34 @@ def cost_violations(base: dict, run: dict) -> list[str] | None:
     still under 4 × FLOOR_BYTES, so the drift it lets through stays under
     16 KiB however small the baseline.
     """
-    if os.path.realpath(base["sf_dir"]) != os.path.realpath(run["sf_dir"]):
-        return None
-    out = [
-        f"{name}: in the baseline but missing from the run"
-        for name in base["queries"] if name not in run["queries"]
-    ]
-    for name, rec in run["queries"].items():
-        old = base["queries"].get(name)
-        if old is None:
+    base_scales, run_scales = _scales(base), _scales(run)
+    out = []
+    for sf, old_queries in base_scales.items():
+        new_queries = run_scales.get(sf)
+        if new_queries is None:
             continue
-        for key in GATED:
-            b, n = old[key], rec[key]
-            if abs(n - b) < FLOOR_BYTES and n < 4 * FLOOR_BYTES:
+        out += [
+            f"{sf}: {name}: in the baseline but missing from the run"
+            for name in old_queries if name not in new_queries
+        ]
+        for name, rec in new_queries.items():
+            old = old_queries.get(name)
+            if old is None:
                 continue
-            factor = n / max(b, 1)
-            if factor > MAX_GROWTH:
-                out.append(f"{name}.{key}: {b} -> {n} ({factor:.2f}x > {MAX_GROWTH}x)")
-    return out
+            for key in GATED:
+                b, n = old[key], rec[key]
+                if abs(n - b) < FLOOR_BYTES and n < 4 * FLOOR_BYTES:
+                    continue
+                factor = n / max(b, 1)
+                if factor > MAX_GROWTH:
+                    out.append(f"{sf}: {name}.{key}: {b} -> {n} "
+                               f"({factor:.2f}x > {MAX_GROWTH}x)")
+    return out, sorted(base_scales.keys() ^ run_scales.keys())
+
+
+def _scales(report: dict) -> dict[str, dict]:
+    return {os.path.normpath(report[d]): report[q]
+            for d, q in (("sf_dir", "queries"), ("sf_dir2", "queries2")) if d in report}
 
 
 def load_baseline(ref: str) -> dict:
@@ -240,32 +261,34 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = session.get_spark(app_name="query")
     spark.sparkContext.setLogLevel("ERROR")
-    report = {"sf_dir": sfs[0], "reps": a.reps,
+    report = {"sf_dir": scale_id(sfs[0]), "reps": a.reps,
               "queries": measure(spark, names, sfs[0], a.reps)}
-    print_table(sfs[0], report["queries"])
+    print_table(report["sf_dir"], report["queries"])
     if len(sfs) == 2:
         first, second = report["queries"], measure(spark, names, sfs[1], a.reps)
-        report.update(sf_dir2=sfs[1], queries2=second, growth={
+        report.update(sf_dir2=scale_id(sfs[1]), queries2=second, growth={
             n: round(second[n]["median_s"] / max(first[n]["median_s"], 1e-9), 2)
             for n in names
         })
-        print_table(sfs[1], second, report["growth"])
+        print_table(report["sf_dir2"], second, report["growth"])
     if a.out:
         with open(a.out, "w") as fh:
             json.dump(report, fh, indent=1)
             fh.write("\n")
     if base is None:
         return 0
-    violations = cost_violations(base, report)
-    if violations is None:
-        print(f"\nsf_dir differs from the baseline's ({base.get('sf_dir')}): "
+    violations, skipped = cost_violations(base, report)
+    for sf in skipped:
+        print(f"\n{sf}: measured by only one of the run and the baseline: "
               "bytes do not compare, gate skipped")
-        return 0
     if violations:
         print("\ncost gate: shuffle-write or scan bytes grew past "
               f"{MAX_GROWTH}x:\n  " + "\n  ".join(violations))
         return 1
-    print(f"\ncost gate: no shuffle-write or scan growth past {MAX_GROWTH}x")
+    gated = [sf for sf in _scales(report) if sf not in skipped]
+    if gated:
+        print(f"\ncost gate: no shuffle-write or scan growth past {MAX_GROWTH}x "
+              f"at {', '.join(gated)}")
     return 0
 
 
