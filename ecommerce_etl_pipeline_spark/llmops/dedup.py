@@ -965,6 +965,11 @@ def ppjoin_candidates(
         .withColumn("n", F.size("arr"))
         .withColumn("arr", F.transform("arr", lambda x: x["h"]))
     )
+    # loaded before any join that reads it is planned: until the cache is
+    # loaded AQE sizes it by the optimizer's estimate (about 20x under the
+    # measured size at sf1), after by the measured size, so a cache still
+    # loading inside the first query left each join's strategy to timing
+    ordered.count()
     plen = (
         F.col("n")
         - F.ceil(F.lit(t) * F.col("n") - F.lit(1e-9)).cast("int")

@@ -135,10 +135,13 @@ def measure(spark, names: list[str], sf_dir: str, reps: int) -> dict[str, dict]:
 def scale_id(sf_dir: str) -> str:
     """How a report names a scale: relative to ROOT for a directory under
     it, so a baseline recorded in one checkout gates in every other; the
-    real path for any other directory."""
-    real = os.path.realpath(sf_dir)
-    rel = os.path.relpath(real, os.path.realpath(ROOT))
-    return real if rel == os.pardir or rel.startswith(os.pardir + os.sep) else rel
+    real path for any other directory. A path counts as under ROOT before
+    its symlinks are resolved, so a checkout whose ``localdata`` links into
+    another checkout still records ``localdata/sf1``."""
+    rel = os.path.relpath(os.path.abspath(sf_dir), ROOT)
+    if rel == os.pardir or rel.startswith(os.pardir + os.sep):
+        return os.path.realpath(sf_dir)
+    return rel
 
 
 def cost_violations(base: dict, run: dict) -> tuple[list[str], list[str]]:
@@ -180,6 +183,8 @@ def cost_violations(base: dict, run: dict) -> tuple[list[str], list[str]]:
 
 
 def _scales(report: dict) -> dict[str, dict]:
+    # scale_id decides what a recorded path names; normpath only spells it
+    # one way, so a hand-edited ``./sf0.1/`` still matches ``sf0.1``
     return {os.path.normpath(report[d]): report[q]
             for d, q in (("sf_dir", "queries"), ("sf_dir2", "queries2")) if d in report}
 
@@ -236,7 +241,6 @@ def main(argv: list[str] | None = None) -> int:
     sfs = a.sf or [os.environ.get("SPARK_GRAFT_SF_DIR")]
     if sfs[0] is None:
         p.error("give --sf DIR or set SPARK_GRAFT_SF_DIR")
-    sfs = [os.path.realpath(d) for d in sfs]
     if len(sfs) > 2:
         p.error("at most two --sf")
     if a.reps < 1:

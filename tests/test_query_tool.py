@@ -123,17 +123,22 @@ def test_gate_without_the_second_scale_gates_the_first_and_skips_the_second():
 
 
 def test_gate_compares_scales_recorded_in_another_checkout(tmp_path, monkeypatch):
-    # a directory under the checkout is recorded relative to it; any other
-    # keeps its real path
+    # a directory under the checkout is recorded relative to it, also when
+    # the checkout's localdata links into another checkout (c's does into
+    # a's); any other directory keeps its real path
     for checkout in ("a", "b"):
         (tmp_path / checkout / "localdata" / "sf1").mkdir(parents=True)
+    (tmp_path / "c").mkdir()
+    (tmp_path / "c" / "localdata").symlink_to(tmp_path / "a" / "localdata")
     (tmp_path / "sf0.1").mkdir()
     ids = {}
-    for checkout in ("a", "b"):
+    for checkout in ("a", "b", "c"):
         monkeypatch.setattr(query, "ROOT", str(tmp_path / checkout))
         ids[checkout] = (query.scale_id(str(tmp_path / "sf0.1")),
                          query.scale_id(str(tmp_path / checkout / "localdata" / "sf1")))
-    assert ids["a"] == ids["b"] == (os.path.realpath(tmp_path / "sf0.1"), "localdata/sf1")
+    assert ids["a"] == ids["b"] == ids["c"] == (
+        os.path.realpath(tmp_path / "sf0.1"), "localdata/sf1"
+    )
     base = {**BASE2, "sf_dir": ids["a"][0], "sf_dir2": ids["a"][1]}
     run = _run(base, q__scan_bytes_2=1_500_000)
     run.update(sf_dir=ids["b"][0], sf_dir2=ids["b"][1])
